@@ -134,8 +134,10 @@ object AudioOps {
       // of bounds: len < 0 makes the `off +=` below non-advancing (RIFF
       // u32 lengths > Int.MaxValue wrap negative in toInt), and a length
       // past the buffer would walk fmt reads off the end (r17 ADVICE —
-      // this parser is the designated reader for arbitrary WAV bytes)
-      require(len >= 0 && off + 8 + len <= bytes.length,
+      // this parser is the designated reader for arbitrary WAV bytes);
+      // the bound sums in Long — a len near Int.MaxValue would wrap the
+      // Int sum negative and slip past it
+      require(len >= 0 && off + 8L + len <= bytes.length,
         s"RIFF chunk '$t' at $off declares $len payload bytes, " +
           s"stream holds ${bytes.length}")
       if (t == "fmt ") {

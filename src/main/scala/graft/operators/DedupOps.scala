@@ -1010,11 +1010,15 @@ object DedupOps {
       refine: Boolean = true,
       pruneRowLimit: Long = IndexProbePruneRowLimit,
       knownBatchRows: Option[Long] = None): DataFrame = {
-    val corpDocs = graft.sources.DedupIndex.loadDocs(s, indexDir)
+    val DI = graft.sources.DedupIndex
+    // ONE meta read serves the family, the usability check and the
+    // pruning modulus below
+    val m = DI.loadMeta(s, indexDir)
+    val corpDocs = DI.loadDocs(s, indexDir)
     // the batch signs at the ARTIFACT's recorded band family — against a
     // precision-escalated index, family-2 keys would silently miss every
     // cross near-dup (the exact failure requireUsableBandFamily guards)
-    val fam = graft.sources.DedupIndex.loadBandFamily(s, indexDir)
+    val fam = m.bandfam
     // persisted: the band frame feeds up to four subtrees (the prune
     // derivation, candidates, the flagged probe set, the refine join) and
     // the incoming doc-hash frame usually carries no cached msig, so an
@@ -1024,8 +1028,8 @@ object DedupOps {
     val inBands = graft.Caching.persist(
       minhashBands(s, inDocs, fam).withColumnRenamed("doc_id", "in_id"))
     val corpBands = (if (knownBatchRows.getOrElse(inDocs.count()) <= pruneRowLimit)
-        graft.sources.DedupIndex.prunedBands(s, indexDir, inBands)
-      else graft.sources.DedupIndex.loadBands(s, indexDir))
+        DI.prunedBands(s, indexDir, m, inBands)
+      else DI.bandsOf(s, indexDir, m))
       .select(col("doc_id"), col("band"), col("minhash").as("bv"))
     crossDedupBestFromBands(s, inBands, corpBands, inDocs, corpDocs, cap,
       refine)
@@ -1078,19 +1082,18 @@ object DedupOps {
       withFam: Boolean): DataFrame = {
     import s.implicits._
     val DI = graft.sources.DedupIndex
-    // one meta read for all four fields + the rebuild flag (r18): the
-    // per-field loaders cost a read+collect job EACH — six tiny Spark
-    // jobs of pure fixed overhead per health read at local[32]
-    val (nd, parts, probeMod, bandFam) = DI.loadMeta(s, dir)
-    val needsRebuild = parts <= 0 || parts != DI.layoutPartsFor(nd)
-    val meta = Seq((nd, parts, needsRebuild, bandFam))
+    // ONE meta read for all four fields, the rebuild flag, the band
+    // read and the precision probe — each extra read+collect is a tiny
+    // Spark job of pure fixed overhead per health read
+    val m = DI.loadMeta(s, dir)
+    val meta = Seq((m.ndocs, m.parts, m.needsRebuild, m.bandfam))
       .toDF("ndocs", "parts", "needs_rebuild", "bandfam")
     val docAgg = DI.loadDocs(s, dir).agg(
       count(lit(1)).as("doc_rows"),
       sum("n").as("sum_shingles"),
       max("n").as("max_shingles"),
       sum(when(col("truncated"), 1L).otherwise(0L)).as("n_truncated"))
-    val bandAgg = DI.loadBands(s, dir).agg(count(lit(1)).as("band_rows"))
+    val bandAgg = DI.bandsOf(s, dir, m).agg(count(lit(1)).as("band_rows"))
     // PRECISION DRIFT (r15 verdict #5 — the quality failure mode of a
     // banded index is precision collapse as buckets fill, which none of
     // the row counts above can see): candidate pairs of SAMPLED docs
@@ -1121,7 +1124,7 @@ object DedupOps {
     // oracle would sample differently, and only the engine-side reading
     // is authoritative.
     val ps: Option[graft.sources.ProbeStats] =
-      if (DI.hasProbeAt(s, dir, probeMod)) Some(DI.probePrecision(s, dir))
+      if (DI.hasProbeAt(s, dir, m.probemod)) Some(DI.probePrecisionAt(s, dir, m))
       else None
     val (pdC, pcC, pvC, ppC) = ps match {
       case Some(p) =>
@@ -1171,7 +1174,7 @@ object DedupOps {
 
   private val qDedupIndexEscStats: Q = (s, d) =>
     indexStatsFrame(s,
-      graft.sources.DedupIndex.currentDir(s, escalatedIndexRoot(s, d)),
+      graft.sources.StorageOps.currentDir(s, escalatedIndexRoot(s, d)),
       withFam = true)
 
   /** The dedup ACTION a curation pipeline actually executes: for every
@@ -1350,7 +1353,7 @@ object DedupOps {
   /** q_dedup_index_stats replay: the shingle pipeline (tokenize →
     * DocTokenCap prefix → distinct word-3-grams) over the even-half
     * corpus, aggregated to the same one-row health report; `parts` is
-    * the layoutPartsFor twin, needs_rebuild identically false for an
+    * the StorageOps.layoutParts twin, needs_rebuild identically false for an
     * index published at its own corpus count, band_rows = famBands(fam)
     * bands per indexed doc. Parameterized by the BAND FAMILY (r17): the
     * escalated-artifact twin replays family 3's (9 rows × 68 bands)

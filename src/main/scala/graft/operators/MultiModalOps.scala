@@ -577,7 +577,7 @@ object MultiModalOps {
     graft.SharedPlans.once(s, s"fp_index|$d") {
       val p = s"${graft.sources.StorageOps.artifactBase}/fp_index/${d.replaceAll("[^A-Za-z0-9._-]", "_")}"
       graft.sources.FingerprintIndex.publishBandedSigs(s, imageSigs(s, d), p)
-      graft.sources.FingerprintIndex.pruneVersions(s, p, keep = 2)
+      graft.sources.StorageOps.pruneVersions(s, p, keep = 2)
       p
     }
 
@@ -618,7 +618,7 @@ object MultiModalOps {
       val p = s"${graft.sources.StorageOps.artifactBase}/fp_index/${d.replaceAll("[^A-Za-z0-9._-]", "_")}_esc"
       graft.sources.FingerprintIndex.publishBandedSigs(s, imageSigs(s, d), p)
       graft.sources.FingerprintIndex.escalateBandFamily(s, p)
-      graft.sources.FingerprintIndex.pruneVersions(s, p, keep = 2)
+      graft.sources.StorageOps.pruneVersions(s, p, keep = 2)
       p
     }
 
@@ -632,18 +632,19 @@ object MultiModalOps {
       withFam: Boolean): DataFrame = {
     import s.implicits._
     val FI = graft.sources.FingerprintIndex
-    val (ng, parts0) = FI.loadCounts(s, dir) // ONE meta read for all three
-    val meta = Seq((ng, parts0, FI.needsRebuildFor(ng, parts0),
-        FI.loadBandFamily(s, dir)))
+    val live = FI.open(s, dir) // ONE pointer + meta read for the query
+    val m = live.meta
+    val meta = Seq((m.ngroups, m.parts, m.needsRebuild, m.bandfam))
       .toDF("ngroups", "parts", "needs_rebuild", "bandfam")
+    val bands = FI.bandsAt(s, live.dir)
     // the distinct fold recovers the signature table from its 4x band
     // explosion — a skinny exchange over (dhash, n, rep) triples
-    val sigs = FI.loadBands(s, dir).select("dhash", "n", "rep").distinct()
+    val sigs = bands.select("dhash", "n", "rep").distinct()
     val sigAgg = sigs.agg(
       count(lit(1)).as("n_sigs"),
       sum("n").as("sum_members"),
       max("n").as("max_members"))
-    val bandAgg = FI.loadBands(s, dir).agg(count(lit(1)).as("band_rows"))
+    val bandAgg = bands.agg(count(lit(1)).as("band_rows"))
     // PRECISION DRIFT (r15 verdict #5): this family's band keys ARE
     // portable (16-bit chunks of the dHash — pure arithmetic), so the
     // probe runs probe x CORPUS against the stored bands, the production
@@ -699,7 +700,7 @@ object MultiModalOps {
     * can never fork. A `def` so object-init order cannot null it. */
   /** q_fingerprint_index_stats replay, parameterized by the BAND FAMILY
     * (r17): the dHash pipeline folds to the distinct-signature table;
-    * `parts` is the layoutPartsFor twin; needs_rebuild is identically
+    * `parts` is the StorageOps.layoutParts twin; needs_rebuild is identically
     * false for a table published at its own count; band_rows = 4 rows
     * per distinct signature at EVERY family (a scatter family
     * repartitions the 64 bits, never the band count). Family 1's band

@@ -246,8 +246,8 @@ object RetrievalOps {
     import s.implicits._
     val L = graft.sources.LexIndex
     val dir = lexIndexDir(s, d)
-    val (nd, sd, pt) = L.loadMeta(s, dir)
-    val meta = Seq((nd, pt, sd)).toDF("ndocs", "parts", "sumdl")
+    val m = L.loadMeta(s, dir)
+    val meta = Seq((m.ndocs, m.parts, m.sumdl)).toDF("ndocs", "parts", "sumdl")
     val docAgg = L.loadDocs(s, dir).agg(
       count(lit(1)).as("doc_rows"), sum("dl").as("sum_dl"))
     val postAgg = L.loadPostingsRaw(s, dir).agg(
@@ -388,7 +388,7 @@ object RetrievalOps {
     "q_bm25_topk" -> bm25TopkOracle,
     "q_bm25_topk_idx" -> bm25TopkOracle,
     // every column recomputed from the raw corpus; the parts schedule is
-    // the same integer arithmetic as LexIndex.layoutPartsFor (// floors,
+    // the same integer arithmetic as StorageOps.layoutParts (// floors,
     // both operands nonnegative — equal to Spark's Long division here)
     "q_lex_index_stats" ->
       """WITH toks AS (

@@ -1359,7 +1359,7 @@ object VectorOps {
       graft.sources.VectorIndex.publishFrom(s,
         Tables.spread(s, Tables.embeddings(s, d)).filter(col("vec_id") % 2 === 0),
         evenDir, scheduleN = Some(n))
-      graft.sources.VectorIndex.pruneVersions(s, evenDir, keep = 1)
+      graft.sources.StorageOps.pruneVersions(s, evenDir, keep = 1)
       evenDir
     }
     graft.sources.VectorIndex.probeBestMatch(s, dir,
@@ -1384,7 +1384,7 @@ object VectorOps {
         Tables.spread(s, Tables.embeddings(s, d)), dir, pq = true,
         gtProbe = Some(Tables.embeddings(s, d)
           .filter(sampledQueryPred(s, d, RecallSampleN))))
-      graft.sources.VectorIndex.pruneVersions(s, dir, keep = 1)
+      graft.sources.StorageOps.pruneVersions(s, dir, keep = 1)
       dir
     }
 
@@ -1417,7 +1417,7 @@ object VectorOps {
         pqResidual = true,
         gtProbe = Some(Tables.embeddings(s, d)
           .filter(sampledQueryPred(s, d, RecallSampleN))))
-      graft.sources.VectorIndex.pruneVersions(s, dir, keep = 1)
+      graft.sources.StorageOps.pruneVersions(s, dir, keep = 1)
       dir
     }
 
@@ -1480,33 +1480,35 @@ object VectorOps {
     import s.implicits._
     val dir = fullIndexDir(s, d)
     val VI = graft.sources.VectorIndex
-    val m = VI.loadMeta(s, dir)
+    // ONE pointer and meta read: every number below describes the same
+    // version, whatever a concurrent maintain flips meanwhile
+    val live = VI.open(s, dir)
+    val (m, v) = (live.meta, live.dir)
+    val hasPq = VI.hasPqAt(s, v)
     // the recorded PQ budget joins the health surface (r16): the oracle
     // recomputes both schedules from the raw table, so an engine/oracle
     // disagreement at a divisor or ladder boundary fails the gate here
     // by name, not just as a code-hash mismatch downstream
-    val (pqM, pqK) =
-      if (VI.hasPq(s, dir)) VI.pqBudget(m) else (0, 0)
+    val (pqM, pqK) = if (hasPq) VI.pqBudget(m) else (0, 0)
     // wboost: the width-escalation rung (r17) — 0 for the registered
     // schedule-default publish; surfaced so an operator reading the
     // health row sees a density-escalated artifact by name
     val meta = Seq((m.n, m.width, m.cells, m.parts,
-        VI.needsRebuild(m), VI.hasPq(s, dir), pqM, pqK, m.wboost))
+        VI.needsRebuild(m), hasPq, pqM, pqK, m.wboost))
       .toDF("n", "width", "cells_sched", "parts", "needs_rebuild",
         "has_pq", "pq_m", "pq_k", "wboost")
-    val cellAgg = VI.loadCells(s, dir).groupBy("cell").count()
+    val cellAgg = VI.at(s, v, "cells").groupBy("cell").count()
       .agg(count(lit(1)).as("live_cells"),
         max("count").as("max_cell_occ"),
         sum("count").as("cell_rows"))
-    val bucketAgg = VI.loadBuckets(s, dir).groupBy("bucket").count()
+    val bucketAgg = VI.at(s, v, "buckets").groupBy("bucket").count()
       .agg(max("count").as("max_bucket_width"),
         sum("count").as("bucket_rows"))
     // guarded on hasPq: a non-PQ artifact reports code_rows = 0 instead
     // of crashing on the absent dataset (the monitoring surface must
     // describe whatever index it is pointed at)
     val codeAgg =
-      if (VI.hasPq(s, dir))
-        VI.loadCodes(s, dir).agg(count(lit(1)).as("code_rows"))
+      if (hasPq) VI.at(s, v, "codes").agg(count(lit(1)).as("code_rows"))
       else Seq(0L).toDF("code_rows")
     // LSH bucket-candidate precision (r16 verdict #6): the hyperplane
     // path's quality-drift instrument, read eagerly off the artifact
@@ -1514,7 +1516,7 @@ object VectorOps {
     // as oracle-checked columns — bucket assignment and the cosine
     // verify both replay portably, so the whole probe sits inside the
     // DuckDB gate like the banded families' probes do
-    val lp = VI.lshProbePrecision(s, dir)
+    val lp = VI.lshPrecisionAt(s, live)
     meta.crossJoin(broadcast(cellAgg))
       .crossJoin(broadcast(bucketAgg))
       .crossJoin(broadcast(codeAgg))
@@ -2299,7 +2301,7 @@ object VectorOps {
     * and the full Lloyd-trained assignment (`afull`) recomputed from the
     * raw embeddings, aggregated to the same one-row health report the
     * engine reads off the published artifact. `parts` is the SQL twin of
-    * layoutPartsFor; needs_rebuild is identically false for an index
+    * StorageOps.layoutParts; needs_rebuild is identically false for an index
     * published at its own corpus count; has_pq is true (the shared
     * full-index publish carries the pair — a registered-query constant,
     * like the probe count). */

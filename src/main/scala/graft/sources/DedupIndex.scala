@@ -24,10 +24,11 @@ import org.apache.spark.sql.functions._
   *                                               rung)
   *
   * PARTITIONED BANDS LAYOUT (the VectorIndex convention): `bands` lands
-  * hive-partitioned by `dpart = xxhash64(band, minhash) mod parts`,
-  * repartitioned BY that column so each partition directory holds ONE
-  * file; `parts` derives from the corpus size at publish
-  * ([[layoutPartsFor]]) and is recorded in `meta`. The partition column
+  * hive-partitioned by `dpart = xxhash64(band, minhash) mod parts`
+  * ([[StorageOps.partOf]]), repartitioned BY that column so each
+  * partition directory holds ONE file; `parts` derives from the corpus
+  * size at publish ([[StorageOps.layoutParts]] at [[RowsPerPart]]) and
+  * is recorded in `meta`. The partition column
   * is a pure function of the band join key, so a small probe batch can
   * derive its partition-value set and read only those partitions
   * ([[prunedBands]] — the read cut behind
@@ -39,6 +40,10 @@ import org.apache.spark.sql.functions._
   * never observes a half-written publish — the same reader-side wait
   * contract StorageOps.isCommitted carries for the data sink
   * (the reference's `_SUCCEED` marker, ShuffleDataExecutor.java:119-138).
+  * A maintained index lives under a versioned root and runs the shared
+  * lifecycle of [[StorageOps]] (publishNext, currentDir, readMeta,
+  * fragmented, pruneVersions); every read takes the meta once
+  * ([[loadMeta]]) and hands it down.
   *
   * Size at 100 TB: `docs` is one row per corpus doc (hash arrays,
   * token-capped); `bands` is 32 rows per doc of three int64s — both a
@@ -58,13 +63,9 @@ import org.apache.spark.sql.functions._
   * equal keys as proven r-minima collisions. */
 object DedupIndex {
 
-  /** Hash-partition count for a publish's `bands` layout, derived from
-    * the corpus doc count: floor 64, one more partition per ~250k docs
-    * (32 band rows each — ~8M skinny rows, ~200 MB per file), capped at
-    * 64k directories. Layout-only — NOT part of the published-key
-    * contract; a republish at a different count changes no key. */
-  private[graft] def layoutPartsFor(nDocs: Long): Int =
-    math.max(64L, math.min(1L << 16, nDocs / (250L * 1000) + 1)).toInt
+  /** Docs per layout partition ([[StorageOps.layoutParts]]): 32 band
+    * rows each — ~8M skinny rows, ~200 MB per `bands` file. */
+  private[graft] val RowsPerPart = 250L * 1000
 
   /** Probe-sample modulus for the PRECISION instrument
     * ([[graft.operators.DedupOps.probeBandsFromPres]]): targets ~500
@@ -90,33 +91,49 @@ object DedupIndex {
     * ESCALATION ladder (r17): each rung re-bands the same constants at
     * a deeper (rows, bands) geometry — [[escalateBandFamily]], the
     * actuator a tripped [[PrecisionProbe]] floor fires. Readers derive
-    * their probe keys at [[loadBandFamily]]; only family-1 (and
-    * unknown future) artifacts refuse ([[requireUsableBandFamily]]). */
+    * their probe keys at [[Meta.bandfam]]; only family-1 (and unknown
+    * future) artifacts refuse ([[requireUsableBandFamily]]). */
   val BandFamily = 2
 
-  /** The artifact's recorded band family; 1 for any artifact published
-    * before the field existed (the retired linear family). */
-  def loadBandFamily(s: SparkSession, indexDir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 1
-    val df = s.read.parquet(s"$indexDir/meta")
-    if (!df.schema.fieldNames.contains("bandfam")) 1
-    else df.collect()(0).getAs[Int]("bandfam")
+  /** The one-row meta: corpus count, `bands` layout modulus, frozen
+    * probe-sample modulus, band family. A LEGACY artifact (no meta, or a
+    * meta an older writer wrote without a field) reads the doc-store
+    * count, parts 0 (consumers full-scan, the next merge upgrades the
+    * layout), probemod 0 (no probe until the next full publish) and
+    * family 1 (the retired linear constants). */
+  final case class Meta(ndocs: Long, parts: Int, probemod: Long, bandfam: Int) {
+    /** True iff this build derives the recorded family's band values. */
+    def famUsable: Boolean = derivable(bandfam)
+    /** True when the corpus count has drifted off the layout modulus —
+      * the signal that the next merge pays the O(index) full rewrite
+      * ([[MergeStats]] `*FullRewrite`), so an operator can schedule it
+      * deliberately (off-peak) instead of discovering it inside an
+      * ingest. A legacy artifact (parts = 0) always needs the rebuild —
+      * the rewrite doubles as its layout upgrade. */
+    def needsRebuild: Boolean =
+      parts <= 0 || parts != StorageOps.layoutParts(ndocs, RowsPerPart)
   }
 
-  private def requireUsableBandFamily(s: SparkSession,
-      indexDir: String): Unit = {
-    val fam = loadBandFamily(s, indexDir)
-    require(fam >= BandFamily && fam <= graft.functions.MinHashSig.MaxFamily,
-      s"band index at $indexDir was published under band family $fam " +
-        s"(this build derives families $BandFamily.." +
+  /** True iff this build derives band family `fam` (2..MaxFamily). */
+  private def derivable(fam: Int): Boolean =
+    fam >= BandFamily && fam <= graft.functions.MinHashSig.MaxFamily
+
+  /** The artifact's meta, read ONCE (legacy defaults in [[Meta]]). */
+  def loadMeta(s: SparkSession, indexDir: String): Meta = {
+    val m = StorageOps.readMeta(s, indexDir)
+    Meta(m("ndocs", loadDocs(s, indexDir).count()), m("parts", 0),
+      m("probemod", 0L), m("bandfam", 1))
+  }
+
+  private def requireUsableBandFamily(indexDir: String, m: Meta): Unit =
+    require(m.famUsable,
+      s"band index at $indexDir was published under band family " +
+        s"${m.bandfam} (this build derives families $BandFamily.." +
         s"${graft.functions.MinHashSig.MaxFamily}) — its stored band " +
         "values can never match keys derived by this build, so probing " +
         "it would silently miss every cross near-dup; merge a batch " +
         "(the bands rebuild from the stored hash sets) or republish " +
         "from the corpus")
-  }
 
   /** What a [[mergePublishStats]] actually wrote, per partitioned
     * dataset: partition directories REWRITTEN (they hold batch rows or
@@ -129,29 +146,17 @@ object DedupIndex {
       copiedDocParts: Int, dirtyBandParts: Int, copiedBandParts: Int,
       docsFullRewrite: Boolean, bandsFullRewrite: Boolean)
 
+  /** The `bands` partition value — a pure function of the join key. */
   private def dpartOf(band: org.apache.spark.sql.Column,
       minhash: org.apache.spark.sql.Column, nParts: Int) =
-    pmod(xxhash64(band, minhash), lit(nParts.toLong))
+    StorageOps.partOf(nParts, band, minhash)
 
   /** The `docs` partition value — a pure function of doc_id alone, so a
     * replaced doc's old row and its replacement land in the SAME
     * partition, and the dirty-partition set of a merge is derivable from
     * the batch ids without touching the index. */
   private def docPartOf(docId: org.apache.spark.sql.Column, nParts: Int) =
-    pmod(xxhash64(docId), lit(nParts.toLong))
-
-  /** The bands layout modulus recorded at publish; 0 for a LEGACY
-    * artifact (no `meta` dataset, or one without a `parts` field) —
-    * consumers degrade to the full scan and the next merge upgrades the
-    * layout. */
-  def loadParts(s: SparkSession, indexDir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0
-    val df = s.read.parquet(s"$indexDir/meta")
-    if (!df.schema.fieldNames.contains("parts")) 0
-    else df.collect()(0).getAs[Int]("parts")
-  }
+    StorageOps.partOf(nParts, docId)
 
   /** Write all three datasets under the partitioned layout — the shared
     * tail of [[publishFrom]] and the full-rewrite merge path. `meta`
@@ -160,7 +165,7 @@ object DedupIndex {
       indexDir: String, nDocs: Long,
       probe: Option[DataFrame] = None, probeMod: Long = 0,
       fam: Int = BandFamily): Unit = {
-    val parts = layoutPartsFor(nDocs)
+    val parts = StorageOps.layoutParts(nDocs, RowsPerPart)
     docs.select("doc_id", "hs", "n", "truncated")
       .withColumn("dpart", docPartOf(col("doc_id"), parts))
       .repartition(parts, col("dpart"))
@@ -175,7 +180,7 @@ object DedupIndex {
     // file at any corpus size, written VERBATIM (compaction passes a
     // stored frame through unchanged); meta still commits LAST
     probe.foreach(writeProbeWithBands(s, _, indexDir, fam))
-    writeMeta(s, indexDir, nDocs, parts, probeMod, fam)
+    StorageOps.writeMeta(s, indexDir, Meta(nDocs, parts, probeMod, fam))
   }
 
   /** Write the probe base-hash dataset AND its family-derived band
@@ -191,23 +196,17 @@ object DedupIndex {
     * probe_bands-uncommitted and [[loadProbe]] degrades to the on-read
     * derivation (identical rows, the pre-r18 cost). A verbatim-copied
     * legacy probe without `pre` (pre-r17 schema) stores no bands —
-    * [[hasProbe]] already rejects that schema. */
+    * [[hasProbe]] already rejects that schema — and neither does a probe
+    * compacted under a family this build cannot derive (family 1): the
+    * copy stays verbatim and [[loadProbe]] derives on read. */
   private def writeProbeWithBands(s: SparkSession, probe: DataFrame,
       indexDir: String, fam: Int): Unit = {
     probe.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/probe")
-    if (probe.columns.contains("pre"))
+    if (probe.columns.contains("pre") && derivable(fam))
       graft.operators.DedupOps.probeBandsFromPres(s,
           s.read.parquet(s"$indexDir/probe").select("doc_id", "pre"), fam)
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$indexDir/probe_bands")
-  }
-
-  private def writeMeta(s: SparkSession, indexDir: String, nDocs: Long,
-      parts: Int, probeMod: Long, fam: Int = BandFamily): Unit = {
-    import s.implicits._
-    Seq((nDocs, parts, probeMod, fam))
-      .toDF("ndocs", "parts", "probemod", "bandfam")
-      .write.mode("overwrite").parquet(s"$indexDir/meta")
   }
 
   /** Build and publish both index datasets for the corpus at `corpusDir`.
@@ -297,7 +296,8 @@ object DedupIndex {
       graft.operators.DedupOps.docHashesOf(s, newDocs))
     try {
       val batchIds = batch.select(col("doc_id"))
-      val parts = loadParts(s, indexDir)
+      val m = loadMeta(s, indexDir)
+      val parts = m.parts
       val docsParted = loadDocsRaw(s, indexDir).columns.contains("dpart")
       val bandsParted = loadBandsRaw(s, indexDir).columns.contains("dpart")
 
@@ -310,15 +310,15 @@ object DedupIndex {
         else Array.empty
       val replacedDocs = graft.Caching.persist(
         (if (parts > 0 && docsParted)
-           prunedByVals(loadDocsRaw(s, indexDir), "dpart", batchDocParts,
-             parts)
+           StorageOps.prunedByVals(loadDocsRaw(s, indexDir), "dpart",
+             batchDocParts, parts)
          else loadDocsRaw(s, indexDir))
           .select("doc_id", "hs", "n", "truncated")
           .join(batchIds, Seq("doc_id"), "left_semi"))
       try {
         val nReplaced = replacedDocs.count()
-        val nDocs2 = loadNDocs(s, indexDir) - nReplaced + batch.count()
-        val parts2 = layoutPartsFor(nDocs2)
+        val nDocs2 = m.ndocs - nReplaced + batch.count()
+        val parts2 = StorageOps.layoutParts(nDocs2, RowsPerPart)
         val incremental = parts2 == parts && parts > 0
         // a family-1 (retired linear constants) or unknown-future
         // artifact's stored band VALUES are unusable: neither the
@@ -327,15 +327,14 @@ object DedupIndex {
         // family-independent). A usable family (2..MaxFamily, including
         // precision-ESCALATED rungs) merges at ITS OWN geometry: batch
         // rows sign at `fam`, and the merged meta re-records it.
-        val fam = loadBandFamily(s, indexDir)
-        val famOk = fam >= BandFamily &&
-          fam <= graft.functions.MinHashSig.MaxFamily
+        val fam = m.bandfam
+        val famOk = m.famUsable
 
         // ---- docs --------------------------------------------------
         val (dirtyDoc, copiedDoc) =
           if (incremental && docsParted) {
-            val dirtyRows = prunedByVals(loadDocsRaw(s, indexDir), "dpart",
-                batchDocParts, parts)
+            val dirtyRows = StorageOps.prunedByVals(loadDocsRaw(s, indexDir),
+                "dpart", batchDocParts, parts)
               .select("doc_id", "hs", "n", "truncated")
               .join(batchIds, Seq("doc_id"), "left_anti")
               .unionByName(batch.select("doc_id", "hs", "n", "truncated"))
@@ -345,8 +344,8 @@ object DedupIndex {
               .write.partitionBy("dpart")
               .mode("overwrite").parquet(s"$newIndexDir/docs")
             (batchDocParts.length,
-              copyCleanParts(s, s"$indexDir/docs", s"$newIndexDir/docs",
-                batchDocParts.toSet))
+              StorageOps.copyCleanParts(s, s"$indexDir/docs",
+                s"$newIndexDir/docs", "dpart", batchDocParts.toSet))
           } else {
             loadDocs(s, indexDir).join(batchIds, Seq("doc_id"), "left_anti")
               .unionByName(batch.select("doc_id", "hs", "n", "truncated"))
@@ -388,8 +387,8 @@ object DedupIndex {
               .union(replacedBands
                 .select(dpartOf(col("band"), col("minhash"), parts)))
               .distinct().collect().map(_.getLong(0))
-            val dirtyRows = prunedByVals(loadBandsRaw(s, indexDir), "dpart",
-                dirtyBp, parts)
+            val dirtyRows = StorageOps.prunedByVals(loadBandsRaw(s, indexDir),
+                "dpart", dirtyBp, parts)
               .select("band", "minhash", "doc_id")
               .join(batchIds, Seq("doc_id"), "left_anti")
               .unionByName(batchBands)
@@ -399,10 +398,10 @@ object DedupIndex {
               .write.partitionBy("dpart")
               .mode("overwrite").parquet(s"$newIndexDir/bands")
             (dirtyBp.length,
-              copyCleanParts(s, s"$indexDir/bands", s"$newIndexDir/bands",
-                dirtyBp.toSet))
+              StorageOps.copyCleanParts(s, s"$indexDir/bands",
+                s"$newIndexDir/bands", "dpart", dirtyBp.toSet))
           } else {
-            loadBands(s, indexDir).join(batchIds, Seq("doc_id"), "left_anti")
+            bandsOf(s, indexDir, m).join(batchIds, Seq("doc_id"), "left_anti")
               .unionByName(batchBands)
               .withColumn("dpart", dpartOf(col("band"), col("minhash"),
                 parts2))
@@ -422,7 +421,7 @@ object DedupIndex {
         // hasProbe rejects its schema) or a probe-less legacy stays
         // probe-less (probemod 0) until its next full publish.
         val probeMod =
-          if (hasProbe(s, indexDir)) loadProbeMod(s, indexDir) else 0L
+          if (hasProbeAt(s, indexDir, m.probemod)) m.probemod else 0L
         if (probeMod > 0) {
           writeProbeWithBands(s,
             loadProbePres(s, indexDir)
@@ -431,9 +430,11 @@ object DedupIndex {
                 .probePres(s, newDocs, probeMod)),
             newIndexDir, if (famOk) fam else BandFamily)
         }
-        writeMeta(s, newIndexDir, nDocs2, parts2, probeMod,
-          if (famOk) fam else BandFamily)
-        ((loadDocs(s, newIndexDir).count(), loadBands(s, newIndexDir).count()),
+        StorageOps.writeMeta(s, newIndexDir, Meta(nDocs2, parts2, probeMod,
+          if (famOk) fam else BandFamily))
+        // the merged family is usable by construction: count the raw bands
+        ((loadDocs(s, newIndexDir).count(),
+          loadBandsRaw(s, newIndexDir).count()),
           MergeStats(parts2, dirtyDoc, copiedDoc, dirtyBand, copiedBand,
             docsFullRewrite = !(incremental && docsParted),
             bandsFullRewrite = !famOk || !(incremental && bandsParted)))
@@ -443,61 +444,26 @@ object DedupIndex {
 
   // ---- versioned-root lifecycle (the VectorIndex convention) ---------
   // A maintained text index lives under ONE root: <root>/v<n>/{docs,
-  // bands,meta} + <root>/_current. mergePublish's "publish beside, never
-  // into" contract becomes automatic — the next version IS beside the
-  // live one — and consumers resolve through the pointer instead of
-  // being handed a new directory name per merge.
+  // bands,meta} + <root>/_current (the [[StorageOps]] lifecycle).
+  // mergePublish's "publish beside, never into" contract becomes
+  // automatic — the next version IS beside the live one — and consumers
+  // resolve through [[StorageOps.currentDir]] instead of being handed a
+  // new directory name per merge.
 
   /** Publish `corpus` as the root's next immutable version and flip the
     * pointer. Returns (docRows, bandRows) of the published version. */
   def publishVersionedFrom(s: SparkSession, corpus: DataFrame,
-      root: String): (Long, Long) = {
-    val v = s"v${StorageOps.nextVersion(s, root)}"
-    val counts = publishFrom(s, corpus, s"$root/$v")
-    StorageOps.flipPointer(s, root, v)
-    counts
-  }
-
-  /** The active version's index directory under a versioned root. */
-  def currentDir(s: SparkSession, root: String): String =
-    s"$root/${StorageOps.currentVersion(s, root).getOrElse(
-      throw new IllegalStateException(s"no published dedup index at $root"))}"
+      root: String): (Long, Long) =
+    StorageOps.publishNext(s, root)(publishFrom(s, corpus, _))
 
   /** [[isPublished]] through the version pointer. */
   def isPublishedVersioned(s: SparkSession, root: String): Boolean =
     StorageOps.currentVersion(s, root)
       .exists(v => isPublished(s, s"$root/$v"))
 
-  /** True when the corpus count has drifted off the published layout
-    * modulus — the signal that the next merge pays the O(index) full
-    * rewrite ([[MergeStats]] `*FullRewrite`), so an operator can schedule
-    * it deliberately (off-peak) instead of discovering it inside an
-    * ingest. A legacy artifact (parts = 0) always needs the rebuild —
-    * the rewrite doubles as its layout upgrade. */
-  def needsRebuild(s: SparkSession, indexDir: String): Boolean = {
-    val parts = loadParts(s, indexDir)
-    parts <= 0 || parts != layoutPartsFor(loadNDocs(s, indexDir))
-  }
-
-  /** ONE-shot meta read — (ndocs, parts, probemod, bandfam) with the
-    * same legacy defaults the individual loaders apply (r18): the health
-    * surfaces read every field plus the rebuild flag, which through the
-    * per-field loaders cost SIX tiny read+collect jobs per stats query
-    * (each a parquet footer + scan + collect round trip); this is one.
-    * The per-field loaders stay for callers that need a single value. */
-  def loadMeta(s: SparkSession, indexDir: String): (Long, Int, Long, Int) = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (loadDocs(s, indexDir).count(), 0, 0L, 1)
-    val df = s.read.parquet(s"$indexDir/meta")
-    val names = df.schema.fieldNames.toSet
-    val row = df.collect()(0)
-    (if (names("ndocs")) row.getAs[Long]("ndocs")
-     else loadDocs(s, indexDir).count(),
-     if (names("parts")) row.getAs[Int]("parts") else 0,
-     if (names("probemod")) row.getAs[Long]("probemod") else 0L,
-     if (names("bandfam")) row.getAs[Int]("bandfam") else 1)
-  }
+  /** [[Meta.needsRebuild]] of the artifact at `indexDir`. */
+  def needsRebuild(s: SparkSession, indexDir: String): Boolean =
+    loadMeta(s, indexDir).needsRebuild
 
   /** One production ingest cycle on a versioned root — the text twin of
     * [[VectorIndex.maintain]]: merge `newDocs` into the live version as
@@ -513,10 +479,9 @@ object DedupIndex {
   def maintain(s: SparkSession, root: String, newDocs: DataFrame,
       keep: Int = 2,
       precisionProbe: Option[PrecisionProbe] = None): ((Long, Long), MergeStats) = {
-    val live = currentDir(s, root)
-    val v = s"v${StorageOps.nextVersion(s, root)}"
-    val (counts, stats) = mergePublishStats(s, live, newDocs, s"$root/$v")
-    StorageOps.flipPointer(s, root, v)
+    val live = StorageOps.currentDir(s, root)
+    val (counts, stats) = StorageOps.publishNext(s, root)(
+      mergePublishStats(s, live, newDocs, _))
     // PRECISION GATE (r16 verdict #2 — the observe-then-act close of
     // the q_dedup_index_stats drift signal, mirroring
     // VectorIndex.maintain's recall gate): probe the merged artifact's
@@ -527,14 +492,15 @@ object DedupIndex {
     // fails loudly — silently skipping a gate the caller armed would
     // defeat its purpose (the recall-gate convention).
     precisionProbe.foreach { p =>
-      val merged = currentDir(s, root)
-      require(hasProbe(s, merged),
+      val merged = StorageOps.currentDir(s, root)
+      val m = loadMeta(s, merged)
+      require(hasProbeAt(s, merged, m.probemod),
         s"precision probe armed but the index at $root carries no " +
           "readable probe dataset (legacy or pre-r17 artifact) — run a " +
           "full publish to derive one, or disarm the probe")
-      if (probePrecision(s, merged).below(p.floor)) {
+      if (probePrecisionAt(s, merged, m).below(p.floor)) {
         val next = escalateBandFamily(s, root)
-        val after = probePrecision(s, currentDir(s, root))
+        val after = probePrecision(s, StorageOps.currentDir(s, root))
         if (after.below(p.floor)) {
           val msg = s"precision floor ${p.floor} not restored by the " +
             s"band-family escalation at $root: family $next measures " +
@@ -564,10 +530,15 @@ object DedupIndex {
     * entry is the engine-side read the maintain gate acts on. Cost:
     * probe × probe over ~500 sampled docs plus a pruned verify join —
     * independent of corpus size. */
-  def probePrecision(s: SparkSession, indexDir: String): ProbeStats = {
-    require(hasProbe(s, indexDir),
+  def probePrecision(s: SparkSession, indexDir: String): ProbeStats =
+    probePrecisionAt(s, indexDir, loadMeta(s, indexDir))
+
+  /** [[probePrecision]] with the artifact's meta already in hand. */
+  private[graft] def probePrecisionAt(s: SparkSession, indexDir: String,
+      m: Meta): ProbeStats = {
+    require(hasProbeAt(s, indexDir, m.probemod),
       s"no readable precision probe at $indexDir")
-    val probe = graft.Caching.persist(loadProbe(s, indexDir))
+    val probe = graft.Caching.persist(probeAt(s, indexDir, m.bandfam))
     try {
       val cand = graft.Caching.persist(
         probe.alias("a").join(probe.alias("b"),
@@ -583,7 +554,7 @@ object DedupIndex {
         val ids = cand.select(col("doc_a").as("doc_id"))
           .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
         val verified = graft.operators.DedupOps
-          .verifyPairs(cand, prunedDocs(s, indexDir, ids)).count()
+          .verifyPairs(cand, prunedDocs(s, indexDir, m, ids)).count()
         ProbeStats(probeDocs, nCand, verified)
       } finally cand.unpersist()
     } finally probe.unpersist()
@@ -600,8 +571,9 @@ object DedupIndex {
     * (their escalation IS the upgrade to family 2); an exhausted
     * ladder fails loudly. Returns the new family. */
   def escalateBandFamily(s: SparkSession, root: String): Int = {
-    val live = currentDir(s, root)
-    val fam = loadBandFamily(s, live)
+    val live = StorageOps.currentDir(s, root)
+    val m = loadMeta(s, live)
+    val fam = m.bandfam
     require(fam >= BandFamily,
       s"cannot escalate a family-$fam artifact: merge a batch first " +
         "(the merge rebuilds its bands at the current publish family)")
@@ -611,18 +583,20 @@ object DedupIndex {
         s"deepest geometry under the ${4096}-permutation cap — a still-" +
         "tripped precision floor now needs a different remedy (raise " +
         "the verify threshold, shard the corpus, or lower the floor)")
-    val v = s"v${StorageOps.nextVersion(s, root)}"
     val docs = loadDocs(s, live)
-    val pm = loadProbeMod(s, live)
-    writeAll(s, docs,
-      graft.streaming.NearDupStream.bandIndex(s, docs, next),
-      s"$root/$v", loadNDocs(s, live),
-      if (pm > 0 && StorageOps.isCommitted(s, s"$live/probe"))
-        Some(s.read.parquet(s"$live/probe")) else None,
-      pm, next)
-    StorageOps.flipPointer(s, root, v)
+    StorageOps.publishNext(s, root)(writeAll(s, docs,
+      graft.streaming.NearDupStream.bandIndex(s, docs, next), _, m.ndocs,
+      storedProbe(s, live, m), m.probemod, next))
     next
   }
+
+  /** The stored probe base hashes of the artifact at `indexDir`, for a
+    * republish that copies them VERBATIM (any stored schema generation). */
+  private def storedProbe(s: SparkSession, indexDir: String,
+      m: Meta): Option[DataFrame] =
+    if (m.probemod > 0 && StorageOps.isCommitted(s, s"$indexDir/probe"))
+      Some(s.read.parquet(s"$indexDir/probe"))
+    else None
 
   /** Small-file compaction hook in the [[maintain]] cycle — the
     * [[VectorIndex.compactIfFragmented]] twin: if either partitioned
@@ -633,72 +607,22 @@ object DedupIndex {
     * invariant by construction; the hook covers foreign/legacy
     * artifacts. Returns whether a compaction version was published. */
   def compactIfFragmented(s: SparkSession, root: String): Boolean = {
-    val live = currentDir(s, root)
-    if (!Seq("docs", "bands").exists(ds => fragmented(s, s"$live/$ds")))
-      return false
-    val v = s"v${StorageOps.nextVersion(s, root)}"
-    val pm = loadProbeMod(s, live)
+    val live = StorageOps.currentDir(s, root)
+    if (!Seq("docs", "bands").exists(ds =>
+        StorageOps.fragmented(s, s"$live/$ds"))) return false
+    val m = loadMeta(s, live)
     // RAW reads + re-recorded family: compaction is a verbatim layout
     // move, so it must neither refuse a family this build cannot derive
     // (the rows copy unchanged — r16 ADVICE: the loadBands family gate
     // here raised a misleading "probing would miss" error for an
     // artifact nobody was probing) nor silently stamp the output with
-    // the publish-default family
-    writeAll(s,
+    // the publish-default family; the probe copies verbatim too
+    StorageOps.publishNext(s, root)(writeAll(s,
       loadDocsRaw(s, live).select("doc_id", "hs", "n", "truncated"),
       loadBandsRaw(s, live).select("band", "minhash", "doc_id"),
-      s"$root/$v", loadNDocs(s, live),
-      // the probe copies VERBATIM too (any stored schema generation)
-      if (pm > 0 && StorageOps.isCommitted(s, s"$live/probe"))
-        Some(s.read.parquet(s"$live/probe")) else None,
-      pm, loadBandFamily(s, live))
-    StorageOps.flipPointer(s, root, v)
+      _, m.ndocs, storedProbe(s, live, m), m.probemod, m.bandfam))
     true
   }
-
-  /** True iff any partition directory of the dataset holds more than one
-    * data file (one FS listing, no data read). */
-  private def fragmented(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      st.isDirectory && st.getPath.getName.contains("=") &&
-        fs.listStatus(st.getPath).count(f => f.isFile &&
-          !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith(".")) > 1
-    }
-  }
-
-  /** The recorded corpus count; legacy artifacts (no meta) count the doc
-    * store directly. */
-  private[graft] def loadNDocs(s: SparkSession, indexDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val df = s.read.parquet(s"$indexDir/meta")
-      if (df.schema.fieldNames.contains("ndocs"))
-        df.collect()(0).getAs[Long]("ndocs")
-      else loadDocs(s, indexDir).count()
-    } else loadDocs(s, indexDir).count()
-  }
-
-  /** Static partition-value pruning with rebased literals — the
-    * [[VectorIndex]] convention (hive reads the partition column back as
-    * IntegerType; casting the attribute would block pruning). */
-  // the static-pruning filter and the clean-partition hard-copy are the
-  // SHARED index-layout utilities ([[StorageOps.prunedByVals]] /
-  // [[StorageOps.copyCleanParts]]) — one implementation for both
-  // published indexes, so the literal-rebase and copy semantics cannot
-  // silently diverge
-  private def prunedByVals(idx: DataFrame, partCol: String,
-      parts: Array[Long], nParts: Int): DataFrame =
-    StorageOps.prunedByVals(idx, partCol, parts, nParts)
-
-  /** Hard-copy every clean `dpart=<v>` partition directory — see
-    * [[MergeStats]]. Returns how many were copied. */
-  private def copyCleanParts(s: SparkSession, prevPath: String,
-      newPath: String, dirty: Set[Long]): Int =
-    StorageOps.copyCleanParts(s, prevPath, newPath, "dpart", dirty)
 
   /** True iff the artifact is complete: data datasets committed AND
     * `meta` committed — meta writes LAST (after every dirty-partition
@@ -708,7 +632,7 @@ object DedupIndex {
     * The one exception is a true LEGACY pre-layout artifact (no meta by
     * construction): it is accepted only when BOTH datasets are also
     * unpartitioned — consumers then take the full-scan path
-    * ([[loadParts]] = 0) and the next merge upgrades it. A partitioned
+    * ([[Meta.parts]] = 0) and the next merge upgrades it. A partitioned
     * dataset without meta is torn, never legacy. */
   def isPublished(s: SparkSession, indexDir: String): Boolean =
     StorageOps.isCommitted(s, s"$indexDir/docs") &&
@@ -736,21 +660,14 @@ object DedupIndex {
     * derivable from (band, minhash) whenever a consumer wants the pruned
     * scan ([[prunedBands]] reads [[loadBandsRaw]] and drops it after the
     * filter). */
-  def loadBands(s: SparkSession, indexDir: String): DataFrame = {
-    requireUsableBandFamily(s, indexDir)
-    loadBandsRaw(s, indexDir).select("band", "minhash", "doc_id")
-  }
+  def loadBands(s: SparkSession, indexDir: String): DataFrame =
+    bandsOf(s, indexDir, loadMeta(s, indexDir))
 
-  /** The frozen probe-sample modulus recorded at publish; 0 for a
-    * legacy artifact (no `probemod` meta field) — no probe dataset,
-    * precision unreadable until the next full publish. */
-  def loadProbeMod(s: SparkSession, indexDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0
-    val df = s.read.parquet(s"$indexDir/meta")
-    if (!df.schema.fieldNames.contains("probemod")) 0
-    else df.collect()(0).getAs[Long]("probemod")
+  /** [[loadBands]] with the artifact's meta already in hand. */
+  private[graft] def bandsOf(s: SparkSession, indexDir: String,
+      m: Meta): DataFrame = {
+    requireUsableBandFamily(indexDir, m)
+    loadBandsRaw(s, indexDir).select("band", "minhash", "doc_id")
   }
 
   /** The sampled PORTABLE probe bands (doc_id, band, pbv), derived ON
@@ -758,13 +675,17 @@ object DedupIndex {
     * family — see [[graft.operators.DedupOps.probeBandsFromPres]].
     * Sampled-small: ~500 docs × famBands rows at any corpus size. */
   def loadProbe(s: SparkSession, indexDir: String): DataFrame =
-    // stored derived bands when this build's writers produced them
-    // ([[writeProbeWithBands]]); on-read derivation for any older
-    // artifact — identical rows either way (spec-pinned)
+    probeAt(s, indexDir, loadMeta(s, indexDir).bandfam)
+
+  // stored derived bands when this build's writers produced them
+  // ([[writeProbeWithBands]]); on-read derivation at `fam` (read only
+  // then) for any older artifact — identical rows either way
+  private def probeAt(s: SparkSession, indexDir: String,
+      fam: => Int): DataFrame =
     if (StorageOps.isCommitted(s, s"$indexDir/probe_bands"))
       s.read.parquet(s"$indexDir/probe_bands").select("doc_id", "band", "pbv")
     else graft.operators.DedupOps.probeBandsFromPres(s,
-      loadProbePres(s, indexDir), loadBandFamily(s, indexDir))
+      loadProbePres(s, indexDir), fam)
 
   /** The stored probe base layer (doc_id, pre) — family-free; merges
     * maintain it, escalations and compactions copy it verbatim. */
@@ -780,7 +701,7 @@ object DedupIndex {
     * surfaces gate on this and emit NULL probe columns when false
     * (r16 ADVICE: a probe-less artifact must degrade, not throw). */
   def hasProbe(s: SparkSession, indexDir: String): Boolean =
-    hasProbeAt(s, indexDir, loadProbeMod(s, indexDir))
+    hasProbeAt(s, indexDir, loadMeta(s, indexDir).probemod)
 
   /** [[hasProbe]] with the modulus already in hand — callers that just
     * did a [[loadMeta]] skip the second meta read. */
@@ -802,17 +723,17 @@ object DedupIndex {
     * entirely inside one partition (the column is a pure key function),
     * so per-bucket width statistics computed over the pruned scan are
     * exact. `batchBands`: (band, bv) — minhash under its join alias. */
-  private[graft] def prunedBands(s: SparkSession, indexDir: String,
+  private[graft] def prunedBands(s: SparkSession, indexDir: String, m: Meta,
       batchBands: DataFrame): DataFrame = {
-    requireUsableBandFamily(s, indexDir)
-    val nParts = loadParts(s, indexDir)
+    requireUsableBandFamily(indexDir, m)
+    val nParts = m.parts
     val raw = loadBandsRaw(s, indexDir)
     if (nParts <= 0 || !raw.columns.contains("dpart")) // legacy: full scan
       return raw.select("band", "minhash", "doc_id")
     val parts = batchBands
       .select(dpartOf(col("band"), col("bv"), nParts).as("dpart"))
       .distinct().collect().map(_.getLong(0))
-    prunedByVals(raw, "dpart", parts, nParts)
+    StorageOps.prunedByVals(raw, "dpart", parts, nParts)
       .select("band", "minhash", "doc_id")
   }
 
@@ -823,16 +744,16 @@ object DedupIndex {
     * column is used); the distinct-collect is bounded by the layout
     * modulus, never the candidate count. Legacy artifacts degrade to the
     * full scan. */
-  private[graft] def prunedDocs(s: SparkSession, indexDir: String,
+  private[graft] def prunedDocs(s: SparkSession, indexDir: String, m: Meta,
       ids: DataFrame): DataFrame = {
-    val nParts = loadParts(s, indexDir)
+    val nParts = m.parts
     val raw = loadDocsRaw(s, indexDir)
     if (nParts <= 0 || !raw.columns.contains("dpart")) // legacy: full scan
       return raw.select("doc_id", "hs", "n", "truncated")
     val parts = ids
       .select(docPartOf(col(ids.columns.head), nParts).as("dpart"))
       .distinct().collect().map(_.getLong(0))
-    prunedByVals(raw, "dpart", parts, nParts)
+    StorageOps.prunedByVals(raw, "dpart", parts, nParts)
       .select("doc_id", "hs", "n", "truncated")
   }
 }

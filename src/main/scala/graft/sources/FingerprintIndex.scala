@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * text (DedupIndex), vectors (VectorIndex), and now the fingerprint
   * group tables the codec pipelines publish on each corpus rebuild.
   *
-  * Two dataset shapes, one layout discipline (versioned immutable dirs
-  * + `_current` pointer, hive-partitioned by a pure key function, one
-  * file per partition — the VectorIndex convention):
+  * Two dataset shapes, one layout discipline (the shared versioned
+  * lifecycle of [[StorageOps]] — immutable `v<n>` dirs, `_current`
+  * pointer, one-row meta — hive-partitioned by [[StorageOps.partOf]], one
+  * file per partition):
   *
   *   EXACT-equality probes (audio/video fingerprints):
   *     <dir>/v<n>/groups/  (fp, n, rep)  partitioned by
@@ -36,15 +37,9 @@ import org.apache.spark.sql.functions._
   */
 object FingerprintIndex {
 
-  /** Layout modulus from the distinct-fingerprint count: floor 64, one
-    * more partition per ~4M skinny rows, capped at 64k dirs. */
-  private[graft] def layoutPartsFor(nGroups: Long): Int =
-    math.max(64L, math.min(1L << 16, nGroups / (4L * 1000 * 1000) + 1)).toInt
-
-  private def fpartOf(fp: Column, nParts: Int) =
-    pmod(xxhash64(fp), lit(nParts.toLong))
-  private def ipartOf(band: Column, bv: Column, nParts: Int) =
-    pmod(xxhash64(band, bv), lit(nParts.toLong))
+  /** Distinct fingerprints per layout partition
+    * ([[StorageOps.layoutParts]]). */
+  private[graft] val RowsPerPart = 4L * 1000 * 1000
 
   /** The publish-default band family: contiguous 4×16-bit chunks. */
   val BandFamily = 1
@@ -101,43 +96,52 @@ object FingerprintIndex {
          |                ((k * $m) % 64) % 16)) AS bv))""".stripMargin
     }
 
-  private def ver(s: SparkSession, dir: String): String =
-    StorageOps.currentVersion(s, dir).getOrElse(throw new IllegalStateException(
-      s"no published fingerprint index at $dir"))
+  /** The one-row meta of a version. `last_batch` (stored name) is the
+    * foreachBatch batchId of the last applied merge, -1 for none;
+    * artifacts written before it or `bandfam` existed read as -1 and the
+    * contiguous family (the exact-equality shape has no banding). */
+  final case class Meta(ngroups: Long, parts: Int, last_batch: Long = -1L,
+      bandfam: Int = BandFamily) {
+    /** The replay guard's memory; None for a publish (no batch). */
+    def lastApplied: Option[Long] = Some(last_batch).filter(_ >= 0)
+    /** True when the distinct-fingerprint count has drifted off the
+      * layout modulus — the next merge pays the O(index) full rewrite
+      * ([[MergeStats.fullRewrite]]), so an operator can schedule it
+      * deliberately (off-peak); read by q_fingerprint_index_stats. */
+    def needsRebuild: Boolean =
+      parts <= 0 || parts != StorageOps.layoutParts(ngroups, RowsPerPart)
+  }
 
-  def isPublished(s: SparkSession, dir: String): Boolean =
-    StorageOps.currentVersion(s, dir).exists { v =>
-      StorageOps.isCommitted(s, s"$dir/$v/meta") &&
-        (StorageOps.isCommitted(s, s"$dir/$v/groups") ||
-          StorageOps.isCommitted(s, s"$dir/$v/bands"))
+  /** The active version of the index at `dir` and its meta, resolved
+    * and read once — every read handed it sees that one version. */
+  def open(s: SparkSession, dir: String): StorageOps.Version[Meta] =
+    StorageOps.open(s, dir) { v =>
+      val m = StorageOps.readMeta(s, v)
+      Meta(m[Long]("ngroups"), m[Int]("parts"), m("last_batch", -1L),
+        m("bandfam", BandFamily))
     }
 
-  /** The active version's (ngroups, parts) in ONE meta read — health
-    * surfaces want both plus the drift flag, and the per-field helpers
-    * below would each re-read the 1-row parquet (5 driver jobs where one
-    * suffices). */
-  def loadCounts(s: SparkSession, dir: String): (Long, Int) = {
-    val r = s.read.parquet(s"$dir/${ver(s, dir)}/meta").collect()(0)
-    (r.getAs[Long]("ngroups"), r.getAs[Int]("parts"))
+  def loadMeta(s: SparkSession, dir: String): Meta = open(s, dir).meta
+
+  private def published(s: SparkSession, vdir: String): Boolean =
+    StorageOps.committed(s, vdir, "meta") &&
+      (StorageOps.committed(s, vdir, "groups") ||
+        StorageOps.committed(s, vdir, "bands"))
+
+  def isPublished(s: SparkSession, dir: String): Boolean =
+    StorageOps.currentVersion(s, dir).exists(v => published(s, s"$dir/$v"))
+
+  /** [[open]] for a write path: the version must be fully published. */
+  private def openPublished(s: SparkSession,
+      dir: String): StorageOps.Version[Meta] = {
+    val live = open(s, dir)
+    require(published(s, live.dir), s"no published fingerprint index at $dir")
+    live
   }
 
-  /** The active version's layout modulus (q_dedup_index_stats-style
-    * health reads want it alongside [[loadNGroups]]). */
-  def loadParts(s: SparkSession, dir: String): Int =
-    loadCounts(s, dir)._2
-
-  /** The active version's recorded distinct-fingerprint count. */
-  def loadNGroups(s: SparkSession, dir: String): Long =
-    loadCounts(s, dir)._1
-
-  /** The foreachBatch batchId recorded by the last applied merge — the
-    * replay guard's memory. None for a publish (no batch) or an artifact
-    * written before the `last_batch` column existed. */
-  def lastAppliedBatch(s: SparkSession, dir: String): Option[Long] = {
-    val df = s.read.parquet(s"$dir/${ver(s, dir)}/meta")
-    if (!df.schema.fieldNames.contains("last_batch")) None
-    else Option(df.collect()(0).getAs[Long]("last_batch")).filter(_ >= 0)
-  }
+  /** The foreachBatch batchId recorded by the last applied merge. */
+  def lastAppliedBatch(s: SparkSession, dir: String): Option[Long] =
+    loadMeta(s, dir).lastApplied
 
   /** The replay-guard decision on a submitted batchId vs the recorded
     * last applied one. foreachBatch batchIds are MONOTONIC, so only two
@@ -154,9 +158,9 @@ object FingerprintIndex {
     *
     * A fresh (`> last`) or unguarded (None) submission returns false and
     * the merge proceeds. */
-  private def replayedBatch(s: SparkSession, dir: String,
+  private def replayedBatch(dir: String, m: Meta,
       batchId: Option[Long]): Boolean =
-    (batchId, lastAppliedBatch(s, dir)) match {
+    (batchId, m.lastApplied) match {
       case (Some(b), Some(last)) if b == last => true
       case (Some(b), Some(last)) if b < last =>
         throw new IllegalArgumentException(
@@ -183,62 +187,26 @@ object FingerprintIndex {
     * reset (exactly the at-most-once contract an unguarded caller has).
     * Returns false (no new version) when no batchId was recorded. */
   def clearLastAppliedBatch(s: SparkSession, dir: String): Boolean = {
-    require(isPublished(s, dir), s"no published fingerprint index at $dir")
-    if (lastAppliedBatch(s, dir).isEmpty) return false
-    val prev = s"$dir/${ver(s, dir)}"
-    val (nGroups, parts) = loadCounts(s, dir)
-    val fam = loadBandFamily(s, dir)
-    val v = s"v${StorageOps.nextVersion(s, dir)}"
-    for ((ds, pc) <- Seq("groups" -> "fpart", "bands" -> "ipart"))
-      if (StorageOps.isCommitted(s, s"$prev/$ds")) {
-        StorageOps.copyCleanParts(s, s"$prev/$ds", s"$dir/$v/$ds", pc,
-          Set.empty)
-        val marker = new org.apache.hadoop.fs.Path(s"$dir/$v/$ds/_SUCCESS")
-        marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .create(marker, true).close()
-      }
-    // last_batch intentionally unset; the band family copies verbatim
-    writeMeta(s, s"$dir/$v", nGroups, parts, fam = fam)
-    StorageOps.flipPointer(s, dir, v)
+    val live = openPublished(s, dir)
+    if (live.meta.lastApplied.isEmpty) return false
+    StorageOps.publishNext(s, dir) { next =>
+      for ((ds, pc) <- Seq("groups" -> "fpart", "bands" -> "ipart"))
+        if (StorageOps.committed(s, live.dir, ds)) {
+          StorageOps.copyCleanParts(s, s"${live.dir}/$ds", s"$next/$ds", pc,
+            Set.empty)
+          val marker = new org.apache.hadoop.fs.Path(s"$next/$ds/_SUCCESS")
+          marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+            .create(marker, true).close()
+        }
+      // last_batch intentionally unset; the band family copies verbatim
+      StorageOps.writeMeta(s, next, live.meta.copy(last_batch = -1L))
+    }
     true
   }
 
-  /** True when the distinct-fingerprint count has drifted off the
-    * published layout modulus — the signal that the next merge pays the
-    * O(index) full rewrite ([[MergeStats.fullRewrite]]), surfaced so an
-    * operator can schedule it deliberately (off-peak) instead of
-    * discovering it inside an ingest. The DedupIndex.needsRebuild twin;
-    * read by q_fingerprint_index_stats. */
-  def needsRebuild(s: SparkSession, dir: String): Boolean = {
-    val (nGroups, parts) = loadCounts(s, dir)
-    needsRebuildFor(nGroups, parts)
-  }
-
-  /** The drift predicate on already-read counts — health queries compute
-    * it off their single meta read. */
-  private[graft] def needsRebuildFor(nGroups: Long, parts: Int): Boolean =
-    parts <= 0 || parts != layoutPartsFor(nGroups)
-
-  private def writeMeta(s: SparkSession, vdir: String, nGroups: Long,
-      parts: Int, lastBatch: Long = -1L,
-      fam: Int = BandFamily): Unit = {
-    import s.implicits._
-    Seq((nGroups, parts, lastBatch, fam))
-      .toDF("ngroups", "parts", "last_batch", "bandfam")
-      .write.mode("errorifexists").parquet(s"$vdir/meta")
-  }
-
-  /** The active version's recorded band family; 1 for any artifact
-    * written before the field existed (all of those are contiguous-
-    * banded) and for the exact-equality (groups) shape, which has no
-    * banding. Readers of the banded shape MUST derive their probe keys
-    * at this family ([[bandsExpr]]) — family-mismatched keys silently
-    * match nothing. */
-  def loadBandFamily(s: SparkSession, dir: String): Int = {
-    val df = s.read.parquet(s"$dir/${ver(s, dir)}/meta")
-    if (!df.schema.fieldNames.contains("bandfam")) BandFamily
-    else df.collect()(0).getAs[Int]("bandfam")
-  }
+  /** [[Meta.needsRebuild]] of the active version — the DedupIndex twin. */
+  def needsRebuild(s: SparkSession, dir: String): Boolean =
+    loadMeta(s, dir).needsRebuild
 
   /** Publish an exact-equality group table (fp, n, rep — extra columns
     * ignored) as the next version. Returns the published group count.
@@ -250,14 +218,14 @@ object FingerprintIndex {
     val g = graft.Caching.persist(groups.select("fp", "n", "rep"))
     try {
       val nGroups = g.count()
-      val parts = layoutPartsFor(nGroups)
-      val v = s"v${StorageOps.nextVersion(s, dir)}"
-      g.withColumn("fpart", fpartOf(col("fp"), parts))
-        .repartition(parts, col("fpart"))
-        .write.partitionBy("fpart")
-        .mode("errorifexists").parquet(s"$dir/$v/groups")
-      writeMeta(s, s"$dir/$v", nGroups, parts, lastBatch)
-      StorageOps.flipPointer(s, dir, v)
+      val parts = StorageOps.layoutParts(nGroups, RowsPerPart)
+      StorageOps.publishNext(s, dir) { v =>
+        g.withColumn("fpart", StorageOps.partOf(parts, col("fp")))
+          .repartition(parts, col("fpart"))
+          .write.partitionBy("fpart")
+          .mode("errorifexists").parquet(s"$v/groups")
+        StorageOps.writeMeta(s, v, Meta(nGroups, parts, lastBatch))
+      }
       nGroups
     } finally g.unpersist()
   }
@@ -273,18 +241,18 @@ object FingerprintIndex {
     val g = graft.Caching.persist(sigs.select("dhash", "n", "rep"))
     try {
       val nGroups = g.count()
-      val parts = layoutPartsFor(nGroups)
-      val v = s"v${StorageOps.nextVersion(s, dir)}"
-      g.select(col("dhash"), col("n"), col("rep"),
-          explode(expr(bandsExpr("dhash", fam))).as("b"))
-        .select(col("b.band").as("band"), col("b.bv").as("bv"),
-          col("dhash"), col("n"), col("rep"))
-        .withColumn("ipart", ipartOf(col("band"), col("bv"), parts))
-        .repartition(parts, col("ipart"))
-        .write.partitionBy("ipart")
-        .mode("errorifexists").parquet(s"$dir/$v/bands")
-      writeMeta(s, s"$dir/$v", nGroups, parts, lastBatch, fam)
-      StorageOps.flipPointer(s, dir, v)
+      val parts = StorageOps.layoutParts(nGroups, RowsPerPart)
+      StorageOps.publishNext(s, dir) { v =>
+        g.select(col("dhash"), col("n"), col("rep"),
+            explode(expr(bandsExpr("dhash", fam))).as("b"))
+          .select(col("b.band").as("band"), col("b.bv").as("bv"),
+            col("dhash"), col("n"), col("rep"))
+          .withColumn("ipart", StorageOps.partOf(parts, col("band"), col("bv")))
+          .repartition(parts, col("ipart"))
+          .write.partitionBy("ipart")
+          .mode("errorifexists").parquet(s"$v/bands")
+        StorageOps.writeMeta(s, v, Meta(nGroups, parts, lastBatch, fam))
+      }
       nGroups
     } finally g.unpersist()
   }
@@ -334,39 +302,35 @@ object FingerprintIndex {
     * exact). */
   def mergeGroups(s: SparkSession, dir: String,
       arrivals: DataFrame, batchId: Option[Long] = None): (Long, MergeStats) = {
-    require(isPublished(s, dir), s"no published fingerprint index at $dir")
-    if (replayedBatch(s, dir, batchId))
-      return (loadNGroups(s, dir),
-        MergeStats(loadParts(s, dir), 0, 0, fullRewrite = false))
-    val prev = s"$dir/${ver(s, dir)}"
-    val parts = loadParts(s, dir)
+    val live = openPublished(s, dir)
+    val m = live.meta
+    val parts = m.parts
+    if (replayedBatch(dir, m, batchId))
+      return (m.ngroups, MergeStats(parts, 0, 0, fullRewrite = false))
     val b = graft.Caching.persist(arrivals
       .groupBy("fp").agg(count(lit(1)).as("bn"), min("doc_id").as("brep")))
     try {
       val dirtyFp: Array[Long] = b
-        .select(fpartOf(col("fp"), parts).as("p"))
+        .select(StorageOps.partOf(parts, col("fp")).as("p"))
         .distinct().collect().map(_.getLong(0))
       if (dirtyFp.isEmpty)
-        return (loadNGroups(s, dir),
-          MergeStats(parts, 0, 0, fullRewrite = false))
+        return (m.ngroups, MergeStats(parts, 0, 0, fullRewrite = false))
       // merged group count: old + batch fps that are NEW (absent from the
       // dirty partitions' stored groups — a bounded pruned read)
-      val oldN = s.read.parquet(s"$prev/meta").collect()(0)
-        .getAs[Long]("ngroups")
-      val stored = StorageOps.prunedByVals(loadGroupsRaw(s, dir), "fpart",
+      val stored = StorageOps.prunedByVals(groupsAt(s, live.dir), "fpart",
         dirtyFp, parts)
       val newFps = b.join(stored.select("fp"), Seq("fp"), "left_anti").count()
-      val n2 = oldN + newFps
-      if (layoutPartsFor(n2) != parts) {
+      val n2 = m.ngroups + newFps
+      if (StorageOps.layoutParts(n2, RowsPerPart) != parts) {
         // O(index) fallback: merged table rewritten at the new modulus
-        val merged = loadGroups(s, dir)
+        val merged = groupsAt(s, live.dir).select("fp", "n", "rep")
           .join(b, Seq("fp"), "full_outer")
           .select(col("fp"),
             (coalesce(col("n"), lit(0L)) + coalesce(col("bn"), lit(0L)))
               .as("n"),
             least(col("rep"), col("brep")).as("rep"))
-        publishGroups(s, merged, dir, batchId.getOrElse(-1L))
-        val p2 = loadParts(s, dir)
+        val p2 = StorageOps.layoutParts(
+          publishGroups(s, merged, dir, batchId.getOrElse(-1L)), RowsPerPart)
         return (n2, MergeStats(p2, p2, 0, fullRewrite = true))
       }
       val dirtyRows = stored.select("fp", "n", "rep")
@@ -375,16 +339,17 @@ object FingerprintIndex {
           (coalesce(col("n"), lit(0L)) + coalesce(col("bn"), lit(0L)))
             .as("n"),
           least(col("rep"), col("brep")).as("rep"))
-        .withColumn("fpart", fpartOf(col("fp"), parts))
-      val v = s"v${StorageOps.nextVersion(s, dir)}"
-      dirtyRows.repartition(math.max(1, dirtyFp.length), col("fpart"))
-        .write.partitionBy("fpart")
-        .mode("errorifexists").parquet(s"$dir/$v/groups")
-      val copied = StorageOps.copyCleanParts(s, s"$prev/groups",
-        s"$dir/$v/groups", "fpart", dirtyFp.toSet)
-      writeMeta(s, s"$dir/$v", n2, parts, batchId.getOrElse(-1L))
-      StorageOps.flipPointer(s, dir, v)
-      (n2, MergeStats(parts, dirtyFp.length, copied, fullRewrite = false))
+        .withColumn("fpart", StorageOps.partOf(parts, col("fp")))
+      StorageOps.publishNext(s, dir) { v =>
+        dirtyRows.repartition(math.max(1, dirtyFp.length), col("fpart"))
+          .write.partitionBy("fpart")
+          .mode("errorifexists").parquet(s"$v/groups")
+        val copied = StorageOps.copyCleanParts(s, s"${live.dir}/groups",
+          s"$v/groups", "fpart", dirtyFp.toSet)
+        StorageOps.writeMeta(s, v,
+          m.copy(ngroups = n2, last_batch = batchId.getOrElse(-1L)))
+        (n2, MergeStats(parts, dirtyFp.length, copied, fullRewrite = false))
+      }
     } finally b.unpersist()
   }
 
@@ -398,46 +363,42 @@ object FingerprintIndex {
     * no-publish early-return as [[mergeGroups]]. */
   def mergeBandedSigs(s: SparkSession, dir: String,
       arrivals: DataFrame, batchId: Option[Long] = None): (Long, MergeStats) = {
-    require(isPublished(s, dir), s"no published fingerprint index at $dir")
-    if (replayedBatch(s, dir, batchId))
-      return (loadNGroups(s, dir),
-        MergeStats(loadParts(s, dir), 0, 0, fullRewrite = false))
-    val prev = s"$dir/${ver(s, dir)}"
-    val parts = loadParts(s, dir)
+    val live = openPublished(s, dir)
+    val m = live.meta
+    val parts = m.parts
+    if (replayedBatch(dir, m, batchId))
+      return (m.ngroups, MergeStats(parts, 0, 0, fullRewrite = false))
     // every band derivation in this merge runs at the ARTIFACT's
     // recorded family — a batch banded at the publish default against
     // an escalated artifact would land its rows in partitions no probe
     // at the recorded family ever reads
-    val fam = loadBandFamily(s, dir)
+    val fam = m.bandfam
     val b = graft.Caching.persist(arrivals
       .groupBy("dhash").agg(count(lit(1)).as("bn"), min("doc_id").as("brep")))
     try {
       val dirtyIp: Array[Long] = b
         .select(col("dhash"), explode(expr(bandsExpr("dhash", fam))).as("k"))
-        .select(ipartOf(col("k.band"), col("k.bv"), parts).as("p"))
+        .select(StorageOps.partOf(parts, col("k.band"), col("k.bv")).as("p"))
         .distinct().collect().map(_.getLong(0))
       if (dirtyIp.isEmpty)
-        return (loadNGroups(s, dir),
-          MergeStats(parts, 0, 0, fullRewrite = false))
-      val oldN = s.read.parquet(s"$prev/meta").collect()(0)
-        .getAs[Long]("ngroups")
-      val stored = StorageOps.prunedByVals(loadBandsRaw(s, dir), "ipart",
+        return (m.ngroups, MergeStats(parts, 0, 0, fullRewrite = false))
+      val stored = StorageOps.prunedByVals(bandsAt(s, live.dir), "ipart",
         dirtyIp, parts)
       // a signature's 4 band rows live in the dirty partitions by
       // construction, so the distinct-dhash read here is complete
       val newSigs = b.join(stored.select("dhash").distinct(),
         Seq("dhash"), "left_anti").count()
-      val n2 = oldN + newSigs
-      if (layoutPartsFor(n2) != parts) {
-        val merged = loadBands(s, dir)
+      val n2 = m.ngroups + newSigs
+      if (StorageOps.layoutParts(n2, RowsPerPart) != parts) {
+        val merged = bandsAt(s, live.dir)
           .select("dhash", "n", "rep").distinct()
           .join(b, Seq("dhash"), "full_outer")
           .select(col("dhash"),
             (coalesce(col("n"), lit(0L)) + coalesce(col("bn"), lit(0L)))
               .as("n"),
             least(col("rep"), col("brep")).as("rep"))
-        publishBandedSigs(s, merged, dir, batchId.getOrElse(-1L), fam)
-        val p2 = loadParts(s, dir)
+        val p2 = StorageOps.layoutParts(publishBandedSigs(s, merged, dir,
+          batchId.getOrElse(-1L), fam), RowsPerPart)
         return (n2, MergeStats(p2, p2, 0, fullRewrite = true))
       }
       // refreshed rows for the BATCH signatures only (all 4 band rows —
@@ -458,28 +419,24 @@ object FingerprintIndex {
           explode(expr(bandsExpr("dhash", fam))).as("k"))
         .select(col("k.band").as("band"), col("k.bv").as("bv"),
           col("dhash"), col("n"), col("rep"))
-        .withColumn("ipart", ipartOf(col("band"), col("bv"), parts))
+        .withColumn("ipart", StorageOps.partOf(parts, col("band"), col("bv")))
       val untouched = stored
         .join(b.select("dhash"), Seq("dhash"), "left_anti")
         .select(col("band"), col("bv"), col("dhash"), col("n"), col("rep"))
-        .withColumn("ipart", ipartOf(col("band"), col("bv"), parts))
-      val v = s"v${StorageOps.nextVersion(s, dir)}"
-      refreshed.unionByName(untouched)
-        .repartition(math.max(1, dirtyIp.length), col("ipart"))
-        .write.partitionBy("ipart")
-        .mode("errorifexists").parquet(s"$dir/$v/bands")
-      val copied = StorageOps.copyCleanParts(s, s"$prev/bands",
-        s"$dir/$v/bands", "ipart", dirtyIp.toSet)
-      writeMeta(s, s"$dir/$v", n2, parts, batchId.getOrElse(-1L), fam)
-      StorageOps.flipPointer(s, dir, v)
-      (n2, MergeStats(parts, dirtyIp.length, copied, fullRewrite = false))
+        .withColumn("ipart", StorageOps.partOf(parts, col("band"), col("bv")))
+      StorageOps.publishNext(s, dir) { v =>
+        refreshed.unionByName(untouched)
+          .repartition(math.max(1, dirtyIp.length), col("ipart"))
+          .write.partitionBy("ipart")
+          .mode("errorifexists").parquet(s"$v/bands")
+        val copied = StorageOps.copyCleanParts(s, s"${live.dir}/bands",
+          s"$v/bands", "ipart", dirtyIp.toSet)
+        StorageOps.writeMeta(s, v,
+          m.copy(ngroups = n2, last_batch = batchId.getOrElse(-1L)))
+        (n2, MergeStats(parts, dirtyIp.length, copied, fullRewrite = false))
+      }
     } finally b.unpersist()
   }
-
-  /** Drop all non-active versions beyond the newest `keep` —
-    * [[StorageOps.pruneVersions]] applied to this layout. */
-  def pruneVersions(s: SparkSession, dir: String, keep: Int): Seq[String] =
-    StorageOps.pruneVersions(s, dir, keep)
 
   /** Small-file compaction hook in the [[maintain]] cycle — the
     * [[DedupIndex.compactIfFragmented]]/VectorIndex twin, completing the
@@ -498,30 +455,17 @@ object FingerprintIndex {
     * maintain already skips it when a replayed batch wrote nothing.
     * Returns whether a compaction version was published. */
   def compactIfFragmented(s: SparkSession, dir: String): Boolean = {
-    val v = ver(s, dir)
-    val banded = StorageOps.isCommitted(s, s"$dir/$v/bands")
-    val ds = if (banded) "bands" else "groups"
-    if (!fragmented(s, s"$dir/$v/$ds")) return false
-    val lastBatch = lastAppliedBatch(s, dir).getOrElse(-1L)
+    val live = open(s, dir)
+    val banded = StorageOps.committed(s, live.dir, "bands")
+    if (!StorageOps.fragmented(s,
+        s"${live.dir}/${if (banded) "bands" else "groups"}")) return false
+    val m = live.meta
     if (banded)
       publishBandedSigs(s,
-        loadBands(s, dir).select("dhash", "n", "rep").distinct(),
-        dir, lastBatch, loadBandFamily(s, dir))
-    else publishGroups(s, loadGroups(s, dir), dir, lastBatch)
+        bandsAt(s, live.dir).select("dhash", "n", "rep").distinct(),
+        dir, m.last_batch, m.bandfam)
+    else publishGroups(s, groupsAt(s, live.dir), dir, m.last_batch)
     true
-  }
-
-  /** True iff any partition directory of the dataset holds more than one
-    * data file (one FS listing, no data read). */
-  private def fragmented(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      st.isDirectory && st.getPath.getName.contains("=") &&
-        fs.listStatus(st.getPath).count(f => f.isFile &&
-          !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith(".")) > 1
-    }
   }
 
   /** One production ingest cycle — the family's maintain shape
@@ -580,7 +524,7 @@ object FingerprintIndex {
         }
       }
       compactIfFragmented(s, dir)
-      pruneVersions(s, dir, keep)
+      StorageOps.pruneVersions(s, dir, keep)
     }
     out
   }
@@ -599,9 +543,9 @@ object FingerprintIndex {
     * The aggregates are computed EAGERLY so the candidate frame's
     * persist releases before returning (r16 ADVICE). */
   def probePrecision(s: SparkSession, dir: String): ProbeStats = {
-    val ng = loadNGroups(s, dir)
-    val probeMod = math.max(1L, ng / 500)
-    val bands = loadBands(s, dir)
+    val live = open(s, dir)
+    val probeMod = math.max(1L, live.meta.ngroups / 500)
+    val bands = bandsAt(s, live.dir).select("band", "bv", "dhash", "n", "rep")
     val probe = bands.filter(graft.Tables.phash(col("rep")) % probeMod === 0)
     val cand = graft.Caching.persist(
       probe.alias("p").join(bands.alias("c"),
@@ -629,57 +573,63 @@ object FingerprintIndex {
     * recall. Exact-equality artifacts refuse (no banding); an
     * exhausted ladder fails loudly. Returns the new family. */
   def escalateBandFamily(s: SparkSession, dir: String): Int = {
-    require(isPublished(s, dir), s"no published fingerprint index at $dir")
-    require(StorageOps.isCommitted(s, s"$dir/${ver(s, dir)}/bands"),
+    val live = openPublished(s, dir)
+    require(StorageOps.committed(s, live.dir, "bands"),
       s"cannot escalate the exact-equality (groups) shape at $dir: " +
         "it has no banding")
-    val fam = loadBandFamily(s, dir)
+    val fam = live.meta.bandfam
     val next = fam + 1
     require(next <= MaxFamily,
       s"band-family ladder exhausted at $dir: family $fam is the last " +
         "scatter rung — a still-tripped precision floor now needs a " +
         "wider fingerprint or a lower floor")
     publishBandedSigs(s,
-      loadBands(s, dir).select("dhash", "n", "rep").distinct(),
-      dir, lastAppliedBatch(s, dir).getOrElse(-1L), next)
+      bandsAt(s, live.dir).select("dhash", "n", "rep").distinct(),
+      dir, live.meta.last_batch, next)
     next
   }
 
   /** The active group table, reader-facing schema (fp, n, rep). */
   def loadGroups(s: SparkSession, dir: String): DataFrame =
-    loadGroupsRaw(s, dir).select("fp", "n", "rep")
+    groupsAt(s, StorageOps.currentDir(s, dir)).select("fp", "n", "rep")
 
-  private def loadGroupsRaw(s: SparkSession, dir: String): DataFrame =
-    graft.Chaos.gate(s, s.read.parquet(s"$dir/${ver(s, dir)}/groups"))
+  // corpus-scale datasets of a resolved version dir, with the layout's
+  // partition column, through the chaos read gate
+  private def groupsAt(s: SparkSession, vdir: String): DataFrame =
+    graft.Chaos.gate(s, s.read.parquet(s"$vdir/groups"))
+
+  private[graft] def bandsAt(s: SparkSession, vdir: String): DataFrame =
+    graft.Chaos.gate(s, s.read.parquet(s"$vdir/bands"))
 
   /** The active banded signature table (band, bv, dhash, n, rep). */
   def loadBands(s: SparkSession, dir: String): DataFrame =
-    loadBandsRaw(s, dir).select("band", "bv", "dhash", "n", "rep")
-
-  private def loadBandsRaw(s: SparkSession, dir: String): DataFrame =
-    graft.Chaos.gate(s, s.read.parquet(s"$dir/${ver(s, dir)}/bands"))
+    bandsAt(s, StorageOps.currentDir(s, dir))
+      .select("band", "bv", "dhash", "n", "rep")
 
   /** The group table pruned to the partitions a probe's fingerprint set
     * touches: derives `fpart` values from `fps` (one fp column; the
     * distinct-collect is bounded by the layout modulus) and plants the
     * static isin — [[StorageOps.prunedByVals]], the shared filter. */
   def prunedGroups(s: SparkSession, dir: String, fps: DataFrame): DataFrame = {
-    val nParts = loadParts(s, dir)
+    val live = open(s, dir)
+    val nParts = live.meta.parts
     val parts = fps
-      .select(fpartOf(col(fps.columns.head), nParts).as("p"))
+      .select(StorageOps.partOf(nParts, col(fps.columns.head)).as("p"))
       .distinct().collect().map(_.getLong(0))
-    StorageOps.prunedByVals(loadGroupsRaw(s, dir), "fpart", parts, nParts)
+    StorageOps.prunedByVals(groupsAt(s, live.dir), "fpart", parts, nParts)
       .select("fp", "n", "rep")
   }
 
-  /** The banded table pruned to the partitions a probe's band-key set
-    * touches. `keys`: (band, bv) rows. */
-  def prunedBands(s: SparkSession, dir: String, keys: DataFrame): DataFrame = {
-    val nParts = loadParts(s, dir)
+  /** The banded table of an [[open]]ed version pruned to the partitions a
+    * probe's band-key set touches. `keys`: (band, bv) rows derived at
+    * `live.meta.bandfam`. */
+  def prunedBands(s: SparkSession, live: StorageOps.Version[Meta],
+      keys: DataFrame): DataFrame = {
+    val nParts = live.meta.parts
     val parts = keys
-      .select(ipartOf(col("band"), col("bv"), nParts).as("p"))
+      .select(StorageOps.partOf(nParts, col("band"), col("bv")).as("p"))
       .distinct().collect().map(_.getLong(0))
-    StorageOps.prunedByVals(loadBandsRaw(s, dir), "ipart", parts, nParts)
+    StorageOps.prunedByVals(bandsAt(s, live.dir), "ipart", parts, nParts)
       .select("band", "bv", "dhash", "n", "rep")
   }
 }

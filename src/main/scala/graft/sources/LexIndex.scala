@@ -39,9 +39,9 @@ import org.apache.spark.sql.functions._
   * probe is oracle-identical to the inline twin by construction.
   *
   * Lifecycle scope, stated: publish + crash-safe versioned republish
-  * ([[publishVersioned]] — fresh v-dir + atomic pointer flip, so a
-  * crashed refresh never tears a live reader) + partition-pruned probe
-  * + in-gate stats. The one deferred piece is the siblings'
+  * ([[publishVersioned]] — the shared [[StorageOps.publishNext]] cycle,
+  * resolved by [[StorageOps.currentDir]]) + partition-pruned probe +
+  * in-gate stats. The one deferred piece is the siblings'
   * PARTITION-LEVEL merge (incremental ingest): it applies to this
   * layout unchanged — postings partition by a pure term-hash function
   * like the dedup bands, df maintenance is an additive term-keyed
@@ -49,20 +49,14 @@ import org.apache.spark.sql.functions._
   */
 object LexIndex {
 
-  /** Same layout-parts schedule as the sibling indexes (DedupIndex). */
-  private def layoutPartsFor(nDocs: Long): Int =
-    math.max(64L, math.min(1L << 16, nDocs / (250L * 1000) + 1)).toInt
+  /** Postings rows per layout partition ([[StorageOps.layoutParts]]). */
+  private[graft] val RowsPerPart = 250L * 1000
 
-  private def tpartOf(term: org.apache.spark.sql.Column, nParts: Int) =
-    pmod(xxhash64(term), lit(nParts.toLong))
+  /** The one-row meta: doc count, exact token total, layout modulus. */
+  final case class Meta(ndocs: Long, sumdl: Long, parts: Int)
 
-  private def dpartOf(docId: org.apache.spark.sql.Column, nParts: Int) =
-    pmod(xxhash64(docId), lit(nParts.toLong))
-
-  def isPublished(s: SparkSession, indexDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def isPublished(s: SparkSession, indexDir: String): Boolean =
+    StorageOps.committed(s, indexDir, "meta")
 
   /** Build and publish the index for the corpus at `corpusDir`. Returns
     * the meta totals (ndocs, sumdl).
@@ -91,13 +85,13 @@ object LexIndex {
     try {
       val totals = dl.agg(count(lit(1)).as("n"), sum("dl").as("s")).collect()(0)
       val (nDocs, sumDl) = (totals.getLong(0), totals.getLong(1))
-      val parts = layoutPartsFor(nDocs)
+      val parts = StorageOps.layoutParts(nDocs, RowsPerPart)
       val tf = toks
         .select(col("doc_id"), explode(col("toks")).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       tf.join(dl, "doc_id")
         .select(col("term"), col("doc_id"), col("tf"), col("dl"))
-        .withColumn("tpart", tpartOf(col("term"), parts))
+        .withColumn("tpart", StorageOps.partOf(parts, col("term")))
         .repartition(parts, col("tpart"))
         .write.partitionBy("tpart")
         .mode("overwrite").parquet(s"$indexDir/postings")
@@ -105,53 +99,32 @@ object LexIndex {
       // subplan: the stored pair can then never disagree
       s.read.parquet(s"$indexDir/postings")
         .groupBy("term").agg(count(lit(1)).as("df"))
-        .withColumn("tpart", tpartOf(col("term"), parts))
+        .withColumn("tpart", StorageOps.partOf(parts, col("term")))
         .repartition(parts, col("tpart"))
         .write.partitionBy("tpart")
         .mode("overwrite").parquet(s"$indexDir/terms")
-      dl.withColumn("dpart", dpartOf(col("doc_id"), parts))
+      dl.withColumn("dpart", StorageOps.partOf(parts, col("doc_id")))
         .repartition(parts, col("dpart"))
         .write.partitionBy("dpart")
         .mode("overwrite").parquet(s"$indexDir/docs")
-      import s.implicits._
-      Seq((nDocs, sumDl, parts)).toDF("ndocs", "sumdl", "parts")
-        .write.mode("overwrite").parquet(s"$indexDir/meta")
+      StorageOps.writeMeta(s, indexDir, Meta(nDocs, sumDl, parts))
       (nDocs, sumDl)
     } finally dl.unpersist()
   }
 
-  /** Crash-safe refresh publish: a fresh immutable `v<n>` directory
-    * under `root` + the atomic `_current` pointer flip
-    * ([[StorageOps.flipPointer]]) — a crashed republish leaves a
-    * dangling version dir and the pointer (hence every reader) on the
-    * previous complete artifact. Returns the published version dir;
-    * resolve the live one with [[currentDir]], retire old versions with
-    * [[StorageOps.pruneVersions]]. */
+  /** Crash-safe refresh publish: [[publishFrom]] into the next version
+    * of `root` ([[StorageOps.publishNext]]) — a crashed republish leaves a
+    * dangling version dir and every reader on the previous complete
+    * artifact. Returns the published version dir; resolve the live one
+    * with [[StorageOps.currentDir]]. */
   def publishVersioned(s: SparkSession, corpus: DataFrame,
-      root: String): String = {
-    val v = StorageOps.nextVersion(s, root)
-    val dir = s"$root/v$v"
-    publishFrom(s, corpus, dir)
-    StorageOps.flipPointer(s, root, s"v$v")
-    dir
+      root: String): String =
+    StorageOps.publishNext(s, root) { dir => publishFrom(s, corpus, dir); dir }
+
+  def loadMeta(s: SparkSession, indexDir: String): Meta = {
+    val m = StorageOps.readMeta(s, indexDir)
+    Meta(m[Long]("ndocs"), m[Long]("sumdl"), m[Int]("parts"))
   }
-
-  /** The live version dir under a [[publishVersioned]] root. */
-  def currentDir(s: SparkSession, root: String): String =
-    root + "/" + StorageOps.currentVersion(s, root).getOrElse(
-      throw new IllegalStateException(s"no published lex index at $root"))
-
-  /** All three meta scalars in ONE 1-row parquet read. */
-  def loadMeta(s: SparkSession, indexDir: String): (Long, Long, Int) = {
-    val m = s.read.parquet(s"$indexDir/meta").collect()(0)
-    (m.getAs[Long]("ndocs"), m.getAs[Long]("sumdl"), m.getAs[Int]("parts"))
-  }
-
-  def loadParts(s: SparkSession, indexDir: String): Int = loadMeta(s, indexDir)._3
-
-  def loadNDocs(s: SparkSession, indexDir: String): Long = loadMeta(s, indexDir)._1
-
-  def loadSumDl(s: SparkSession, indexDir: String): Long = loadMeta(s, indexDir)._2
 
   private[graft] def loadPostingsRaw(s: SparkSession, indexDir: String): DataFrame =
     s.read.parquet(s"$indexDir/postings")
@@ -194,10 +167,10 @@ object LexIndex {
   def searchBm25Terms(s: SparkSession, indexDir: String, qterms: DataFrame,
       terms: Seq[String], topK: Int): DataFrame = {
     import s.implicits._
-    val (nDocs, sumDl, parts) = loadMeta(s, indexDir)
+    val Meta(nDocs, sumDl, parts) = loadMeta(s, indexDir)
     // one tiny local job: the terms' partition values (term-bounded)
     val tparts = terms.toDF("term")
-      .select(tpartOf(col("term"), parts).as("tpart"))
+      .select(StorageOps.partOf(parts, col("term")).as("tpart"))
       .distinct().collect().map(_.getLong(0))
     val post = StorageOps.prunedByVals(
         loadPostingsRaw(s, indexDir), "tpart", tparts, parts)

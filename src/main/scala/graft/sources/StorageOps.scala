@@ -37,7 +37,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    `_current` pointer file — a single-object PUT, which object stores
   *    make atomic — so readers see the old or the new version, never a
   *    mix. [[compact]] keeps the rename swap (correct where rename is
-  *    atomic); versioned publish is the object-store-safe twin.
+  *    atomic); versioned publish is the object-store-safe twin. The four
+  *    published indexes (DedupIndex, FingerprintIndex, VectorIndex,
+  *    LexIndex) run their whole lifecycle through the same section:
+  *    [[publishNext]], [[currentDir]]/[[open]], [[readMeta]],
+  *    [[committed]], [[fragmented]], [[pruneVersions]], [[layoutParts]].
   *
   * Scale notes: `partitionBy` creates one directory per key — suitable for
   * low-cardinality partition keys (date, tenant); high-cardinality keys
@@ -180,39 +184,57 @@ object StorageOps {
       .write.mode("overwrite").parquet(outDir)
   }
 
+  // ---- versioned-artifact lifecycle ---------------------------------
+  // Every versioned artifact (the four published indexes and
+  // [[publishVersioned]] tables) is immutable `v<n>` directories plus a
+  // one-line `_current` pointer. This section is the only code that
+  // resolves, publishes, commit-checks, fragmentation-checks, prunes and
+  // lays out those versions, and the only reader of their one-row `meta`.
+
   /** Rename-free dataset publish for object stores: write an immutable
     * `v<n>` version directory under `tableDir`, then flip the one-line
-    * `_current` pointer (single-object PUT — atomic on object stores,
-    * where directory rename is copy+delete). Readers resolve through
+    * `_current` pointer ([[publishNext]]). Readers resolve through
     * [[loadPublished]] and observe the previous or the new version in
-    * full, never a mix; the data write itself still goes through the
-    * normal committer (so a crashed publish leaves a dangling version
-    * directory but never moves the pointer). Returns the published
-    * version number. */
-  def publishVersioned(df: DataFrame, tableDir: String): Int = {
-    val spark = df.sparkSession
-    val next = nextVersion(spark, tableDir)
-    df.write.mode("errorifexists").parquet(s"$tableDir/v$next")
-    flipPointer(spark, tableDir, s"v$next")
-    next
+    * full, never a mix. Returns the published version number. */
+  def publishVersioned(df: DataFrame, tableDir: String): Int =
+    publishNext(df.sparkSession, tableDir) { dir =>
+      df.write.mode("errorifexists").parquet(dir)
+      dir.substring(dir.lastIndexOf("/v") + 2).toInt
+    }
+
+  /** Publish the next version of the artifact at `root`: `write` fills
+    * the fresh `<root>/v<n>` directory, then the pointer flips to it. A
+    * crash inside `write` leaves a dangling version directory (skipped
+    * by the next publish, deleted by [[pruneVersions]]) and never moves
+    * the pointer. Returns what `write` returned. */
+  def publishNext[A](spark: SparkSession, root: String)(
+      write: String => A): A = {
+    val v = s"v${nextVersion(spark, root)}"
+    val out = write(s"$root/$v")
+    flipPointer(spark, root, v)
+    out
   }
 
-  /** Next unused version number under a versioned table/index dir. */
-  private[graft] def nextVersion(spark: SparkSession, tableDir: String): Int = {
-    val root = new Path(tableDir)
-    val fs: FileSystem = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Next unused version number under a versioned table/index dir —
+    * max over every `v<n>` directory, committed or torn. */
+  private def nextVersion(spark: SparkSession, tableDir: String): Int =
+    versionNumbers(spark, new Path(tableDir)).maxOption.getOrElse(0) + 1
+
+  private def versionNumbers(spark: SparkSession, root: Path): Seq[Int] = {
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val vrx = """v(\d+)""".r
-    (if (fs.exists(root))
-      fs.listStatus(root).flatMap(_.getPath.getName match {
-        case vrx(n) => Some(n.toInt)
-        case _ => None
-      }).maxOption.getOrElse(0)
-    else 0) + 1
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.flatMap(_.getPath.getName match {
+      case vrx(n) => Some(n.toInt)
+      case _ => None
+    })
   }
 
-  /** Atomically point `tableDir/_current` at `version` — the shared flip
-    * step of [[publishVersioned]] and the multi-dataset index publishes
-    * ([[VectorIndex]]), store-aware on both branches. */
+  /** Prefix of the temp file a POSIX pointer flip stages and renames. */
+  private val PointerTmpPrefix = "._current_tmp_"
+
+  /** Atomically point `tableDir/_current` at `version`, store-aware on
+    * both branches. Called by [[publishNext]] only. */
   private[graft] def flipPointer(spark: SparkSession, tableDir: String,
       version: String): Unit = {
     val root = new Path(tableDir)
@@ -233,7 +255,7 @@ object StorageOps {
       // existing destination, hence delete+rename: the worst crash
       // window leaves NO pointer (readers fail loudly; every version
       // directory stays intact) — never a torn or mixed dataset.
-      val tmp = new Path(root, s"._current_tmp_$version")
+      val tmp = new Path(root, PointerTmpPrefix + version)
       val out = fs.create(tmp, true)
       out.write(version.getBytes("UTF-8"))
       out.close()
@@ -255,9 +277,7 @@ object StorageOps {
   def compactVersioned(spark: SparkSession, tableDir: String,
       targetBytes: Long): (Int, Int, Int) = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val cur = currentVersion(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no published version at $tableDir"))
-    val curDir = new Path(s"$tableDir/$cur")
+    val curDir = new Path(currentDir(spark, tableDir))
     val fs = curDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dataFiles(p: Path) = fs.listStatus(p)
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
@@ -270,11 +290,8 @@ object StorageOps {
   }
 
   /** Resolve the `_current` pointer and load the active version. */
-  def loadPublished(spark: SparkSession, tableDir: String): DataFrame = {
-    val cur = currentVersion(spark, tableDir).getOrElse(
-      throw new IllegalStateException(s"no published version at $tableDir"))
-    spark.read.parquet(s"$tableDir/$cur")
-  }
+  def loadPublished(spark: SparkSession, tableDir: String): DataFrame =
+    spark.read.parquet(currentDir(spark, tableDir))
 
   /** The active version name (e.g. "v3"), if any publish completed. */
   def currentVersion(spark: SparkSession, tableDir: String): Option[String] = {
@@ -291,25 +308,122 @@ object StorageOps {
     }
   }
 
-  /** Drop all but the newest `keep` version directories (and any dangling
-    * pointer temp files) — the retention pass of the publish cycle. The
-    * active version is never deleted. Returns deleted dir names. */
+  /** The active version's directory under a versioned `root` — THE
+    * version resolver: `_current` is read once, and a root without a
+    * pointer fails with an error naming it. */
+  def currentDir(spark: SparkSession, root: String): String =
+    s"$root/${currentVersion(spark, root).getOrElse(
+      throw new IllegalStateException(s"no published version at $root"))}"
+
+  /** One resolved version of a versioned artifact: the directory the
+    * pointer named when [[open]] ran, and that version's meta, read
+    * once. Every read handed this pair sees the same version, whatever
+    * a concurrent publish flips meanwhile. */
+  final case class Version[M](dir: String, meta: M)
+
+  /** Resolve `root` once and read its active version's meta once. */
+  def open[M](spark: SparkSession, root: String)(
+      meta: String => M): Version[M] = {
+    val dir = currentDir(spark, root)
+    Version(dir, meta(dir))
+  }
+
+  /** True iff every named dataset under `dir` committed — an
+    * artifact's reader-side publish gate. */
+  def committed(spark: SparkSession, dir: String, datasets: String*): Boolean =
+    datasets.forall(ds => isCommitted(spark, s"$dir/$ds"))
+
+  /** True iff any partition directory of the dataset at `path` holds
+    * more than one data file — the one-file-per-partition layout
+    * invariant every index writer keeps, checked by one FS listing (no
+    * data read) before a compaction republish. */
+  def fragmented(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists { st =>
+      st.isDirectory && st.getPath.getName.contains("=") &&
+        fs.listStatus(st.getPath).count(f => f.isFile &&
+          !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith(".")) > 1
+    }
+  }
+
+  /** Drop all but the newest `keep` version directories, and any pointer
+    * temp file a crashed [[flipPointer]] left behind — the retention
+    * pass of the publish cycle. The active version and `_current` itself
+    * are never deleted. Returns the deleted version names. */
   def pruneVersions(spark: SparkSession, tableDir: String, keep: Int): Seq[String] = {
     require(keep >= 1, "keep must be >= 1")
     val root = new Path(tableDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
-    val vrx = """v(\d+)""".r
+    fs.listStatus(root)
+      .filter(_.getPath.getName.startsWith(PointerTmpPrefix))
+      .foreach(st => fs.delete(st.getPath, false))
     val active = currentVersion(spark, tableDir)
-    val versions = fs.listStatus(root).flatMap(_.getPath.getName match {
-      case vrx(n) => Some(n.toInt)
-      case _ => None
-    }).sorted(Ordering.Int.reverse)
-    versions.drop(keep).map(n => s"v$n")
+    versionNumbers(spark, root).sorted(Ordering.Int.reverse)
+      .drop(keep).map(n => s"v$n")
       .filterNot(active.contains)
       .filter(v => fs.delete(new Path(root, v), true))
-      .toSeq
   }
+
+  /** Hash-partition count of an index dataset holding `n` rows: floor 64
+    * (directory listings stay trivial, a small probe still gets a ~64×
+    * read cut), one more partition per `rowsPerPart` rows, capped at 64k
+    * directories. Layout-only — a republish at a different count changes
+    * no key. Each index states its own `RowsPerPart`. */
+  def layoutParts(n: Long, rowsPerPart: Long): Int =
+    math.max(64L, math.min(1L << 16, n / rowsPerPart + 1)).toInt
+
+  /** The hive partition value of a row: `pmod(xxhash64(cols), n)` — a
+    * pure function of the key columns, so a probe derives the partitions
+    * it must read from its own keys. */
+  def partOf(n: Int,
+      cols: org.apache.spark.sql.Column*): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
+    pmod(xxhash64(cols: _*), lit(n.toLong))
+  }
+
+  /** An artifact's one-row `meta` dataset as read by [[readMeta]].
+    * `apply(field)` is a field every generation of the artifact records
+    * (an error naming the path when absent); `apply(field, legacy)` is
+    * one an older writer may not have recorded, read as `legacy` then. */
+  final class MetaRow private[StorageOps] (path: String,
+      row: Option[org.apache.spark.sql.Row]) {
+    private def has(field: String) =
+      row.exists(_.schema.fieldNames.contains(field))
+    def apply[T](field: String): T =
+      if (has(field)) row.get.getAs[T](field)
+      else throw new IllegalStateException(row.fold(
+        s"no meta dataset at $path")(_ => s"meta at $path records no `$field`"))
+    def apply[T](field: String, legacy: => T): T =
+      if (has(field)) row.get.getAs[T](field) else legacy
+  }
+
+  /** Read `<dir>/meta` ONCE. A dataset holding anything but exactly one
+    * row (a torn or foreign write) fails with an error naming the path;
+    * an absent dataset reads as a row with no fields, so required
+    * fields fail by name and legacy ones take their defaults. */
+  def readMeta(spark: SparkSession, dir: String): MetaRow = {
+    val p = new Path(dir, "meta")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val row =
+      if (!fs.exists(p)) None
+      else spark.read.parquet(p.toString).collect() match {
+        case Array(r) => Some(r)
+        case rows => throw new IllegalStateException(
+          s"meta at $p holds ${rows.length} rows, expected exactly one " +
+            "(torn or foreign write)")
+      }
+    new MetaRow(p.toString, row)
+  }
+
+  /** Write `meta` (a case class whose field names are the stored column
+    * names) as the one-row `<dir>/meta` dataset. */
+  def writeMeta[M <: Product : scala.reflect.runtime.universe.TypeTag](
+      spark: SparkSession, dir: String, meta: M): Unit =
+    spark.createDataFrame(Seq(meta)).write.mode("overwrite")
+      .parquet(s"$dir/meta")
 
   /** Z-order (Morton) value of two NON-NEGATIVE integral columns:
     * interleaves the low `bits` bits of each (a in even positions, b in

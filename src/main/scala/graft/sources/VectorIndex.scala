@@ -28,12 +28,13 @@ import graft.functions.GraftFunctions
   *                          [[searchIvfPq]] ADC scan side
   *   <dir>/_current         pointer to the active version
   *
-  * Version directories are IMMUTABLE; a publish writes the next v<n> and
-  * flips the one-line pointer ([[StorageOps.flipPointer]] — a single PUT
-  * on object stores), so a reader mid-probe keeps a fully consistent
-  * index and [[mergePublish]] needs no "beside the live dir" contortion:
-  * the new version IS beside the live one by construction. The pointer
-  * covers all four datasets at once — no torn meta-vs-buckets reads.
+  * Version directories are IMMUTABLE and run the shared lifecycle of
+  * [[StorageOps]]: a publish fills the next v<n> and flips the one-line
+  * pointer ([[StorageOps.publishNext]]), so [[mergePublish]] needs no
+  * "beside the live dir" contortion. Every public read [[open]]s the
+  * index ONCE — one pointer read, one meta read — and hands that
+  * resolved version down, so a concurrent flip can never pair one
+  * version's meta or centroids with another version's lists.
   *
   * SCHEDULE FREEZE — the merge-vs-rebuild contract: `meta` records the
   * geometry (signature width, probe count, bucket cap, cell count) the
@@ -55,11 +56,12 @@ import graft.functions.GraftFunctions
   * `bpart = xxhash64(bucket) mod parts` and `cells` by
   * `cpart = cell mod parts`, where `parts` is a per-version LAYOUT
   * constant derived from the corpus size at publish
-  * ([[layoutPartsFor]]) and recorded in `meta`; each version is
-  * repartitioned by its partition column so every partition directory
-  * holds ONE file. The partition column is a pure function of the join
-  * key, so `parts` is layout-only, NOT frozen geometry — a merge or
-  * rebuild re-derives it at the new count without invalidating keys.
+  * ([[StorageOps.layoutParts]] at [[RowsPerPart]]) and recorded in
+  * `meta`; each version is repartitioned by its partition column so
+  * every partition directory holds ONE file. The partition column is a
+  * pure function of the join key, so `parts` is layout-only, NOT frozen
+  * geometry — a merge or rebuild re-derives it at the new count without
+  * invalidating keys.
   * A probe whose batch is below the hint gate reads only its derived
   * partitions: [[searchLsh]]/[[searchIvf]]/[[probeBestMatch]] collect
   * the batch's partition-value set (≤ `parts` rows, never the batch
@@ -115,6 +117,9 @@ object VectorIndex {
   def pqBudget(m: Meta): (Int, Int) =
     if (m.pqm > 0) (m.pqm, m.pqk) else (4, 16)
 
+  /** One [[open]]ed version: its directory and its meta. */
+  private[graft] type Live = StorageOps.Version[Meta]
+
   /** What a [[mergePublishStats]] actually wrote, per partitioned
     * dataset: how many partition directories were REWRITTEN (dirty — they
     * contain batch rows or rows of replaced ids) vs hard-copied verbatim
@@ -130,16 +135,10 @@ object VectorIndex {
       copiedBucketParts: Int, dirtyCellParts: Int, copiedCellParts: Int,
       fullRewrite: Boolean, drainRecompute: Boolean)
 
-  /** Hash-partition count for a version's `buckets` / `cells` layout,
-    * derived from the corpus size at publish: floor 64 (directory
-    * listings stay trivial, a small-batch probe still gets a ~64× read
-    * cut), growing one partition per ~4M vectors (~a few hundred MB of
-    * embedding payload per file at 1k dims), capped at 64k directories.
-    * One file per partition by construction (writeVersion repartitions
-    * by the partition column into `parts` tasks), so writer parallelism
-    * scales with the corpus instead of a hard-coded 64. */
-  private[graft] def layoutPartsFor(n: Long): Int =
-    math.max(64L, math.min(1L << 16, n / (4L * 1000 * 1000) + 1)).toInt
+  /** Vectors per layout partition of `buckets` / `cells`
+    * ([[StorageOps.layoutParts]]): ~a few hundred MB of embedding
+    * payload per file at 1k dims. */
+  private[graft] val RowsPerPart = 4L * 1000 * 1000
 
   /** Broadcast budget for a CALLER's query batch, in rows. At ~4 KB per
     * row (int64 + a ~1k-dim float embedding + probe fan-out) the default
@@ -164,7 +163,7 @@ object VectorIndex {
   }
 
   private def bpartOf(bucket: org.apache.spark.sql.Column, nParts: Int) =
-    pmod(xxhash64(bucket), lit(nParts.toLong))
+    StorageOps.partOf(nParts, bucket)
   private def cpartOf(cell: org.apache.spark.sql.Column, nParts: Int) =
     pmod(cell.cast("long"), lit(nParts.toLong))
 
@@ -173,23 +172,13 @@ object VectorIndex {
     * column of DERIVED partition values (bpartOf/cpartOf over the batch
     * — not the read-back partition column, whose hive-inferred type is
     * IntegerType), so the distinct-collect is bounded by `nParts`, never
-    * the batch size. The literals are rebased to the scan column's
-    * inferred type so the `isin` stays a static partition filter (a cast
-    * around the attribute would block pruning). Returns the scan
-    * unchanged when every partition is touched: the filter would prune
-    * nothing and its only effect would be plan noise. */
+    * the batch size; [[StorageOps.prunedByVals]] plants the filter. */
   private def prunedScan(idx: DataFrame, partVals: DataFrame,
       partCol: String, nParts: Int): DataFrame = {
     if (nParts <= 0 || !idx.columns.contains(partCol)) return idx // legacy
     val parts = partVals.distinct().collect().map(_.getLong(0))
-    prunedByVals(idx, partCol, parts, nParts)
-  }
-
-  /** [[prunedScan]] with an already-collected partition-value set —
-    * [[StorageOps.prunedByVals]], the shared static-pruning filter. */
-  private def prunedByVals(idx: DataFrame, partCol: String,
-      parts: Array[Long], nParts: Int): DataFrame =
     StorageOps.prunedByVals(idx, partCol, parts, nParts)
+  }
 
   /** The probe-side frame of a gated search call. Below the gate the
     * derived batch frame (probe explode / centroid rank) is PERSISTED so
@@ -252,71 +241,57 @@ object VectorIndex {
       Option(armedBatchFrames.get(s)).map(_.size).getOrElse(0)
     }
 
-  private def ver(s: SparkSession, dir: String): String =
-    StorageOps.currentVersion(s, dir).getOrElse(
-      throw new IllegalStateException(s"no published vector index at $dir"))
+  /** The active version and its [[Meta]], resolved and read ONCE — the
+    * handle every public read passes down. Fields an older writer did not
+    * record read as their legacy values: `parts` 0 (pre-partitioned
+    * layout: probes full-scan, the next merge rewrites), `pqres` false
+    * (raw-encoded), `pqm`/`pqk` 0 (the fixed (4, 16) budget, see
+    * [[pqBudget]]), `wboost` 0 (no width escalation). */
+  def open(s: SparkSession, dir: String): StorageOps.Version[Meta] =
+    StorageOps.open(s, dir) { v =>
+      val m = StorageOps.readMeta(s, v)
+      Meta(m[Long]("n"), m[Int]("width"), m[Int]("probes"), m[Long]("cap"),
+        m[Int]("cells"), m("parts", 0), m("pqres", false), m("pqm", 0),
+        m("pqk", 0), m("wboost", 0))
+    }
+
+  def loadMeta(s: SparkSession, dir: String): Meta = open(s, dir).meta
 
   /** True iff a version pointer exists and every dataset of that version
     * committed — the reader-side gate (DedupIndex.isPublished shape). */
   def isPublished(s: SparkSession, dir: String): Boolean =
-    StorageOps.currentVersion(s, dir).exists { v =>
-      Seq("meta", "buckets", "centroids", "cells")
-        .forall(ds => StorageOps.isCommitted(s, s"$dir/$v/$ds"))
-    }
+    StorageOps.currentVersion(s, dir).exists(v => published(s, s"$dir/$v"))
 
-  def loadMeta(s: SparkSession, dir: String): Meta = {
-    val df = s.read.parquet(s"$dir/${ver(s, dir)}/meta")
-    val r = df.collect()(0)
-    // pre-partitioned-layout artifacts have no `parts` field: report 0
-    // (legacy) instead of crashing — probes degrade to the full scan
-    val parts =
-      if (df.schema.fieldNames.contains("parts")) r.getAs[Int]("parts") else 0
-    // pre-residual artifacts have no `pqres` field: raw-encoded (same
-    // legacy convention as `parts`) — ONE meta read serves geometry,
-    // layout AND encode mode, so the searches never pay a second scan
-    val pqres = df.schema.fieldNames.contains("pqres") &&
-      r.getAs[Boolean]("pqres")
-    // pre-schedule artifacts have no recorded PQ budget: 0 marks legacy
-    // and [[pqBudget]] maps it to the fixed (4, 16) they were built with
-    val (pqm, pqk) =
-      if (df.schema.fieldNames.contains("pqm"))
-        (r.getAs[Int]("pqm"), r.getAs[Int]("pqk"))
-      else (0, 0)
-    // pre-r17 artifacts have no width-escalation rung recorded: boost 0
-    val wboost =
-      if (df.schema.fieldNames.contains("wboost")) r.getAs[Int]("wboost")
-      else 0
-    Meta(r.getAs[Long]("n"), r.getAs[Int]("width"), r.getAs[Int]("probes"),
-      r.getAs[Long]("cap"), r.getAs[Int]("cells"), parts, pqres, pqm, pqk,
-      wboost)
+  private def published(s: SparkSession, vdir: String): Boolean =
+    StorageOps.committed(s, vdir, "meta", "buckets", "centroids", "cells")
+
+  /** A dataset of a resolved version dir, partition column included;
+    * the corpus-scale ones (buckets, cells, codes) route through the
+    * chaos read gate (graft.Chaos — a no-op frame at the default
+    * probability 0, so pruning/pushdown pins hold; under injection the
+    * probe queries must stay bit-identical through Spark's task
+    * retries, ChaosSpec). */
+  private[graft] def at(s: SparkSession, vdir: String, ds: String): DataFrame = {
+    val df = s.read.parquet(s"$vdir/$ds")
+    if (Set("buckets", "cells", "codes")(ds)) graft.Chaos.gate(s, df) else df
   }
 
   /** The active bucket table, WITHOUT the layout's partition column —
     * the reader-facing schema is (bucket, vec_id, embedding) exactly;
     * `bpart` is derivable from `bucket` whenever a consumer wants the
-    * pruned scan (the search APIs read [[loadBucketsRaw]] through
-    * [[prunedScan]] and drop `bpart` after the filter). */
+    * pruned scan. */
   def loadBuckets(s: SparkSession, dir: String): DataFrame =
-    loadBucketsRaw(s, dir).select("bucket", "vec_id", "embedding")
-
-  // corpus-scale index datasets route through the chaos read gate
-  // (graft.Chaos — a no-op frame at the default probability 0, so
-  // pruning/pushdown pins hold; under injection the probe queries must
-  // stay bit-identical through Spark's task retries, ChaosSpec)
-  private def loadBucketsRaw(s: SparkSession, dir: String): DataFrame =
-    graft.Chaos.gate(s, s.read.parquet(s"$dir/${ver(s, dir)}/buckets"))
+    at(s, StorageOps.currentDir(s, dir), "buckets")
+      .select("bucket", "vec_id", "embedding")
 
   def loadCentroids(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/${ver(s, dir)}/centroids")
-      .select("cell", "centroid")
+    at(s, StorageOps.currentDir(s, dir), "centroids").select("cell", "centroid")
 
   /** The active inverted lists as (cell, vec_id, embedding) — see
     * [[loadBuckets]] on the dropped partition column. */
   def loadCells(s: SparkSession, dir: String): DataFrame =
-    loadCellsRaw(s, dir).select("cell", "vec_id", "embedding")
-
-  private def loadCellsRaw(s: SparkSession, dir: String): DataFrame =
-    graft.Chaos.gate(s, s.read.parquet(s"$dir/${ver(s, dir)}/cells"))
+    at(s, StorageOps.currentDir(s, dir), "cells")
+      .select("cell", "vec_id", "embedding")
 
   /** Cosine floor the LSH bucket-precision probe verifies candidates
     * against — the corpus near-dup threshold (0.45) every embedding
@@ -338,11 +313,15 @@ object VectorIndex {
     * independent of corpus size. Eager ([[ProbeStats]]); the
     * q_index_stats health surface publishes it into the DuckDB gate
     * (bucket assignment replays portably — the lshCtes convention). */
-  def lshProbePrecision(s: SparkSession, dir: String): ProbeStats = {
+  def lshProbePrecision(s: SparkSession, dir: String): ProbeStats =
+    lshPrecisionAt(s, open(s, dir))
+
+  /** [[lshProbePrecision]] of an [[open]]ed version. */
+  private[graft] def lshPrecisionAt(s: SparkSession, live: Live): ProbeStats = {
     GraftFunctions.register(s)
-    val m = loadMeta(s, dir)
-    val mod = math.max(1L, m.n / 500)
-    val probe = loadBuckets(s, dir)
+    val mod = math.max(1L, live.meta.n / 500)
+    val probe = at(s, live.dir, "buckets")
+      .select("bucket", "vec_id", "embedding")
       .filter(Tables.phash(col("vec_id")) % mod === 0)
     val cand = graft.Caching.persist(
       probe.alias("a").join(probe.alias("b"),
@@ -365,29 +344,18 @@ object VectorIndex {
     * [[searchIvfPq]] refuses with a clear error instead of a missing-
     * path crash; merges of a non-PQ index stay non-PQ. */
   def hasPq(s: SparkSession, dir: String): Boolean =
-    StorageOps.currentVersion(s, dir).exists { v =>
-      Seq("pqbooks", "codes")
-        .forall(ds => StorageOps.isCommitted(s, s"$dir/$v/$ds"))
-    }
+    StorageOps.currentVersion(s, dir).exists(v => hasPqAt(s, s"$dir/$v"))
+
+  private[graft] def hasPqAt(s: SparkSession, vdir: String): Boolean =
+    StorageOps.committed(s, vdir, "pqbooks", "codes")
 
   /** The frozen PQ sub-codebooks of the active version as
-    * (m, cell, pc) — driver-small (M·K·subDim floats) at any corpus. */
-  /** True iff the active version's PQ pair is RESIDUAL-encoded (books
-    * trained and codes computed over x − centroid(cell(x)) instead of
-    * the raw vectors). Carried as [[Meta.pqres]] (artifacts written
-    * before the column existed read raw, like the legacy `parts`
-    * handling); the flag decides the SEARCH-side lookup-table
-    * construction ([[searchIvfPq]] / [[searchIvfPqRefine]]: per-(query,
-    * probed cell) residual LUT vs per-query LUT) and the merge/rebuild
-    * encode input — codes and books are a matched pair, so the flag
-    * rides the meta, not the caller's memory. This helper is a
-    * convenience read; paths that already hold a Meta use its field
-    * (no second meta scan). */
-  def pqResidual(s: SparkSession, dir: String): Boolean =
-    loadMeta(s, dir).pqres
-
+    * (m, cell, pc) — driver-small (M·K·subDim floats) at any corpus.
+    * Whether they are RESIDUAL-encoded (trained over
+    * x − centroid(cell(x))) is [[Meta.pqres]]: codes and books are a
+    * matched pair, so the flag rides the meta, not the caller's memory. */
   def loadPqBooks(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/${ver(s, dir)}/pqbooks").select("m", "cell", "pc")
+    at(s, StorageOps.currentDir(s, dir), "pqbooks").select("m", "cell", "pc")
 
   /** The active PQ code rows as (cell, vec_id, code: array<int>) — one
     * row per corpus vector, cell-aligned with [[loadCells]] (same
@@ -398,7 +366,7 @@ object VectorIndex {
     * schema (a merge of such an artifact upgrades the stored layout —
     * see [[mergePublishStats]]'s legacy route). */
   def loadCodes(s: SparkSession, dir: String): DataFrame =
-    normalizeCodes(loadCodesRaw(s, dir))
+    normalizeCodes(at(s, StorageOps.currentDir(s, dir), "codes"))
 
   /** The ONE legacy-schema normalization (pre-schedule c0..c3 columns →
     * the code array) — shared by [[loadCodes]] and the searches' pruned
@@ -411,19 +379,23 @@ object VectorIndex {
     else raw.select(col("cell"), col("vec_id"),
       array(col("c0"), col("c1"), col("c2"), col("c3")).as("code"))
 
-  private def loadCodesRaw(s: SparkSession, dir: String): DataFrame =
-    graft.Chaos.gate(s, s.read.parquet(s"$dir/${ver(s, dir)}/codes"))
-
   /** The searches' code scan: partition-pruned below the batch gate,
     * normalized to the (cell, vec_id, code) array schema either way
     * (legacy c0..c3 artifacts included — the array build is a pure
     * projection AFTER the partition filter, so pruning is unaffected). */
-  private def codesScan(s: SparkSession, dir: String, small: Boolean,
-      qcells: DataFrame, m: Meta): DataFrame =
-    normalizeCodes(if (small)
-        prunedScan(loadCodesRaw(s, dir),
-          qcells.select(cpartOf(col("qcell"), m.parts)), "cpart", m.parts)
-      else loadCodesRaw(s, dir))
+  private def codesScan(s: SparkSession, live: Live, small: Boolean,
+      qcells: DataFrame): DataFrame =
+    normalizeCodes(cellScan(s, live, "codes", small, qcells))
+
+  /** A cell-aligned dataset (cells or codes) of `live`, pruned to the
+    * probed cells' partitions below the batch gate. */
+  private def cellScan(s: SparkSession, live: Live, ds: String,
+      small: Boolean, qcells: DataFrame): DataFrame = {
+    val raw = at(s, live.dir, ds)
+    if (!small) raw
+    else prunedScan(raw, qcells.select(cpartOf(col("qcell"), live.meta.parts)),
+      "cpart", live.meta.parts)
+  }
 
   /** Depth (rows per probe query) of the stored recall ground truth —
     * audits at any k <= GtDepth read the store instead of re-scanning
@@ -440,9 +412,10 @@ object VectorIndex {
     * published via `publishFrom(gtProbe = ...)`. Without it,
     * [[recallAudit]] falls back to the live brute scan. */
   def hasGt(s: SparkSession, dir: String): Boolean =
-    StorageOps.currentVersion(s, dir).exists { v =>
-      Seq("gt", "gtq").forall(ds => StorageOps.isCommitted(s, s"$dir/$v/$ds"))
-    }
+    StorageOps.currentVersion(s, dir).exists(v => hasGtAt(s, s"$dir/$v"))
+
+  private def hasGtAt(s: SparkSession, vdir: String): Boolean =
+    StorageOps.committed(s, vdir, "gt", "gtq")
 
   /** The stored ground-truth PROBE QUERIES (query_id, embedding) —
     * sampled-small by the [[recallAudit]] cost contract. Maintenance
@@ -450,7 +423,10 @@ object VectorIndex {
     * on a merge that replaces a probe query's own vector), so this
     * frame always scores against what the index actually holds. */
   def loadGtq(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/${ver(s, dir)}/gtq").select("query_id", "embedding")
+    gtqAt(s, StorageOps.currentDir(s, dir))
+
+  private def gtqAt(s: SparkSession, vdir: String): DataFrame =
+    at(s, vdir, "gtq").select("query_id", "embedding")
 
   /** The stored exact-cosine top-[[GtDepth]] neighbor lists
     * (query_id, neighbor_id, sim, rk) over the artifact's own corpus,
@@ -463,8 +439,10 @@ object VectorIndex {
     * on the heartbeat delta, not a full rescan
     * (ShuffleWorkerStatusManager.java:90-130). */
   def loadGt(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/${ver(s, dir)}/gt")
-      .select("query_id", "neighbor_id", "sim", "rk")
+    gtAt(s, StorageOps.currentDir(s, dir))
+
+  private def gtAt(s: SparkSession, vdir: String): DataFrame =
+    at(s, vdir, "gt").select("query_id", "neighbor_id", "sim", "rk")
 
   /** Exact-cosine top-`depth` of every probe query against `corpus`
     * (vec_id, embedding), self-excluded, ranked by (sim desc,
@@ -518,7 +496,8 @@ object VectorIndex {
         else (0, 0)
       val meta = Meta(n, width, VectorOps.LshProbes,
         VectorOps.knnCapFor(n, width), VectorOps.ivfCellsFor(n),
-        layoutPartsFor(n), pqres = pq && pqResidual, pqm = pqm, pqk = pqk,
+        StorageOps.layoutParts(n, RowsPerPart), pqres = pq && pqResidual,
+        pqm = pqm, pqk = pqk,
         wboost = width - VectorOps.lshWidthFor(n))
       val cent = VectorOps.trainCentroids(s,
         c.filter(Tables.phash(col("vec_id")) % 4 === 0), meta.cells)
@@ -600,7 +579,8 @@ object VectorIndex {
   }
 
   /** Write all four datasets as the next immutable version, then flip the
-    * pointer. The pointer moves only after every dataset committed.
+    * pointer ([[StorageOps.publishNext]]): it moves only after every
+    * dataset committed.
     * `buckets`/`cells` land hive-partitioned by their derived partition
     * column, repartitioned BY that column first so each partition
     * directory holds one file (a value hashes to exactly one task) —
@@ -610,45 +590,36 @@ object VectorIndex {
       pqBooks: Option[DataFrame] = None,
       codes: Option[DataFrame] = None,
       gtq: Option[DataFrame] = None,
-      gt: Option[DataFrame] = None): Meta = {
-    import s.implicits._
-    val v = s"v${StorageOps.nextVersion(s, dir)}"
-    // `pqres` marks residual-encoded books/codes (see [[pqResidual]]);
-    // `pqm`/`pqk` record the scheduled PQ budget; artifacts written
-    // before either column existed read as raw-encoded / (4, 16)
-    Seq((meta.n, meta.width, meta.probes, meta.cap, meta.cells, meta.parts,
-        meta.pqres, meta.pqm, meta.pqk, meta.wboost))
-      .toDF("n", "width", "probes", "cap", "cells", "parts", "pqres",
-        "pqm", "pqk", "wboost")
-      .write.mode("errorifexists").parquet(s"$dir/$v/meta")
-    buckets.select("bucket", "vec_id", "embedding")
-      .withColumn("bpart", bpartOf(col("bucket"), meta.parts))
-      .repartition(meta.parts, col("bpart"))
-      .write.partitionBy("bpart")
-      .mode("errorifexists").parquet(s"$dir/$v/buckets")
-    cent.select("cell", "centroid")
-      .write.mode("errorifexists").parquet(s"$dir/$v/centroids")
-    cells.select("cell", "vec_id", "embedding")
-      .withColumn("cpart", cpartOf(col("cell"), meta.parts))
-      .repartition(meta.parts, col("cpart"))
-      .write.partitionBy("cpart")
-      .mode("errorifexists").parquet(s"$dir/$v/cells")
-    pqBooks.foreach(_.select("m", "cell", "pc")
-      .write.mode("errorifexists").parquet(s"$dir/$v/pqbooks"))
-    codes.foreach(_.select("cell", "vec_id", "code")
-      .withColumn("cpart", cpartOf(col("cell"), meta.parts))
-      .repartition(meta.parts, col("cpart"))
-      .write.partitionBy("cpart")
-      .mode("errorifexists").parquet(s"$dir/$v/codes"))
-    // the optional ground-truth pair: |probe| and |probe| x GtDepth rows
-    // — single-file datasets at any corpus size (the probe is sampled)
-    gtq.foreach(_.select("query_id", "embedding").coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dir/$v/gtq"))
-    gt.foreach(_.select("query_id", "neighbor_id", "sim", "rk").coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dir/$v/gt"))
-    StorageOps.flipPointer(s, dir, v)
-    meta
-  }
+      gt: Option[DataFrame] = None): Meta =
+    StorageOps.publishNext(s, dir) { v =>
+      StorageOps.writeMeta(s, v, meta)
+      buckets.select("bucket", "vec_id", "embedding")
+        .withColumn("bpart", bpartOf(col("bucket"), meta.parts))
+        .repartition(meta.parts, col("bpart"))
+        .write.partitionBy("bpart")
+        .mode("errorifexists").parquet(s"$v/buckets")
+      cent.select("cell", "centroid")
+        .write.mode("errorifexists").parquet(s"$v/centroids")
+      cells.select("cell", "vec_id", "embedding")
+        .withColumn("cpart", cpartOf(col("cell"), meta.parts))
+        .repartition(meta.parts, col("cpart"))
+        .write.partitionBy("cpart")
+        .mode("errorifexists").parquet(s"$v/cells")
+      pqBooks.foreach(_.select("m", "cell", "pc")
+        .write.mode("errorifexists").parquet(s"$v/pqbooks"))
+      codes.foreach(_.select("cell", "vec_id", "code")
+        .withColumn("cpart", cpartOf(col("cell"), meta.parts))
+        .repartition(meta.parts, col("cpart"))
+        .write.partitionBy("cpart")
+        .mode("errorifexists").parquet(s"$v/codes"))
+      // the optional ground-truth pair: |probe| and |probe| x GtDepth rows
+      // — single-file datasets at any corpus size (the probe is sampled)
+      gtq.foreach(_.select("query_id", "embedding").coalesce(1)
+        .write.mode("errorifexists").parquet(s"$v/gtq"))
+      gt.foreach(_.select("query_id", "neighbor_id", "sim", "rk").coalesce(1)
+        .write.mode("errorifexists").parquet(s"$v/gt"))
+      meta
+    }
 
   /** Incremental ingest — merge a batch of (vec_id, embedding) into the
     * published index as the next version. Geometry and centroids are
@@ -694,32 +665,35 @@ object VectorIndex {
     * (`fullRewrite`), which doubles as the artifact's upgrade path. */
   def mergePublishStats(s: SparkSession, dir: String,
       batch: DataFrame): (Meta, MergeStats) = {
-    require(isPublished(s, dir), s"no published vector index at $dir")
     GraftFunctions.register(s)
-    val m = loadMeta(s, dir)
-    val prev = s"$dir/${ver(s, dir)}"
+    val live = open(s, dir)
+    require(published(s, live.dir), s"no published vector index at $dir")
+    val (m, prev) = (live.meta, live.dir)
     val b = graft.Caching.persist(
       batch.select(col("vec_id"), col("embedding")))
     try {
       val ids = b.select("vec_id")
-      val cent = loadCentroids(s, dir)
+      val cent = at(s, prev, "centroids").select("cell", "centroid")
       // PQ books are frozen at merge exactly like the centroids: batch
       // rows encode against them, and the merged version carries the
       // pair forward (a non-PQ index stays non-PQ)
-      val pqB = if (hasPq(s, dir)) Some(loadPqBooks(s, dir)) else None
+      val pqB =
+        if (hasPqAt(s, prev))
+          Some(at(s, prev, "pqbooks").select("m", "cell", "pc"))
+        else None
       val nBatch = b.count()
       // one skinny scan of the cell store (vec_id + cpart only): where do
       // the replaced ids live, and how many are there — bounded collect
       // (≤ parts rows after the groupBy)
       val repByPart: Array[(Long, Long)] =
         if (m.parts <= 0) Array.empty
-        else loadCellsRaw(s, dir).select(col("vec_id"), col("cpart"))
+        else at(s, prev, "cells").select(col("vec_id"), col("cpart"))
           .join(ids, Seq("vec_id"), "left_semi")
           .groupBy("cpart").count().collect()
           .map(r => (r.get(0).asInstanceOf[Number].longValue, r.getLong(1)))
       val nReplaced = repByPart.map(_._2).sum
       val n2 = m.n - nReplaced + nBatch
-      val parts2 = layoutPartsFor(n2)
+      val parts2 = StorageOps.layoutParts(n2, RowsPerPart)
       // a pre-schedule PQ artifact (no recorded budget) stores codes as
       // fixed c0..c3 columns: partition-level merging would mix schemas
       // (dirty partitions in the array layout beside hard-copied legacy
@@ -727,7 +701,7 @@ object VectorIndex {
       // upgrade to the array layout, exactly like the legacy-parts path
       if (m.parts <= 0 || parts2 != m.parts ||
           (pqB.isDefined && m.pqm == 0)) {
-        val fullMeta = mergeFullRewrite(s, dir, m, b, ids, cent, pqB)
+        val fullMeta = mergeFullRewrite(s, dir, live, b, ids, cent, pqB)
         return (fullMeta, MergeStats(fullMeta.parts, fullMeta.parts, 0,
           fullMeta.parts, 0, fullRewrite = true, drainRecompute = false))
       }
@@ -739,8 +713,8 @@ object VectorIndex {
       try {
         // replaced ids' OLD rows, via the pruned cell scan; their old
         // bucket keys re-derive from the stored embeddings
-        val replacedOld = prunedByVals(loadCellsRaw(s, dir), "cpart",
-            replacedCparts, m.parts)
+        val replacedOld = StorageOps.prunedByVals(at(s, prev, "cells"),
+            "cpart", replacedCparts, m.parts)
           .join(ids, Seq("vec_id"), "left_semi")
           .select(col("vec_id"), col("embedding"))
         val replacedBuckets = graft.Caching.persist(replacedOld
@@ -757,8 +731,9 @@ object VectorIndex {
             .select(cpartOf(col("cell"), m.parts).as("p"))
             .distinct().collect().map(_.getLong(0)) ++ replacedCparts)
             .distinct
-          val storedDirty = prunedByVals(loadBucketsRaw(s, dir), "bpart",
-            dirtyBp, m.parts).select("bucket", "vec_id", "embedding")
+          val storedDirty = StorageOps.prunedByVals(at(s, prev, "buckets"),
+              "bpart", dirtyBp, m.parts)
+            .select("bucket", "vec_id", "embedding")
           // drain detection: is any REPLACED id's old bucket at the cap?
           // (only then can its cap-dropped tail be promoted, and only
           // then is the capped store's membership insufficient)
@@ -774,15 +749,15 @@ object VectorIndex {
                   .select("bucket", "vec_id", "embedding"))
                 .select(col("vec_id"), col("embedding"))
             else // corpus signature pass: true membership of dirty buckets
-              loadCells(s, dir).select(col("vec_id"), col("embedding"))
+              at(s, prev, "cells").select(col("vec_id"), col("embedding"))
                 .join(ids, Seq("vec_id"), "left_anti")
                 .unionByName(b)
-                .filter(pmod(xxhash64(bucketKeyOf(m.width)),
-                  lit(m.parts.toLong)).isin(dirtyBp.toSeq: _*))
+                .filter(bpartOf(bucketKeyOf(m.width), m.parts)
+                  .isin(dirtyBp.toSeq: _*))
           val newDirtyBuckets = VectorOps.cappedBuckets(dirtyBucketMembers,
             m.width, m.cap, "vec_id", "embedding")
-          val newDirtyCells = prunedByVals(loadCellsRaw(s, dir), "cpart",
-              dirtyCp, m.parts)
+          val newDirtyCells = StorageOps.prunedByVals(at(s, prev, "cells"),
+              "cpart", dirtyCp, m.parts)
             .select("cell", "vec_id", "embedding")
             .join(ids, Seq("vec_id"), "left_anti")
             .unionByName(batchCells)
@@ -793,65 +768,57 @@ object VectorIndex {
           // loaded (degenerate artifact); the returned Meta carries the
           // SAME demotion — persisted and in-memory metas must never
           // diverge (mergeFullRewrite already did this; r15 ADVICE).
-          import s.implicits._
           val pqRes = pqB.isDefined && m.pqres
           val meta2 = m.copy(n = n2, pqres = pqRes)
-          val v = s"v${StorageOps.nextVersion(s, dir)}"
-          Seq((meta2.n, meta2.width, meta2.probes, meta2.cap, meta2.cells,
-              meta2.parts, meta2.pqres, meta2.pqm, meta2.pqk, meta2.wboost))
-            .toDF("n", "width", "probes", "cap", "cells", "parts", "pqres",
-              "pqm", "pqk", "wboost")
-            .write.mode("errorifexists").parquet(s"$dir/$v/meta")
-          newDirtyBuckets.select("bucket", "vec_id", "embedding")
-            .withColumn("bpart", bpartOf(col("bucket"), m.parts))
-            .repartition(math.max(1, dirtyBp.length), col("bpart"))
-            .write.partitionBy("bpart")
-            .mode("errorifexists").parquet(s"$dir/$v/buckets")
-          val copiedB = copyCleanParts(s, s"$prev/buckets",
-            s"$dir/$v/buckets", "bpart", dirtyBp.toSet)
-          cent.select("cell", "centroid")
-            .write.mode("errorifexists").parquet(s"$dir/$v/centroids")
-          newDirtyCells.select("cell", "vec_id", "embedding")
-            .withColumn("cpart", cpartOf(col("cell"), m.parts))
-            .repartition(math.max(1, dirtyCp.length), col("cpart"))
-            .write.partitionBy("cpart")
-            .mode("errorifexists").parquet(s"$dir/$v/cells")
-          val copiedC = copyCleanParts(s, s"$prev/cells",
-            s"$dir/$v/cells", "cpart", dirtyCp.toSet)
-          // the PQ pair rides the cells' partition bookkeeping verbatim:
-          // codes are cell-aligned and uncapped, so the dirty cparts are
-          // exactly the cells' dirty cparts and no drain case exists
-          pqB.foreach { books =>
-            books.select("m", "cell", "pc")
-              .write.mode("errorifexists").parquet(s"$dir/$v/pqbooks")
-            // residual books encode residual batch vectors (frozen
-            // centroids are already in hand via batchCells) — the pair
-            // contract: codes always match the books' training frame
-            val encodeInput =
-              if (pqRes) VectorOps.residualFrame(batchCells, cent) else b
-            // this path only runs for budget-recorded artifacts (legacy
-            // c0..c3 stores routed to the full rewrite above), so the
-            // stored schema is the code array
-            val batchCodes = VectorOps
-              .pqEncode(encodeInput, books, subDimOfBooks(books), m.pqm)
-              .join(batchCells.select("cell", "vec_id"), Seq("vec_id"))
-              .select("cell", "vec_id", "code")
-            prunedByVals(loadCodesRaw(s, dir), "cpart", dirtyCp, m.parts)
-              .select("cell", "vec_id", "code")
-              .join(ids, Seq("vec_id"), "left_anti")
-              .unionByName(batchCodes)
-              .withColumn("cpart", cpartOf(col("cell"), m.parts))
-              .repartition(math.max(1, dirtyCp.length), col("cpart"))
-              .write.partitionBy("cpart")
-              .mode("errorifexists").parquet(s"$dir/$v/codes")
-            copyCleanParts(s, s"$prev/codes", s"$dir/$v/codes",
-              "cpart", dirtyCp.toSet)
+          def writeDirty(rows: DataFrame, ds: String, partCol: String,
+              part: org.apache.spark.sql.Column, dirty: Array[Long],
+              v: String): Int = {
+            rows.withColumn(partCol, part)
+              .repartition(math.max(1, dirty.length), col(partCol))
+              .write.partitionBy(partCol)
+              .mode("errorifexists").parquet(s"$v/$ds")
+            StorageOps.copyCleanParts(s, s"$prev/$ds", s"$v/$ds", partCol,
+              dirty.toSet)
           }
-          mergeGt(s, dir, v, b, ids)
-          StorageOps.flipPointer(s, dir, v)
-          (meta2, MergeStats(m.parts, dirtyBp.length, copiedB,
-            dirtyCp.length, copiedC,
-            fullRewrite = false, drainRecompute = drain))
+          val byBucket = bpartOf(col("bucket"), m.parts)
+          val byCell = cpartOf(col("cell"), m.parts)
+          StorageOps.publishNext(s, dir) { v =>
+            StorageOps.writeMeta(s, v, meta2)
+            val copiedB = writeDirty(newDirtyBuckets.select("bucket", "vec_id",
+              "embedding"), "buckets", "bpart", byBucket, dirtyBp, v)
+            cent.select("cell", "centroid")
+              .write.mode("errorifexists").parquet(s"$v/centroids")
+            val copiedC = writeDirty(newDirtyCells.select("cell", "vec_id",
+              "embedding"), "cells", "cpart", byCell, dirtyCp, v)
+            // the PQ pair rides the cells' partition bookkeeping verbatim:
+            // codes are cell-aligned and uncapped, so the dirty cparts are
+            // exactly the cells' dirty cparts and no drain case exists
+            pqB.foreach { books =>
+              books.select("m", "cell", "pc")
+                .write.mode("errorifexists").parquet(s"$v/pqbooks")
+              // residual books encode residual batch vectors (frozen
+              // centroids are already in hand via batchCells) — the pair
+              // contract: codes always match the books' training frame
+              val encodeInput =
+                if (pqRes) VectorOps.residualFrame(batchCells, cent) else b
+              // this path only runs for budget-recorded artifacts (legacy
+              // c0..c3 stores routed to the full rewrite above), so the
+              // stored schema is the code array
+              val batchCodes = VectorOps
+                .pqEncode(encodeInput, books, subDimOfBooks(books), m.pqm)
+                .join(batchCells.select("cell", "vec_id"), Seq("vec_id"))
+                .select("cell", "vec_id", "code")
+              writeDirty(StorageOps.prunedByVals(at(s, prev, "codes"), "cpart",
+                  dirtyCp, m.parts)
+                .select("cell", "vec_id", "code")
+                .join(ids, Seq("vec_id"), "left_anti")
+                .unionByName(batchCodes), "codes", "cpart", byCell, dirtyCp, v)
+            }
+            mergeGt(s, prev, v, b, ids)
+            (meta2, MergeStats(m.parts, dirtyBp.length, copiedB,
+              dirtyCp.length, copiedC,
+              fullRewrite = false, drainRecompute = drain))
+          }
         } finally replacedBuckets.unpersist()
       } finally batchCells.unpersist()
     } finally b.unpersist()
@@ -866,12 +833,14 @@ object VectorIndex {
     * buckets, so a merge over them could never re-admit it when a later
     * batch drains its flooded bucket, silently diverging from the
     * frozen-geometry rebuild the contract promises. */
-  private def mergeFullRewrite(s: SparkSession, dir: String, m: Meta,
+  private def mergeFullRewrite(s: SparkSession, dir: String, live: Live,
       b: DataFrame, ids: DataFrame, cent: DataFrame,
       pqBooks: Option[DataFrame]): Meta = {
+    val m = live.meta
     val pqRes = pqBooks.isDefined && m.pqres
     val mergedCells = graft.Caching.persist(
-      loadCells(s, dir).join(ids, Seq("vec_id"), "left_anti")
+      at(s, live.dir, "cells").select("cell", "vec_id", "embedding")
+        .join(ids, Seq("vec_id"), "left_anti")
         .unionByName(VectorOps.assignCells(b, cent)
           .select(col("cell"), col("vec_id"), col("embedding"))))
     try {
@@ -899,9 +868,11 @@ object VectorIndex {
       val n2 = mergedCells.count()
       // the gt pair rides the full rewrite at full-rescore cost — this
       // path is already O(index), and the probe set is sampled-small
-      val gtq2 = if (hasGt(s, dir)) Some(refreshedGtq(s, dir, b)) else None
+      val gtq2 =
+        if (hasGtAt(s, live.dir)) Some(refreshedGtq(s, live.dir, b)) else None
       writeVersion(s, dir,
-        m.copy(n = n2, parts = layoutPartsFor(n2), pqres = pqRes,
+        m.copy(n = n2, parts = StorageOps.layoutParts(n2, RowsPerPart),
+          pqres = pqRes,
           pqm = if (pqBooks.isDefined) nm else 0,
           pqk = if (pqBooks.isDefined) nk else 0),
         mergedBuckets, cent, mergedCells, pqBooks, codes,
@@ -913,9 +884,9 @@ object VectorIndex {
   /** The stored probe queries with latest-wins embedding refresh against
     * a merge batch — a probe query whose OWN vector the batch replaces
     * keeps auditing the vector the index actually holds. */
-  private def refreshedGtq(s: SparkSession, dir: String,
+  private def refreshedGtq(s: SparkSession, vdir: String,
       b: DataFrame): DataFrame =
-    loadGtq(s, dir)
+    gtqAt(s, vdir)
       .join(b.select(col("vec_id").as("query_id"),
         col("embedding").as("new_e")), Seq("query_id"), "left_outer")
       .select(col("query_id"),
@@ -939,11 +910,11 @@ object VectorIndex {
     * A batch id absent from every stored list needs no removal handling:
     * its old vector ranked below depth (removing it cannot change the
     * prefix) and its new vector enters through the batch scoring. */
-  private def mergeGt(s: SparkSession, dir: String, v: String,
+  private def mergeGt(s: SparkSession, prev: String, next: String,
       b: DataFrame, ids: DataFrame): Unit = {
-    if (!hasGt(s, dir)) return
-    val gtq2 = refreshedGtq(s, dir, b)
-    val gt = loadGt(s, dir)
+    if (!hasGtAt(s, prev)) return
+    val gtq2 = refreshedGtq(s, prev, b)
+    val gt = gtAt(s, prev)
     // bounded collect: dirty queries <= the sampled probe size
     val dirtyQ = gt
       .join(ids.select(col("vec_id").as("neighbor_id")),
@@ -969,15 +940,15 @@ object VectorIndex {
       .filter(col("rk") <= GtDepth)
     val newGt = if (dirtyQ.isEmpty) cleanGt else {
       val qDirty = gtq2.filter(col("query_id").isin(dirtyQ.map(Long.box): _*))
-      val mergedCorpus = loadCells(s, dir).select("vec_id", "embedding")
+      val mergedCorpus = at(s, prev, "cells").select("vec_id", "embedding")
         .join(ids, Seq("vec_id"), "left_anti")
         .unionByName(b.select("vec_id", "embedding"))
       cleanGt.unionByName(bruteGt(qDirty, mergedCorpus, GtDepth))
     }
     newGt.select("query_id", "neighbor_id", "sim", "rk").coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dir/$v/gt")
+      .write.mode("errorifexists").parquet(s"$next/gt")
     gtq2.select("query_id", "embedding").coalesce(1)
-      .write.mode("errorifexists").parquet(s"$dir/$v/gtq")
+      .write.mode("errorifexists").parquet(s"$next/gtq")
   }
 
   /** The stored bucket key of a corpus vector — probe 0 of the frozen
@@ -985,12 +956,6 @@ object VectorIndex {
     * derivation). */
   private def bucketKeyOf(width: Int) =
     element_at(expr(s"hyperplane_sig(embedding, $width, 0)"), 1)
-
-  /** [[StorageOps.copyCleanParts]] — the shared file-level append for
-    * the unreplaced majority. */
-  private def copyCleanParts(s: SparkSession, prevPath: String,
-      newPath: String, partCol: String, dirty: Set[Long]): Int =
-    StorageOps.copyCleanParts(s, prevPath, newPath, partCol, dirty)
 
   /** True when the corpus has outgrown the frozen geometry — the signal
     * to schedule a full [[publishFrom]] rebuild (width or cell-count
@@ -1079,17 +1044,11 @@ object VectorIndex {
         // the rebuild re-derives the gt pair too: from the artifact's
         // own probe set when it carries one, else (first rebuild under
         // an armed probe) from the probe's queries — so an armed cycle
-        // becomes incremental from its first retrain onward
-        val gtProbe =
-          if (hasGt(s, dir)) Some(loadGtq(s, dir)
-            .select(col("query_id").as("vec_id"), col("embedding")))
-          else recallProbe.map(_.queries)
+        // becomes incremental from its first retrain onward.
         // widthBoost = the recorded rung: a schedule- or recall-driven
         // rebuild must not silently demote a width-escalated artifact
         // back to the occupancy-saturated width
-        publishFrom(s, loadCells(s, dir).select("vec_id", "embedding"),
-          dir, pq = hasPq(s, dir), pqResidual = merged.pqres,
-          gtProbe = gtProbe, widthBoost = merged.wboost)
+        republish(s, dir, open(s, dir), recallProbe.map(_.queries), 0)
         // a floor the retrain cannot satisfy must be OBSERVABLE, not a
         // silent O(corpus) publish on every subsequent cycle: re-audit
         // the rebuilt artifact once and surface per caller policy
@@ -1139,7 +1098,7 @@ object VectorIndex {
       }
     }
     compactIfFragmented(s, dir)
-    pruneVersions(s, dir, keep)
+    StorageOps.pruneVersions(s, dir, keep)
     (loadMeta(s, dir), rebuilt)
   }
 
@@ -1169,34 +1128,29 @@ object VectorIndex {
     * LshMaxWidth ceiling (2^24 buckets — past that the kNN cap is the
     * remaining defense). Returns the new Meta. */
   def escalateWidth(s: SparkSession, dir: String): Meta = {
-    val m = loadMeta(s, dir)
+    val live = open(s, dir)
+    val m = live.meta
     require(m.width < VectorOps.LshMaxWidth,
       s"width-escalation ladder exhausted at $dir: width ${m.width} is " +
         s"the ${VectorOps.LshMaxWidth}-bit ceiling — occupancy past it " +
         "means concentrated near-duplicate mass; dedup the corpus or " +
         "accept the kNN bucket cap as the cost bound")
-    val gtProbe =
-      if (hasGt(s, dir)) Some(loadGtq(s, dir)
-        .select(col("query_id").as("vec_id"), col("embedding")))
-      else None
-    publishFrom(s, loadCells(s, dir).select("vec_id", "embedding"),
-      dir, pq = hasPq(s, dir), pqResidual = m.pqres, gtProbe = gtProbe,
-      widthBoost = m.wboost + 1)
+    republish(s, dir, live, None, 1)
   }
 
-  /** True iff any `partCol=` partition directory of the dataset holds
-    * more than one data file — the layout-invariant check behind
-    * [[compactIfFragmented]]. One FS listing, no data read. */
-  private def fragmented(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      st.isDirectory && st.getPath.getName.contains("=") &&
-        fs.listStatus(st.getPath).count(f => f.isFile &&
-          !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith(".")) > 1
-    }
-  }
+  /** Full [[publishFrom]] rebuild of `live`'s corpus (the uncapped cells
+    * floats) as the next version: same PQ mode, the gt pair from the
+    * stored probe set (else `gtFallback`), width `boost` rungs above the
+    * recorded one. */
+  private def republish(s: SparkSession, dir: String, live: Live,
+      gtFallback: Option[DataFrame], boost: Int): Meta =
+    publishFrom(s, at(s, live.dir, "cells").select("vec_id", "embedding"),
+      dir, pq = hasPqAt(s, live.dir), pqResidual = live.meta.pqres,
+      gtProbe =
+        if (hasGtAt(s, live.dir)) Some(gtqAt(s, live.dir)
+          .select(col("query_id").as("vec_id"), col("embedding")))
+        else gtFallback,
+      widthBoost = live.meta.wboost + boost)
 
   /** Small-file compaction hook in the [[maintain]] cycle: if any
     * partitioned dataset of the ACTIVE version has accumulated more than
@@ -1212,41 +1166,22 @@ object VectorIndex {
     * library) fragmented. Returns whether a compaction version was
     * published. */
   def compactIfFragmented(s: SparkSession, dir: String): Boolean = {
-    val v = ver(s, dir)
-    val pq = hasPq(s, dir)
-    val frag = Seq("buckets", "cells").exists(ds =>
-      fragmented(s, s"$dir/$v/$ds")) ||
-      (pq && fragmented(s, s"$dir/$v/codes"))
-    if (!frag) return false
-    val gt = hasGt(s, dir)
-    writeVersion(s, dir, loadMeta(s, dir),
-      loadBuckets(s, dir), loadCentroids(s, dir), loadCells(s, dir),
-      if (pq) Some(loadPqBooks(s, dir)) else None,
-      if (pq) Some(loadCodes(s, dir)) else None,
+    val live = open(s, dir)
+    val v = live.dir
+    val pq = hasPqAt(s, v)
+    if (!(Seq("buckets", "cells") ++ (if (pq) Seq("codes") else Nil))
+        .exists(ds => StorageOps.fragmented(s, s"$v/$ds"))) return false
+    val gt = hasGtAt(s, v)
+    // writeVersion projects every dataset to its stored columns
+    writeVersion(s, dir, live.meta,
+      at(s, v, "buckets"), at(s, v, "centroids"), at(s, v, "cells"),
+      if (pq) Some(at(s, v, "pqbooks")) else None,
+      if (pq) Some(normalizeCodes(at(s, v, "codes"))) else None,
       // the gt pair copies VERBATIM — compaction is a layout move, and
       // recomputing ground truth here would be a pointless corpus scan
-      if (gt) Some(loadGtq(s, dir)) else None,
-      if (gt) Some(loadGt(s, dir)) else None)
+      if (gt) Some(gtqAt(s, v)) else None,
+      if (gt) Some(gtAt(s, v)) else None)
     true
-  }
-
-  /** Delete all non-active version directories beyond the newest `keep`
-    * (the [[StorageOps.pruneVersions]] contract, applied to the index
-    * layout). Returns the pruned version names. */
-  def pruneVersions(s: SparkSession, dir: String, keep: Int): Seq[String] = {
-    require(keep >= 1, "keep must be >= 1")
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val vrx = """v(\d+)""".r
-    val active = StorageOps.currentVersion(s, dir)
-    val stale = fs.listStatus(root).flatMap(_.getPath.getName match {
-      case vrx(n) => Some(n.toInt)
-      case _ => None
-    }).sorted(Ordering.Int.reverse).drop(keep).map(n => s"v$n")
-      .filterNot(active.contains).toSeq
-    stale.foreach(v => fs.delete(new org.apache.hadoop.fs.Path(root, v), true))
-    stale
   }
 
   /** Best corpus match per incoming vector against the published bucket
@@ -1262,30 +1197,13 @@ object VectorIndex {
       threshold: Double,
       broadcastRowLimit: Long = QueryBatchBroadcastRowLimit,
       knownBatchRows: Option[Long] = None): DataFrame = {
-    GraftFunctions.register(s)
-    val m = loadMeta(s, dir)
-    val inc0 = incoming
-      .select(col("vec_id").as("in_id"), col("embedding").as("ie"))
-    val (small, hint) = batchGate(knownBatchRows, inc0.count(), broadcastRowLimit)
-    val inc = batchFrame(s"probeBestMatch|$dir", small,
-      inc0.select(col("in_id"), col("ie"),
-      explode(expr(s"hyperplane_sig(ie, ${m.width}, ${m.probes})"))
-        .as("qbucket")))
-    val idx = (if (small)
-        prunedScan(loadBucketsRaw(s, dir),
-          inc.select(bpartOf(col("qbucket"), m.parts)), "bpart", m.parts)
-      else loadBucketsRaw(s, dir))
-      .select("bucket", "vec_id", "embedding")
     val w = Window.partitionBy("in_id")
-      .orderBy(col("sim").desc, col("match_id"))
-    idx.join(hint(inc),
-        col("bucket") === col("qbucket") && col("vec_id") =!= col("in_id"))
-      .select(col("in_id"), col("vec_id").as("match_id"),
-        expr("cosine_sim(ie, embedding)").as("sim"))
-      .filter(col("sim") >= threshold)
+      .orderBy(col("sim").desc, col("corpus_id"))
+    bucketMatches(s, dir, "probeBestMatch", incoming, threshold,
+        broadcastRowLimit, knownBatchRows)
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
-      .select(col("in_id").as("vec_id"), col("match_id"))
+      .select(col("in_id").as("vec_id"), col("corpus_id").as("match_id"))
       .orderBy("vec_id")
   }
 
@@ -1306,26 +1224,45 @@ object VectorIndex {
   def matchesAbove(s: SparkSession, dir: String, incoming: DataFrame,
       threshold: Double,
       broadcastRowLimit: Long = QueryBatchBroadcastRowLimit,
-      knownBatchRows: Option[Long] = None): DataFrame = {
+      knownBatchRows: Option[Long] = None): DataFrame =
+    bucketMatches(s, dir, "matchesAbove", incoming, threshold,
+      broadcastRowLimit, knownBatchRows)
+
+  /** The verified (in_id, corpus_id, sim >= threshold) rows of
+    * `incoming`'s probe buckets — the body [[probeBestMatch]] and
+    * [[matchesAbove]] share; `api` names the call's batch-frame slot. */
+  private def bucketMatches(s: SparkSession, dir: String, api: String,
+      incoming: DataFrame, threshold: Double, broadcastRowLimit: Long,
+      knownBatchRows: Option[Long]): DataFrame = {
     GraftFunctions.register(s)
-    val m = loadMeta(s, dir)
+    val live = open(s, dir)
     val inc0 = incoming
       .select(col("vec_id").as("in_id"), col("embedding").as("ie"))
     val (small, hint) = batchGate(knownBatchRows, inc0.count(), broadcastRowLimit)
-    val inc = batchFrame(s"matchesAbove|$dir", small,
-      inc0.select(col("in_id"), col("ie"),
-        explode(expr(s"hyperplane_sig(ie, ${m.width}, ${m.probes})"))
-          .as("qbucket")))
-    val idx = (if (small)
-        prunedScan(loadBucketsRaw(s, dir),
-          inc.select(bpartOf(col("qbucket"), m.parts)), "bpart", m.parts)
-      else loadBucketsRaw(s, dir))
-      .select("bucket", "vec_id", "embedding")
-    idx.join(hint(inc),
+    val inc = batchFrame(s"$api|$dir", small, inc0.select(col("in_id"),
+      col("ie"), probeBuckets(live.meta, "ie")))
+    bucketScan(s, live, small, inc)
+      .join(hint(inc),
         col("bucket") === col("qbucket") && col("vec_id") =!= col("in_id"))
       .select(col("in_id"), col("vec_id").as("corpus_id"),
         expr("cosine_sim(ie, embedding)").as("sim"))
       .filter(col("sim") >= threshold)
+  }
+
+  /** A query column's probe buckets at the frozen width/probes, one row
+    * each, as `qbucket`. */
+  private def probeBuckets(m: Meta, q: String) =
+    explode(expr(s"hyperplane_sig($q, ${m.width}, ${m.probes})")).as("qbucket")
+
+  /** The bucket table of `live`, pruned to `q`'s probe buckets'
+    * partitions below the batch gate. */
+  private def bucketScan(s: SparkSession, live: Live, small: Boolean,
+      q: DataFrame): DataFrame = {
+    val raw = at(s, live.dir, "buckets")
+    (if (!small) raw
+     else prunedScan(raw, q.select(bpartOf(col("qbucket"), live.meta.parts)),
+       "bpart", live.meta.parts))
+      .select("bucket", "vec_id", "embedding")
   }
 
   /** LSH top-k search against the published bucket table — the
@@ -1339,24 +1276,21 @@ object VectorIndex {
   def searchLsh(s: SparkSession, dir: String, queries: DataFrame,
       k: Int,
       broadcastRowLimit: Long = QueryBatchBroadcastRowLimit,
-      knownBatchRows: Option[Long] = None): DataFrame = {
+      knownBatchRows: Option[Long] = None): DataFrame =
+    lshAt(s, dir, open(s, dir), queries, k, broadcastRowLimit, knownBatchRows)
+
+  private def lshAt(s: SparkSession, dir: String, live: Live,
+      queries: DataFrame, k: Int, broadcastRowLimit: Long,
+      knownBatchRows: Option[Long]): DataFrame = {
     GraftFunctions.register(s)
-    val m = loadMeta(s, dir)
     val q0 = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val (small, hint) = batchGate(knownBatchRows, q0.count(), broadcastRowLimit)
     val q = batchFrame(s"searchLsh|$dir", small,
-      q0.select(col("query_id"), col("qe"),
-      explode(expr(s"hyperplane_sig(qe, ${m.width}, ${m.probes})"))
-        .as("qbucket")))
-    val idx = (if (small)
-        prunedScan(loadBucketsRaw(s, dir),
-          q.select(bpartOf(col("qbucket"), m.parts)), "bpart", m.parts)
-      else loadBucketsRaw(s, dir))
-      .select("bucket", "vec_id", "embedding")
+      q0.select(col("query_id"), col("qe"), probeBuckets(live.meta, "qe")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
-    idx.join(hint(q),
+    bucketScan(s, live, small, q).join(hint(q),
         col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         expr("cosine_sim(qe, embedding)").as("sim"))
@@ -1378,25 +1312,21 @@ object VectorIndex {
   def searchIvf(s: SparkSession, dir: String, queries: DataFrame, k: Int,
       nprobe: Int,
       broadcastRowLimit: Long = QueryBatchBroadcastRowLimit,
-      knownBatchRows: Option[Long] = None): DataFrame = {
+      knownBatchRows: Option[Long] = None): DataFrame =
+    ivfAt(s, dir, open(s, dir), queries, k, nprobe, broadcastRowLimit,
+      knownBatchRows)
+
+  private def ivfAt(s: SparkSession, dir: String, live: Live,
+      queries: DataFrame, k: Int, nprobe: Int, broadcastRowLimit: Long,
+      knownBatchRows: Option[Long]): DataFrame = {
     GraftFunctions.register(s)
-    val m = loadMeta(s, dir)
-    val cent = loadCentroids(s, dir)
     val q0 = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val (small, hint) = batchGate(knownBatchRows, q0.count(), broadcastRowLimit)
-    val qcells = batchFrame(s"searchIvf|$dir", small, q0
-      .join(broadcast(cent))
-      .select(col("query_id"), col("qe"), col("cell").as("qcell"),
-        expr("cosine_sim(qe, centroid)").as("csim"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("csim").desc, col("qcell"))))
-      .filter(col("crk") <= nprobe)
-      .select("query_id", "qe", "qcell"))
-    val lists = (if (small)
-        prunedScan(loadCellsRaw(s, dir),
-          qcells.select(cpartOf(col("qcell"), m.parts)), "cpart", m.parts)
-      else loadCellsRaw(s, dir))
+    val qcells = batchFrame(s"searchIvf|$dir", small,
+      probedCells(s, live, q0, nprobe, withCentroid = false)
+        .select("query_id", "qe", "qcell"))
+    val lists = cellScan(s, live, "cells", small, qcells)
       .select("cell", "vec_id", "embedding")
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
@@ -1409,6 +1339,22 @@ object VectorIndex {
       .select("query_id", "neighbor_id", "rk")
       .orderBy("query_id", "rk")
   }
+
+  /** The `nprobe` nearest cells of each query (query_id, qe) by centroid
+    * cosine, as (query_id, qe, qcell[, centroid], csim, crk). The
+    * centroid table is broadcast unconditionally — it is the INDEX side,
+    * bounded by the cell schedule. `withCentroid` carries the matched
+    * centroid for the residual LUT; other callers never ship the float
+    * array through the ranking exchange. */
+  private def probedCells(s: SparkSession, live: Live, q0: DataFrame,
+      nprobe: Int, withCentroid: Boolean): DataFrame =
+    q0.join(broadcast(at(s, live.dir, "centroids").select("cell", "centroid")))
+      .select((Seq(col("query_id"), col("qe"), col("cell").as("qcell")) ++
+        (if (withCentroid) Seq(col("centroid")) else Nil) :+
+        expr("cosine_sim(qe, centroid)").as("csim")): _*)
+      .withColumn("crk", row_number().over(
+        Window.partitionBy("query_id").orderBy(col("csim").desc, col("qcell"))))
+      .filter(col("crk") <= nprobe)
 
   /** IVF-ADC top-k search over the published PQ pair — the billion-scale
     * layout (Jégou et al., "Product Quantization for Nearest Neighbor
@@ -1443,7 +1389,7 @@ object VectorIndex {
     * against each probed centroid ([[VectorOps.pqLutPerCell]]) —
     * multiplying the broadcast by nprobe: Q·nprobe·(M·K) doubles,
     * still driver-small at any corpus. The mode is recorded in meta
-    * (`pqres`, [[pqResidual]]) because books and codes are a matched
+    * (`pqres`, [[Meta.pqres]]) because books and codes are a matched
     * pair; this search branches on it transparently, so consumers (the
     * recall audit included) never pass a flag. The raw-vector default
     * keeps ONE training and ONE code set shared with the inline
@@ -1453,31 +1399,32 @@ object VectorIndex {
   def searchIvfPq(s: SparkSession, dir: String, queries: DataFrame, k: Int,
       nprobe: Int,
       broadcastRowLimit: Long = QueryBatchBroadcastRowLimit,
-      knownBatchRows: Option[Long] = None): DataFrame = {
-    GraftFunctions.register(s)
-    require(hasPq(s, dir),
+      knownBatchRows: Option[Long] = None): DataFrame =
+    ivfPqAt(s, dir, open(s, dir), queries, k, nprobe, broadcastRowLimit,
+      knownBatchRows)
+
+  /** The frozen PQ books of `live` (refused on an index without the
+    * pair), their sub-dimension, and the recorded (M, K) budget. */
+  private def pqOf(s: SparkSession, dir: String,
+      live: Live): (DataFrame, Int, (Int, Int)) = {
+    require(hasPqAt(s, live.dir),
       s"index at $dir has no PQ datasets (publish with pq = true)")
-    val m = loadMeta(s, dir)
-    val cent = loadCentroids(s, dir)
-    val books = loadPqBooks(s, dir)
-    val (nm, nk) = pqBudget(m)
-    val subDim = subDimOfBooks(books)
+    val books = at(s, live.dir, "pqbooks").select("m", "cell", "pc")
+    (books, subDimOfBooks(books), pqBudget(live.meta))
+  }
+
+  private def ivfPqAt(s: SparkSession, dir: String, live: Live,
+      queries: DataFrame, k: Int, nprobe: Int, broadcastRowLimit: Long,
+      knownBatchRows: Option[Long]): DataFrame = {
+    GraftFunctions.register(s)
+    val (books, subDim, (nm, nk)) = pqOf(s, dir, live)
     val q0 = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val (small, hint) = batchGate(knownBatchRows, q0.count(), broadcastRowLimit)
-    val res = m.pqres
+    val res = live.meta.pqres
     // the probed-cell ranking; in RESIDUAL mode the matched centroid
-    // rides along (the branch below subtracts it per probed cell) — the
-    // raw branch never carries the float array through the per-query
-    // ranking exchange it does not need
-    val ranked = q0
-      .join(broadcast(cent))
-      .select((Seq(col("query_id"), col("qe"), col("cell").as("qcell")) ++
-        (if (res) Seq(col("centroid")) else Nil) :+
-        expr("cosine_sim(qe, centroid)").as("csim")): _*)
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("csim").desc, col("qcell"))))
-      .filter(col("crk") <= nprobe)
+    // rides along (the branch below subtracts it per probed cell)
+    val ranked = probedCells(s, live, q0, nprobe, withCentroid = res)
     // residual artifact → per-(query, probed cell) LUT over the query's
     // residual against THAT cell's centroid ([[VectorOps.pqLutPerCell]]);
     // raw artifact → the per-query LUT, joined to every probed cell
@@ -1492,7 +1439,7 @@ object VectorIndex {
           q0.select(col("query_id").as("vec_id"), col("qe").as("embedding")),
           books, subDim, nm, nk), Seq("query_id"))
     val qcells = batchFrame(s"searchIvfPq|$dir", small, withLut)
-    val codes = codesScan(s, dir, small, qcells, m)
+    val codes = codesScan(s, live, small, qcells)
     val w = Window.partitionBy("query_id")
       .orderBy(col("adc").asc, col("neighbor_id"))
     codes.join(hint(qcells),
@@ -1523,31 +1470,24 @@ object VectorIndex {
   def searchIvfPqRefine(s: SparkSession, dir: String, queries: DataFrame,
       k: Int, nprobe: Int, refineK: Int = 50,
       broadcastRowLimit: Long = QueryBatchBroadcastRowLimit,
-      knownBatchRows: Option[Long] = None): DataFrame = {
+      knownBatchRows: Option[Long] = None): DataFrame =
+    refineAt(s, dir, open(s, dir), queries, k, nprobe, refineK,
+      broadcastRowLimit, knownBatchRows)
+
+  private def refineAt(s: SparkSession, dir: String, live: Live,
+      queries: DataFrame, k: Int, nprobe: Int, refineK: Int,
+      broadcastRowLimit: Long, knownBatchRows: Option[Long]): DataFrame = {
     GraftFunctions.register(s)
-    require(hasPq(s, dir),
-      s"index at $dir has no PQ datasets (publish with pq = true)")
+    val (books, subDim, (nm, nk)) = pqOf(s, dir, live)
     require(refineK >= k, s"refineK ($refineK) must be >= k ($k)")
-    val m = loadMeta(s, dir)
-    val cent = loadCentroids(s, dir)
-    val books = loadPqBooks(s, dir)
-    val (nm, nk) = pqBudget(m)
-    val subDim = subDimOfBooks(books)
     val q0 = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val (small, hint) = batchGate(knownBatchRows, q0.count(), broadcastRowLimit)
-    val res = m.pqres
+    val res = live.meta.pqres
     // qe rides along (unlike searchIvfPq): the refine stage needs the
     // query floats for the exact re-rank; the centroid only in RESIDUAL
-    // mode (the raw ranking exchange never carries the unused array)
-    val ranked = q0
-      .join(broadcast(cent))
-      .select((Seq(col("query_id"), col("qe"), col("cell").as("qcell")) ++
-        (if (res) Seq(col("centroid")) else Nil) :+
-        expr("cosine_sim(qe, centroid)").as("csim")): _*)
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("csim").desc, col("qcell"))))
-      .filter(col("crk") <= nprobe)
+    // mode
+    val ranked = probedCells(s, live, q0, nprobe, withCentroid = res)
     // residual vs raw LUT, exactly as in [[searchIvfPq]]; the refine
     // stage itself is mode-blind (exact cosine over stored floats)
     val withLut =
@@ -1566,7 +1506,7 @@ object VectorIndex {
           q0.select(col("query_id").as("vec_id"), col("qe").as("embedding")),
           books, subDim, nm, nk), Seq("query_id"))
     val qcells = batchFrame(s"searchIvfPqRefine|$dir", small, withLut)
-    val codes = codesScan(s, dir, small, qcells, m)
+    val codes = codesScan(s, live, small, qcells)
     val wAdc = Window.partitionBy("query_id")
       .orderBy(col("adc").asc, col("neighbor_id"))
     val cand = codes
@@ -1577,10 +1517,7 @@ object VectorIndex {
       .withColumn("ark", row_number().over(wAdc))
       .filter(col("ark") <= refineK)
       .select("query_id", "neighbor_id")
-    val lists = (if (small)
-        prunedScan(loadCellsRaw(s, dir),
-          qcells.select(cpartOf(col("qcell"), m.parts)), "cpart", m.parts)
-      else loadCellsRaw(s, dir))
+    val lists = cellScan(s, live, "cells", small, qcells)
       .select(col("vec_id").as("neighbor_id"), col("embedding"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
@@ -1640,8 +1577,12 @@ object VectorIndex {
     * n−1 rows per query. */
   private[graft] def storedGtUsable(s: SparkSession, dir: String,
       q: DataFrame, k: Int): Boolean =
-    k <= GtDepth && hasGt(s, dir) && {
-      val gtq = loadGtq(s, dir).select(col("query_id"), col("embedding"))
+    gtUsableAt(s, StorageOps.currentDir(s, dir), q, k)
+
+  private def gtUsableAt(s: SparkSession, vdir: String, q: DataFrame,
+      k: Int): Boolean =
+    k <= GtDepth && hasGtAt(s, vdir) && {
+      val gtq = gtqAt(s, vdir)
       // accept the audit-normalized alias (qe) or the raw column name
       val embCol = if (q.columns.contains("qe")) col("qe")
         else col("embedding")
@@ -1656,7 +1597,10 @@ object VectorIndex {
       nprobe: Int, refineK: Int = 50,
       shareTag: Option[String] = None): DataFrame = {
     GraftFunctions.register(s)
-    val vkey = s"$dir/${ver(s, dir)}"
+    // ONE resolve for the whole audit: the brute baseline and every
+    // approximate leg read the same version
+    val live = open(s, dir)
+    val vkey = live.dir
     def leg(name: String)(build: => DataFrame): DataFrame = shareTag match {
       case Some(tag) =>
         graft.SharedPlans.shared(s, s"recall_idx:$tag:$name|$vkey")(build)
@@ -1671,13 +1615,13 @@ object VectorIndex {
     // to the incremental per-merge refresh. The live scan stays as the
     // fallback for gt-less artifacts and foreign query sets.
     val brute = leg("brute") {
-      if (storedGtUsable(s, dir, q, k))
-        loadGt(s, dir).filter(col("rk") <= k)
+      if (gtUsableAt(s, live.dir, q, k))
+        gtAt(s, live.dir).filter(col("rk") <= k)
           .select("query_id", "neighbor_id")
       else {
         val w = Window.partitionBy("query_id")
           .orderBy(col("sim").desc, col("neighbor_id"))
-        Tables.spread(s, loadCells(s, dir).select("vec_id", "embedding"))
+        Tables.spread(s, at(s, live.dir, "cells").select("vec_id", "embedding"))
           .join(broadcast(q), col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id").as("neighbor_id"),
             expr("cosine_sim(qe, embedding)").as("sim"))
@@ -1686,13 +1630,16 @@ object VectorIndex {
           .select("query_id", "neighbor_id")
       }
     }
+    val (lim, known) = (QueryBatchBroadcastRowLimit, None)
     val legs: Seq[(String, DataFrame)] =
-      Seq("ivf" -> leg("ivf")(searchIvf(s, dir, queries, k, nprobe)),
-        "lsh" -> leg("lsh")(searchLsh(s, dir, queries, k))) ++
-      (if (hasPq(s, dir))
-        Seq("ivfadc" -> leg("ivfadc")(searchIvfPq(s, dir, queries, k, nprobe)),
+      Seq("ivf" -> leg("ivf")(
+          ivfAt(s, dir, live, queries, k, nprobe, lim, known)),
+        "lsh" -> leg("lsh")(lshAt(s, dir, live, queries, k, lim, known))) ++
+      (if (hasPqAt(s, live.dir))
+        Seq("ivfadc" -> leg("ivfadc")(
+            ivfPqAt(s, dir, live, queries, k, nprobe, lim, known)),
           "refine" -> leg("refine")(
-            searchIvfPqRefine(s, dir, queries, k, nprobe, refineK)))
+            refineAt(s, dir, live, queries, k, nprobe, refineK, lim, known)))
       else Nil)
     // ONE hit-counting pass over the UNION of the legs: the brute
     // baseline subplan appears exactly twice in the collected plan (the

@@ -89,8 +89,10 @@ object EmbedNearDupStream {
       indexDir: String, threshold: Double,
       delay: String = "10 minutes"): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val m = graft.sources.VectorIndex.loadMeta(s, indexDir)
-    val idx = graft.sources.VectorIndex.loadBuckets(s, indexDir)
+    // one resolve: the probe width and the bucket table of one version
+    val live = graft.sources.VectorIndex.open(s, indexDir)
+    val m = live.meta
+    val idx = graft.sources.VectorIndex.at(s, live.dir, "buckets")
       .select(col("bucket"), col("vec_id"), col("embedding").as("ce"))
     stream
       .withWatermark("ts", delay)

@@ -140,14 +140,17 @@ object ImageDedupStream {
     try {
       val (small, hint) = graft.sources.VectorIndex.batchGate(
         knownBatchRows, dh.count(), broadcastRowLimit)
-      val fam = graft.sources.FingerprintIndex.loadBandFamily(s, indexDir)
+      // the version and its band family resolve ONCE per trigger: keys
+      // and the band table they probe always come from the same version
+      val live = graft.sources.FingerprintIndex.open(s, indexDir)
+      val fam = live.meta.bandfam
       val keys = dh.select(explode(expr(bandsExpr("dh", fam))).as("p"))
         .select(col("p.band").as("band"), col("p.bv").as("bv"))
       // a corpus-scale batch touches every partition anyway: skip the
       // pruning derivation along with the broadcast hint
       val idx = (if (small)
-          graft.sources.FingerprintIndex.prunedBands(s, indexDir, keys)
-        else graft.sources.FingerprintIndex.loadBands(s, indexDir))
+          graft.sources.FingerprintIndex.prunedBands(s, live, keys)
+        else graft.sources.FingerprintIndex.bandsAt(s, live.dir))
         .select(col("band"), col("bv"), col("dhash").as("cand"),
           col("n"), col("rep"))
       val probes = dh

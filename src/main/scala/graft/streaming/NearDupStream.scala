@@ -274,10 +274,13 @@ object NearDupStream {
         graft.sources.VectorIndex.QueryBatchBroadcastRowLimit,
       knownBatchRows: Option[Long] = None)(consume: DataFrame => T): T = {
     graft.functions.GraftFunctions.register(s)
-    val dir =
-      if (graft.sources.DedupIndex.isPublishedVersioned(s, indexDir))
-        graft.sources.DedupIndex.currentDir(s, indexDir)
-      else indexDir
+    val DI = graft.sources.DedupIndex
+    // a versioned root resolves ONCE per trigger (one pointer read, one
+    // meta read); a flat index dir is read as-is
+    val dir = graft.sources.StorageOps.currentVersion(s, indexDir)
+      .map(v => s"$indexDir/$v").filter(DI.isPublished(s, _))
+      .getOrElse(indexDir)
+    val m = DI.loadMeta(s, dir)
     val q = graft.Caching.persist(microbatch
       .select(col("docId").as("q_id"), col("tsUs"),
         graft.operators.TextRules.tokens(col("text")).as("toks"))
@@ -290,16 +293,16 @@ object NearDupStream {
       // sign at the artifact's recorded family — resolved per trigger
       // alongside the version pointer, so a precision-floor escalation
       // reaches the stream on its next microbatch like any republish
-      val fam = graft.sources.DedupIndex.loadBandFamily(s, dir)
+      val fam = m.bandfam
       val inBands = q
         .select(col("q_id"), posexplode(expr(sigExpr("q_hs", fam))))
         .select(col("q_id"), col("pos").as("band"), col("col").as("minhash"))
       // a corpus-scale batch touches every partition anyway: skip the
       // pruning derivations along with the broadcast hints
       val index = (if (small)
-          graft.sources.DedupIndex.prunedBands(s, dir,
+          DI.prunedBands(s, dir, m,
             inBands.select(col("band"), col("minhash").as("bv")))
-        else graft.sources.DedupIndex.loadBands(s, dir))
+        else DI.bandsOf(s, dir, m))
       // distinct collapses multi-band meetings BEFORE the verify join —
       // each surviving pair is Jaccard-scored exactly once
       val cands = graft.Caching.persist(
@@ -308,9 +311,8 @@ object NearDupStream {
           .select(col("q_id"), col("doc_id").as("c_id")).distinct())
       try {
         val corp = (if (small)
-            graft.sources.DedupIndex.prunedDocs(s, dir,
-              cands.select(col("c_id")))
-          else graft.sources.DedupIndex.loadDocs(s, dir))
+            DI.prunedDocs(s, dir, m, cands.select(col("c_id")))
+          else DI.loadDocs(s, dir))
           .select(col("doc_id").as("c_id"), col("hs").as("c_hs"),
             col("n").as("c_n"))
         consume(corp

@@ -71,6 +71,19 @@ class AudioSpec extends AnyFunSuite {
     }
   }
 
+  test("decodeWav rejects a chunk length near Int.MaxValue by name") {
+    // the fmt chunk's u32 length at byte 16 set to Int.MaxValue - 3: the
+    // bound `off + 8 + len` overflows Int arithmetic, so the guard must
+    // sum in Long and name the chunk instead of reading out of bounds
+    val bytes = AudioOps.encodeWav(AudioOps.clipSamples(ids.head)).clone()
+    assert(new String(bytes, 12, 4, "US-ASCII") == "fmt ")
+    val len = Int.MaxValue - 3
+    for (i <- 0 until 4) bytes(16 + i) = (len >>> (8 * i)).toByte
+    val ex = intercept[IllegalArgumentException](AudioOps.decodeWav(bytes))
+    assert(ex.getMessage.contains(s"RIFF chunk 'fmt ' at 12 declares $len"),
+      ex.getMessage)
+  }
+
   test("trim respects the planted silence and the zero rule") {
     for (id <- ids) {
       val v = AudioOps.decodeWav(AudioOps.encodeWav(AudioOps.clipSamples(id)))._3

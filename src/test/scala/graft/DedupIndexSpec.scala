@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.sources.DedupIndex
+import graft.sources.{DedupIndex, StorageOps}
 
 /** Incremental index maintenance must be indistinguishable from a full
   * rebuild: mergePublish(old index, batch) == publishFrom(latest-wins
@@ -53,8 +53,8 @@ class DedupIndexSpec extends AnyFunSuite {
     // frozen sample modulus
     def probeRows(dir: String) = DedupIndex.loadProbe(spark, dir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(DedupIndex.loadProbeMod(spark, dirB) ==
-      DedupIndex.loadProbeMod(spark, dirA), "merge moved the frozen mod")
+    assert(DedupIndex.loadMeta(spark, dirB).probemod ==
+      DedupIndex.loadMeta(spark, dirA).probemod, "merge moved the frozen mod")
     assert(probeRows(dirB) == probeRows(dirC), "probe artifacts differ")
   }
 
@@ -68,11 +68,10 @@ class DedupIndexSpec extends AnyFunSuite {
     DedupIndex.publishFrom(spark, full.filter(col("doc_id") % 3 =!= 0), dir)
     // simulate a pre-family artifact: rewrite meta WITHOUT bandfam —
     // the stored band values then read as the retired linear family's
-    val (nd, pt, pm) = (DedupIndex.loadNDocs(spark, dir),
-      DedupIndex.loadParts(spark, dir), DedupIndex.loadProbeMod(spark, dir))
+    val DedupIndex.Meta(nd, pt, pm, _) = DedupIndex.loadMeta(spark, dir)
     Seq((nd, pt, pm)).toDF("ndocs", "parts", "probemod")
       .write.mode("overwrite").parquet(s"$dir/meta")
-    assert(DedupIndex.loadBandFamily(spark, dir) == 1)
+    assert(DedupIndex.loadMeta(spark, dir).bandfam == 1)
     // probing old-family band values with new-family keys would
     // silently miss every match — it must refuse instead
     val ex = intercept[IllegalArgumentException] {
@@ -80,7 +79,7 @@ class DedupIndexSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("band family"), ex.getMessage)
     intercept[IllegalArgumentException] {
-      DedupIndex.prunedBands(spark, dir,
+      DedupIndex.prunedBands(spark, dir, DedupIndex.loadMeta(spark, dir),
         spark.range(1).selectExpr("id AS band", "id AS bv"))
     }
     // the merge upgrades: bands rebuild from the family-independent
@@ -88,7 +87,7 @@ class DedupIndexSpec extends AnyFunSuite {
     val batch = full.filter(col("doc_id") % 3 === 0)
     val (_, st) = DedupIndex.mergePublishStats(spark, dir, batch, dirB)
     assert(st.bandsFullRewrite, "family upgrade did not rewrite bands")
-    assert(DedupIndex.loadBandFamily(spark, dirB) == DedupIndex.BandFamily)
+    assert(DedupIndex.loadMeta(spark, dirB).bandfam == DedupIndex.BandFamily)
     DedupIndex.publishFrom(spark, full, dirC)
     assert(bandRows(DedupIndex.loadBands(spark, dirB)) ==
       bandRows(DedupIndex.loadBands(spark, dirC)),
@@ -97,8 +96,8 @@ class DedupIndexSpec extends AnyFunSuite {
     // upgrading merge MAINTAINS it — the merged probe equals the fresh
     // publish's at the preserved sample modulus
     assert(DedupIndex.hasProbe(spark, dirB))
-    assert(DedupIndex.loadProbeMod(spark, dirB) ==
-      DedupIndex.loadProbeMod(spark, dirC))
+    assert(DedupIndex.loadMeta(spark, dirB).probemod ==
+      DedupIndex.loadMeta(spark, dirC).probemod)
     def probeRows(dir2: String) = DedupIndex.loadProbe(spark, dir2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     assert(probeRows(dirB) == probeRows(dirC),
@@ -114,7 +113,7 @@ class DedupIndexSpec extends AnyFunSuite {
       Tables.documents(spark, TestSpark.sf0001)
         .select(col("doc_id"), col("text")), dir)
     assert(DedupIndex.hasProbe(spark, dir))
-    assert(DedupIndex.loadProbeMod(spark, dir) == 1,
+    assert(DedupIndex.loadMeta(spark, dir).probemod == 1,
       "500-doc fixture must sample every doc (mod 1)")
     val probe = DedupIndex.loadProbe(spark, dir)
     // 32 band rows per sampled doc that shingled
@@ -149,14 +148,14 @@ class DedupIndexSpec extends AnyFunSuite {
         r.getAs[String]("pbv"))).toSet
     def derived(dir: String) = graft.operators.DedupOps.probeBandsFromPres(
         spark, spark.read.parquet(s"$dir/probe").select("doc_id", "pre"),
-        DedupIndex.loadBandFamily(spark, dir))
+        DedupIndex.loadMeta(spark, dir).bandfam)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val v1 = DedupIndex.currentDir(spark, root)
+    val v1 = StorageOps.currentDir(spark, root)
     assert(stored(v1) == derived(v1),
       "publish-time stored probe bands != the on-read derivation")
     DedupIndex.escalateBandFamily(spark, root)
-    val v2 = DedupIndex.currentDir(spark, root)
-    assert(DedupIndex.loadBandFamily(spark, v2) == DedupIndex.BandFamily + 1)
+    val v2 = StorageOps.currentDir(spark, root)
+    assert(DedupIndex.loadMeta(spark, v2).bandfam == DedupIndex.BandFamily + 1)
     assert(stored(v2) == derived(v2),
       "escalated stored probe bands != the deeper-family derivation")
     assert(stored(v2) != stored(v1),
@@ -187,7 +186,7 @@ class DedupIndexSpec extends AnyFunSuite {
     DedupIndex.mergePublish(spark, dirA,
       full.filter(col("doc_id") % 2 === 1), dirB)
     for (dir <- Seq(dirA, dirB)) {
-      val parts = DedupIndex.loadParts(spark, dir)
+      val parts = DedupIndex.loadMeta(spark, dir).parts
       val root = new java.io.File(s"$dir/bands")
       val partDirs = root.listFiles().filter(_.isDirectory)
         .filter(_.getName.startsWith("dpart="))
@@ -308,7 +307,7 @@ class DedupIndexSpec extends AnyFunSuite {
     DedupIndex.loadDocs(spark, modern).write.parquet(s"$dir/docs")
     DedupIndex.loadBands(spark, modern).write.parquet(s"$dir/bands")
     assert(DedupIndex.isPublished(spark, dir))
-    assert(DedupIndex.loadParts(spark, dir) == 0)
+    assert(DedupIndex.loadMeta(spark, dir).parts == 0)
     // the no-meta acceptance is LEGACY-ONLY: a PARTITIONED layout
     // missing meta is a torn merge (crash between the dataset writes
     // and the meta-last commit), and must read as unpublished
@@ -337,7 +336,7 @@ class DedupIndexSpec extends AnyFunSuite {
     val batch = full.filter(col("doc_id") % 2 === 1)
     val (_, st) = DedupIndex.mergePublishStats(spark, dir, batch, upgraded)
     assert(st.docsFullRewrite && st.bandsFullRewrite, st.toString)
-    assert(DedupIndex.loadParts(spark, upgraded) == st.parts && st.parts > 0)
+    assert(DedupIndex.loadMeta(spark, upgraded).parts == st.parts && st.parts > 0)
     DedupIndex.mergePublish(spark, modern, batch, modernMerged)
     assert(docRows(DedupIndex.loadDocs(spark, upgraded)) ==
       docRows(DedupIndex.loadDocs(spark, modernMerged)))
@@ -361,20 +360,20 @@ class DedupIndexSpec extends AnyFunSuite {
     val root = s"$base/root"; val ref = s"$base/ref"
     DedupIndex.publishVersionedFrom(spark, full.filter(col("doc_id") % 3 === 0), root)
     assert(DedupIndex.isPublishedVersioned(spark, root))
-    val v1 = DedupIndex.currentDir(spark, root)
+    val v1 = StorageOps.currentDir(spark, root)
     // an index published at its own corpus count carries no drift
     assert(!DedupIndex.needsRebuild(spark, v1))
 
     val (_, st2) = DedupIndex.maintain(spark, root,
       full.filter(col("doc_id") % 3 === 1))
-    val v2 = DedupIndex.currentDir(spark, root)
+    val v2 = StorageOps.currentDir(spark, root)
     assert(v2 != v1, "maintain did not flip the pointer")
     assert(!st2.docsFullRewrite && !st2.bandsFullRewrite,
       s"fixture-scale maintain took the O(index) path: $st2")
 
     val ((nd3, nb3), _) = DedupIndex.maintain(spark, root,
       full.filter(col("doc_id") % 3 === 2))
-    val v3 = DedupIndex.currentDir(spark, root)
+    val v3 = StorageOps.currentDir(spark, root)
     // keep = 2: the active version plus one predecessor survive the prune
     val vdirs = new java.io.File(root).listFiles()
       .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
@@ -408,7 +407,7 @@ class DedupIndexSpec extends AnyFunSuite {
     DedupIndex.publishFrom(spark,
       Tables.documents(spark, TestSpark.sf0001)
         .select(col("doc_id"), col("text")), dir)
-    val ndocs = DedupIndex.loadNDocs(spark, dir)
+    val ndocs = DedupIndex.loadMeta(spark, dir).ndocs
     assert(ndocs == DedupIndex.loadDocs(spark, dir).count())
     val widths = DedupIndex.loadBands(spark, dir)
       .groupBy("band", "minhash").count()
@@ -427,7 +426,7 @@ class DedupIndexSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text"))
     val root = s"${java.nio.file.Files.createTempDirectory("graft-idx-compact")}/root"
     DedupIndex.publishVersionedFrom(spark, full, root)
-    val live = DedupIndex.currentDir(spark, root)
+    val live = StorageOps.currentDir(spark, root)
     val rows0 = docRows(DedupIndex.loadDocs(spark, live))
     // fragment one docs partition the way a foreign writer would: split
     // its single file into two
@@ -443,7 +442,7 @@ class DedupIndexSpec extends AnyFunSuite {
 
     assert(DedupIndex.compactIfFragmented(spark, root),
       "hook did not detect the fragmented partition")
-    val compacted = DedupIndex.currentDir(spark, root)
+    val compacted = StorageOps.currentDir(spark, root)
     assert(compacted != live)
     for (ds <- Seq("docs", "bands");
         d <- new java.io.File(s"$compacted/$ds").listFiles()

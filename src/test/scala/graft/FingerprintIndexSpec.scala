@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.sources.FingerprintIndex
+import graft.sources.{FingerprintIndex, StorageOps}
 
 /** The fingerprint index carries the family's shared contracts: a
   * partition-level merge indistinguishable from a from-scratch publish of
@@ -259,7 +259,7 @@ class FingerprintIndexSpec extends AnyFunSuite {
     FingerprintIndex.publishGroups(spark,
       arrivals.groupBy("fp")
         .agg(count(lit(1)).as("n"), min("doc_id").as("rep")), dir)
-    val n0 = FingerprintIndex.loadNGroups(spark, dir)
+    val n0 = FingerprintIndex.loadMeta(spark, dir).ngroups
     val rows0 = groupRows(FingerprintIndex.loadGroups(spark, dir))
     // repeated empty triggers (a quiet ingest hour): each must be a full
     // no-op — the pre-fix behavior published a fresh version per trigger
@@ -284,7 +284,7 @@ class FingerprintIndexSpec extends AnyFunSuite {
         .agg(count(lit(1)).as("n"), min("doc_id").as("rep")), bdir)
     val (nb, stb) = FingerprintIndex.maintain(spark, bdir,
       sigs.limit(0), banded = true)
-    assert(nb == FingerprintIndex.loadNGroups(spark, bdir) &&
+    assert(nb == FingerprintIndex.loadMeta(spark, bdir).ngroups &&
       stb.dirtyParts == 0 && stb.copiedParts == 0 && !stb.fullRewrite)
     assert(versionDirs(bdir) == 1)
     spark.catalog.clearCache()
@@ -344,14 +344,14 @@ class FingerprintIndexSpec extends AnyFunSuite {
     val ng = FingerprintIndex.publishBandedSigs(spark, sigs, dir)
     assert(!FingerprintIndex.needsRebuild(spark, dir),
       "fresh publish reports drift")
-    assert(FingerprintIndex.loadNGroups(spark, dir) == ng)
-    assert(FingerprintIndex.loadParts(spark, dir) ==
-      FingerprintIndex.layoutPartsFor(ng))
+    assert(FingerprintIndex.loadMeta(spark, dir).ngroups == ng)
+    assert(FingerprintIndex.loadMeta(spark, dir).parts ==
+      StorageOps.layoutParts(ng, FingerprintIndex.RowsPerPart))
     assert(FingerprintIndex.lastAppliedBatch(spark, dir).isEmpty,
       "a plain publish must not record a batchId")
     // every band row's partition value sits inside the modulus, and the
     // 4x explosion accounts for every distinct signature exactly
-    val parts = FingerprintIndex.loadParts(spark, dir)
+    val parts = FingerprintIndex.loadMeta(spark, dir).parts
     val cur = s"$dir/${graft.sources.StorageOps.currentVersion(spark, dir).get}"
     val ipart = spark.read.parquet(s"$cur/bands")
       .select(col("ipart").cast("long")).distinct()
@@ -380,7 +380,7 @@ class FingerprintIndexSpec extends AnyFunSuite {
         .agg(count(lit(1)).as("n"), min("doc_id").as("rep")), dir)
     assert(!FingerprintIndex.needsRebuild(spark, dir))
     val cur = s"$dir/${graft.sources.StorageOps.currentVersion(spark, dir).get}"
-    val parts = FingerprintIndex.loadParts(spark, dir)
+    val parts = FingerprintIndex.loadMeta(spark, dir).parts
     val drifted = 500L * 1000 * 1000 // layoutPartsFor = 126 > the 64 floor
     val tmp = s"$cur/meta__drift"
     Seq((drifted, parts, -1L)).toDF("ngroups", "parts", "last_batch")

@@ -85,8 +85,8 @@ class IngestCycleSpec extends AnyFunSuite {
       graft.sources.DedupIndex.maintain(spark, root,
         full.filter(col("doc_id") === 450),
         precisionProbe = Some(graft.sources.PrecisionProbe(0.3)))
-      assert(graft.sources.DedupIndex.loadBandFamily(spark,
-        graft.sources.DedupIndex.currentDir(spark, root)) ==
+      assert(graft.sources.DedupIndex.loadMeta(spark,
+        graft.sources.StorageOps.currentDir(spark, root)).bandfam ==
         graft.sources.DedupIndex.BandFamily,
         "an un-tripped precision floor escalated the band family")
       source.addData(probes.toIndexedSeq: _*)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.RetrievalOps
-import graft.sources.LexIndex
+import graft.sources.{LexIndex, StorageOps}
 
 /** The published lexical posting-list artifact ([[graft.sources.LexIndex]]):
   *   - probe parity: searchBm25 against a fresh full-corpus publish is
@@ -42,7 +42,7 @@ class LexIndexSpec extends AnyFunSuite {
       "posting scan must carry a tpart partition filter:\n" + plan.take(2000))
     // the 12 query terms touch at most 12 of the 64 layout partitions —
     // the probe IO bound the partition filter above enforces
-    val parts = LexIndex.loadParts(spark, dir)
+    val parts = LexIndex.loadMeta(spark, dir).parts
     val touched = Tables.documents(spark, sf).sparkSession
       .createDataset(RetrievalOps.BmQueries.flatMap(_._2.split(" ")))(
         org.apache.spark.sql.Encoders.STRING)
@@ -77,21 +77,21 @@ class LexIndexSpec extends AnyFunSuite {
     val root = freshDir("ver")
     val corpus = Tables.documents(spark, sf)
     val v1 = LexIndex.publishVersioned(spark, corpus, root)
-    assert(LexIndex.currentDir(spark, root) == v1)
-    val before = LexIndex.searchBm25(spark, LexIndex.currentDir(spark, root),
+    assert(StorageOps.currentDir(spark, root) == v1)
+    val before = LexIndex.searchBm25(spark, StorageOps.currentDir(spark, root),
       RetrievalOps.BmQueries, RetrievalOps.Bm25TopK).collect().toSeq
     // simulate a republish that crashed AFTER writing its version dir
     // but BEFORE the pointer flip: readers must stay on v1 in full
     LexIndex.publishFrom(spark, corpus.filter(col("doc_id") < 10), s"$root/v2")
-    assert(LexIndex.currentDir(spark, root) == v1,
+    assert(StorageOps.currentDir(spark, root) == v1,
       "a dangling version dir must not move the pointer")
-    val still = LexIndex.searchBm25(spark, LexIndex.currentDir(spark, root),
+    val still = LexIndex.searchBm25(spark, StorageOps.currentDir(spark, root),
       RetrievalOps.BmQueries, RetrievalOps.Bm25TopK).collect().toSeq
     assert(still == before)
     // a completed publishVersioned (lands as v3) flips atomically
     val v3 = LexIndex.publishVersioned(spark,
       corpus.filter(col("doc_id") < 10), root)
-    assert(v3.endsWith("/v3") && LexIndex.currentDir(spark, root) == v3)
+    assert(v3.endsWith("/v3") && StorageOps.currentDir(spark, root) == v3)
   }
 
   test("stored df and meta totals equal corpus recomputation") {
@@ -109,7 +109,7 @@ class LexIndexSpec extends AnyFunSuite {
     val toks = Tables.documents(spark, sf)
       .select(operators.TextRules.tokens(col("text")).as("t"))
       .agg(count(lit(1)).as("n"), sum(size(col("t"))).as("s")).collect()(0)
-    assert(LexIndex.loadNDocs(spark, dir) == toks.getLong(0))
+    assert(LexIndex.loadMeta(spark, dir).ndocs == toks.getLong(0))
     val meta = spark.read.parquet(s"$dir/meta").collect()(0)
     assert(meta.getAs[Long]("sumdl") == toks.getLong(1))
     // dl is denormalized into every posting row: it must equal the docs

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.sources.{DedupIndex, FingerprintIndex, PrecisionProbe}
+import graft.sources.{DedupIndex, FingerprintIndex, PrecisionProbe, StorageOps}
 
 /** The ARMED precision floors (r16 verdict #2): a planted flood of
   * below-threshold near-pairs collapses a banded index's candidate
@@ -73,7 +73,7 @@ class PrecisionGateSpec extends AnyFunSuite {
     DedupIndex.publishVersionedFrom(spark, corpus, root)
 
     val before = DedupIndex.probePrecision(spark,
-      DedupIndex.currentDir(spark, root))
+      StorageOps.currentDir(spark, root))
     info(s"family-2 probe: $before")
     assert(before.candidates > 0, "flood produced no banded candidates")
     assert(before.below(0.5),
@@ -84,8 +84,8 @@ class PrecisionGateSpec extends AnyFunSuite {
     DedupIndex.maintain(spark, root, batch,
       precisionProbe = Some(PrecisionProbe(0.5)))
 
-    val live = DedupIndex.currentDir(spark, root)
-    assert(DedupIndex.loadBandFamily(spark, live) == 3,
+    val live = StorageOps.currentDir(spark, root)
+    assert(DedupIndex.loadMeta(spark, live).bandfam == 3,
       "tripped floor did not escalate the band family")
     val after = DedupIndex.probePrecision(spark, live)
     info(s"family-3 probe: $after")
@@ -124,8 +124,8 @@ class PrecisionGateSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("not restored"), ex.getMessage)
     // the escalation itself still published (family 3, pointer flipped)
-    assert(DedupIndex.loadBandFamily(spark,
-      DedupIndex.currentDir(spark, root)) == 3)
+    assert(DedupIndex.loadMeta(spark,
+      StorageOps.currentDir(spark, root)).bandfam == 3)
     spark.catalog.clearCache()
   }
 
@@ -136,11 +136,11 @@ class PrecisionGateSpec extends AnyFunSuite {
       docsDf(truePairs(2, 0L)), root)
     for (expect <- 3 to graft.functions.MinHashSig.MaxFamily) {
       assert(DedupIndex.escalateBandFamily(spark, root) == expect)
-      val live = DedupIndex.currentDir(spark, root)
-      assert(DedupIndex.loadBandFamily(spark, live) == expect)
+      val live = StorageOps.currentDir(spark, root)
+      assert(DedupIndex.loadMeta(spark, live).bandfam == expect)
       // geometry actually deepened: famBands(f) band rows per doc
       assert(DedupIndex.loadBands(spark, live).count() ==
-        DedupIndex.loadNDocs(spark, live) *
+        DedupIndex.loadMeta(spark, live).ndocs *
           graft.functions.MinHashSig.famBands(expect))
     }
     val ex = intercept[IllegalArgumentException] {
@@ -189,7 +189,7 @@ class PrecisionGateSpec extends AnyFunSuite {
     FingerprintIndex.maintain(spark, dir, arrivals, banded = true,
       precisionProbe = Some(PrecisionProbe(0.5)))
 
-    assert(FingerprintIndex.loadBandFamily(spark, dir) == 2,
+    assert(FingerprintIndex.loadMeta(spark, dir).bandfam == 2,
       "tripped floor did not escalate the band family")
     val after = FingerprintIndex.probePrecision(spark, dir)
     info(s"family-2 probe: $after")
@@ -199,13 +199,14 @@ class PrecisionGateSpec extends AnyFunSuite {
     // recall at the escalated family: a probe one bit off a stored
     // signature still finds it through the pruned band scan, with keys
     // derived at the ARTIFACT's recorded family
-    val fam = FingerprintIndex.loadBandFamily(spark, dir)
+    val fam = FingerprintIndex.loadMeta(spark, dir).bandfam
     val probeSig = trues.head ^ 1L
     val keys = Seq(probeSig).toDF("dh")
       .select(explode(expr(
         graft.sources.FingerprintIndex.bandsExpr("dh", fam))).as("b"))
       .select(col("b.band").as("band"), col("b.bv").as("bv"))
-    val matches = FingerprintIndex.prunedBands(spark, dir, keys)
+    val matches = FingerprintIndex.prunedBands(spark,
+        FingerprintIndex.open(spark, dir), keys)
       .join(keys, Seq("band", "bv"))
       .filter(expr(s"bit_count(dhash ^ ${probeSig}L) <= 3"))
       .select("dhash").distinct().collect().map(_.getLong(0)).toSet
@@ -242,7 +243,7 @@ class PrecisionGateSpec extends AnyFunSuite {
           failUnrecovered = true)))
     }
     assert(ex.getMessage.contains("not restored"), ex.getMessage)
-    assert(FingerprintIndex.loadBandFamily(spark, bdir) == 2)
+    assert(FingerprintIndex.loadMeta(spark, bdir).bandfam == 2)
     spark.catalog.clearCache()
   }
 
@@ -294,8 +295,8 @@ class PrecisionGateSpec extends AnyFunSuite {
     val root = s"$base/root"
     DedupIndex.publishVersionedFrom(spark, docsDf(truePairs(4, 0L)), root)
     DedupIndex.escalateBandFamily(spark, root)
-    assert(DedupIndex.loadBandFamily(spark,
-      DedupIndex.currentDir(spark, root)) == 3)
+    assert(DedupIndex.loadMeta(spark,
+      StorageOps.currentDir(spark, root)).bandfam == 3)
     // a microbatch carrying a near-dup of corpus doc 0 (J ≈ 0.94): the
     // foreachBatch probe must derive its band keys at FAMILY 3 — keys
     // at the publish default would silently match nothing

@@ -102,7 +102,7 @@ class TornVersionSpec extends AnyFunSuite {
     assertTornRecovery(root,
       published = () => DedupIndex.isPublishedVersioned(spark, root),
       rows = () => DedupIndex
-        .loadDocs(spark, DedupIndex.currentDir(spark, root)).count(),
+        .loadDocs(spark, StorageOps.currentDir(spark, root)).count(),
       // the crash window: the docs dataset landed, bands/meta did not
       writeTorn = () => spark.read.parquet(s"$root/v1/docs")
         .write.parquet(s"$root/v2/docs"),
@@ -111,7 +111,7 @@ class TornVersionSpec extends AnyFunSuite {
       maintain2 = () => DedupIndex.maintain(spark, root,
         full.filter(col("doc_id") % 3 === 2)))
     assert(DedupIndex
-      .loadDocs(spark, DedupIndex.currentDir(spark, root)).count() ==
+      .loadDocs(spark, StorageOps.currentDir(spark, root)).count() ==
       full.count(),
       "recovered index lost corpus members across the torn-version cycle")
     spark.catalog.clearCache()
@@ -133,19 +133,39 @@ class TornVersionSpec extends AnyFunSuite {
     spark.read.parquet(s"$root/v1/docs").write.parquet(s"$root/v2/docs")
     spark.read.parquet(s"$root/v1/bands").write.parquet(s"$root/v2/bands")
     assert(StorageOps.currentVersion(spark, root).contains("v1"))
-    assert(DedupIndex.loadBandFamily(spark,
-      DedupIndex.currentDir(spark, root)) == DedupIndex.BandFamily,
+    assert(DedupIndex.loadMeta(spark,
+      StorageOps.currentDir(spark, root)).bandfam == DedupIndex.BandFamily,
       "a torn escalation changed the family consumers derive keys at")
     // retry: numbers past the torn dir, publishes family 3 atomically
     assert(DedupIndex.escalateBandFamily(spark, root) == 3)
-    val live = DedupIndex.currentDir(spark, root)
+    val live = StorageOps.currentDir(spark, root)
     assert(live.split('/').last.stripPrefix("v").toInt >= 3,
       s"escalation re-used the torn version number: $live")
-    assert(DedupIndex.loadBandFamily(spark, live) == 3)
+    assert(DedupIndex.loadMeta(spark, live).bandfam == 3)
     assert(DedupIndex.loadBands(spark, live).count() ==
-      DedupIndex.loadNDocs(spark, live) *
+      DedupIndex.loadMeta(spark, live).ndocs *
         graft.functions.MinHashSig.famBands(3))
     spark.catalog.clearCache()
+  }
+
+  test("retention deletes a crashed pointer flip's temp file, never " +
+      "_current") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-torn-ptr").toString
+    for (_ <- 1 to 3) StorageOps.publishVersioned(spark.range(3).toDF(), dir)
+    // the crash window of a POSIX flip: the staged pointer was written,
+    // the rename never ran
+    val staged = new org.apache.hadoop.fs.Path(dir, "._current_tmp_v4")
+    val fs = staged.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(staged, true)
+    out.write("v4".getBytes("UTF-8"))
+    out.close()
+    assert(StorageOps.pruneVersions(spark, dir, keep = 2) == Seq("v1"))
+    assert(!fs.exists(staged), "the dangling pointer temp file survived")
+    assert(StorageOps.currentVersion(spark, dir).contains("v3"),
+      "retention touched the live pointer")
+    assert(versionDirs(dir) == Set("v2", "v3"))
+    assert(StorageOps.loadPublished(spark, dir).count() == 3)
   }
 
   test("vector index: torn version is invisible, skipped, pruned; " +

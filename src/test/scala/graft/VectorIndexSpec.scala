@@ -111,7 +111,7 @@ class VectorIndexSpec extends AnyFunSuite {
     assert(StorageOps.currentVersion(spark, dirA).contains("v2"))
     assert(spark.read.parquet(s"$dirA/v1/cells").count() == oldCorpus.count())
     // prune removes only non-active versions
-    assert(VectorIndex.pruneVersions(spark, dirA, keep = 1) == Seq("v1"))
+    assert(StorageOps.pruneVersions(spark, dirA, keep = 1) == Seq("v1"))
     assert(VectorIndex.isPublished(spark, dirA))
     spark.catalog.clearCache()
   }
@@ -517,8 +517,8 @@ class VectorIndexSpec extends AnyFunSuite {
     VectorIndex.publishFrom(spark, even, dir, pq = true, pqResidual = true)
     VectorIndex.publishFrom(spark, even, raw, pq = true)
     // the mode is recorded, and a raw (or legacy) artifact reads false
-    assert(VectorIndex.pqResidual(spark, dir), "residual flag not recorded")
-    assert(!VectorIndex.pqResidual(spark, raw), "raw artifact read residual")
+    assert(VectorIndex.loadMeta(spark, dir).pqres, "residual flag not recorded")
+    assert(!VectorIndex.loadMeta(spark, raw).pqres, "raw artifact read residual")
     // the mode is load-bearing: residual codes differ from raw codes
     // over the same corpus, books and geometry schedules
     assert(codeRows(VectorIndex.loadCodes(spark, dir)) !=
@@ -530,7 +530,7 @@ class VectorIndexSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2)))
     val (m1, st) = VectorIndex.mergePublishStats(spark, dir, odd)
     assert(!st.fullRewrite, st.toString)
-    assert(VectorIndex.pqResidual(spark, dir), "merge dropped the mode")
+    assert(VectorIndex.loadMeta(spark, dir).pqres, "merge dropped the mode")
     assert(VectorIndex.loadPqBooks(spark, dir)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2)))
       .toSet == books0.toSet, "merge retrained the frozen residual books")
@@ -560,7 +560,7 @@ class VectorIndexSpec extends AnyFunSuite {
       allEmb.filter(col("vec_id") < 0),
       recallProbe = Some(VectorIndex.RecallProbe(q, floor = 1.01)))
     assert(rebuilt, "the unreachable floor did not force the retrain")
-    assert(VectorIndex.pqResidual(spark, dir) &&
+    assert(VectorIndex.loadMeta(spark, dir).pqres &&
       VectorIndex.hasPq(spark, dir),
       "the recall-gated rebuild dropped the residual mode")
     spark.catalog.clearCache()
