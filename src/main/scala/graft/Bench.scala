@@ -49,6 +49,27 @@ import org.apache.spark.sql.SparkSession
   *     same-round BENCH_LOCAL refresh ([[selectLflPrior]]).
   */
 object Bench {
+  /** Longest bench_summary line: a reader that keeps only a
+    * ~2,000-char stdout tail, which also holds sbt's closing `[success]`
+    * line, still gets the line whole. */
+  private[graft] val SummaryLineChars = 1800
+
+  /** The bench_summary line, `head` and `end` around the per-query map
+    * folded in so the tail window keeps it whole: slowest first, as many
+    * queries as fit a [[SummaryLineChars]] line (the 171 names alone run
+    * past the window), `queries_n` counting the ones that fit. Values
+    * print with the full line's `num`, so [[parsePriorQueries]] reads
+    * one value per query from either line. */
+  private[graft] def summaryLine(head: String, end: String,
+      results: Seq[(String, Double)], num: Double => String): String = {
+    val entries = results.filter(_._2 >= 0).sortBy(-_._2).map { case (k, v) =>
+      "\"" + k + "\":" + num(v) }
+    val room = SummaryLineChars - head.length - end.length -
+      s""","queries":{},"queries_n":${entries.size}""".length
+    val fit = entries.scanLeft(-1)(_ + _.length + 1).tail.takeWhile(_ <= room).size
+    head + s""","queries":${entries.take(fit).mkString("{", ",", "}")},"queries_n":$fit""" + end
+  }
+
   /** Extract the per-query seconds map from a prior BENCH artifact.
     * Two shapes exist in the wild: this object's own single-line output
     * (a "queries" object), and the round driver's wrapper, which embeds a
@@ -412,7 +433,9 @@ object Bench {
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
     val failed = results.count(_._2 < 0)
-    println(s"""{"metric":"bench_summary","total":${num(total)},"observability":${num(obsTotal)},"n":${results.size},"failed":$failed$lflJson,"slowest":$slowest,"sf":"$sfDir"}""")
+    println(summaryLine(
+      s"""{"metric":"bench_summary","total":${num(total)},"observability":${num(obsTotal)},"n":${results.size},"failed":$failed$lflJson,"slowest":$slowest""",
+      s""","sf":"$sfDir"}""", results.toSeq, num))
     spark.stop()
   }
 }

@@ -993,18 +993,47 @@ object DedupOps {
     * anyway. The VectorIndex gate convention. */
   private[graft] val IndexProbePruneRowLimit = 500L * 1000
 
+  /** Probe batches of at most this many docs are answered on the driver
+    * ([[crossDedupOnDriver]]): a few bounded reads of the published
+    * artifact instead of a distributed band join, whose two dozen jobs
+    * of fixed cost, not data, set a small probe's latency. DRIVER
+    * BUDGET at the gate: the batch's hash sets (≤ 16 × DocTokenCap
+    * longs, 2.5 MB), its band keys (≤ 16 × famBands), the band rows of
+    * those keys (≤ keys × (LshBucketCap + 1); a wider bucket sends the
+    * probe to the distributed plan) and the candidates' hash sets. */
+  private val DriverProbeDocs = 16
+
   /** Cross-dedup against a PUBLISHED [[graft.sources.DedupIndex]]: the
     * corpus bands and hash sets both come from the loaded artifact (no
     * corpus re-shingle, no re-banding — the production ingest economics
     * the index exists for). `inDocs` is the incoming batch's doc-hash
-    * frame. A batch at or below `pruneRowLimit` docs reads only the band
-    * partitions its keys touch (PartitionFilters pinned in PlanShapeSpec
-    * "dedup index probe prunes band partitions"); pruning is exact
-    * because a (band, minhash) bucket lives wholly inside one partition,
-    * so the width-cap statistics over the pruned scan are unchanged. A
-    * caller that already knows the batch bound (a per-trigger streaming
-    * probe) passes `knownBatchRows` and the gate count is skipped — the
-    * VectorIndex convention. */
+    * frame. Output (doc_id, match_id, jaccard, cap_engaged), ordered by
+    * doc_id.
+    *
+    * SMALL BATCH (at most 16 docs and at most `pruneRowLimit`): one
+    * `limit(17)` collect of the batch, which is also the size gate, then
+    * [[crossDedupOnDriver]] — the batch signs and bands on the driver,
+    * one key-filtered band read and one candidate doc read
+    * ([[graft.sources.DedupIndex.lookupBands]]/[[graft.sources.DedupIndex
+    * .lookupDocs]]), verification on the driver. It returns a local
+    * frame and persists nothing, so there is no cache to release. Its
+    * band read carries the keys' static `dpart` PartitionFilter (pinned
+    * in PlanShapeSpec "dedup index probe prunes band partitions"). A
+    * bucket wider than LshBucketCap among the batch's keys (the driver
+    * would not hold it whole) falls back to the distributed plan.
+    *
+    * LARGER BATCHES run the distributed band join. A batch at or below
+    * `pruneRowLimit` docs reads only the band partitions its keys touch;
+    * pruning is exact because a (band, minhash) bucket lives wholly
+    * inside one partition, so the width-cap statistics over the pruned
+    * scan are unchanged. `pruneRowLimit = 0` forces the full band scan.
+    * A caller that already knows the batch bound (a per-trigger
+    * streaming probe) passes `knownBatchRows`: a bound above the
+    * small-batch gate skips the batch collect, and the distributed
+    * plan's gate count is skipped too — the VectorIndex convention.
+    * Without it a larger batch pays the gate collect (one pass over the
+    * batch frame) before that plan. That plan persists its band and
+    * candidate frames; runners release them via clearCache. */
   def crossDedupBestFromIndex(s: SparkSession, indexDir: String,
       inDocs: DataFrame, cap: Long = LshBucketCap,
       refine: Boolean = true,
@@ -1014,6 +1043,93 @@ object DedupOps {
     // ONE meta read serves the family, the usability check and the
     // pruning modulus below
     val m = DI.loadMeta(s, indexDir)
+    DI.requireUsableBandFamily(indexDir, m)
+    val gate = math.min(DriverProbeDocs.toLong, pruneRowLimit)
+    val batchDf = inDocs.select("doc_id", "hs", "n")
+    val batch = Option.when(gate > 0 && !knownBatchRows.exists(_ > gate)) {
+      // coalesce(1): one task reads the batch partitions in turn until
+      // the limit, so the gate is one result job at any parallelism
+      batchDf.coalesce(1).limit(gate.toInt + 1).collect()
+    }.filter(_.length <= gate)
+    batch.flatMap(b =>
+        crossDedupOnDriver(s, indexDir, m, b, batchDf.schema, cap, refine))
+      .getOrElse(crossDedupDistributed(s, indexDir, m, inDocs, cap, refine,
+        pruneRowLimit, knownBatchRows.orElse(batch.map(_.length.toLong))))
+  }
+
+  /** The small-batch answer of [[crossDedupBestFromIndex]], computed on
+    * the driver from a collected batch of (doc_id, hs, n) rows; None
+    * when a bucket the batch hits is wider than LshBucketCap. The batch
+    * signs at the artifact's band family with the same `minhash_sig`
+    * expression the distributed plan evaluates, folded over a local
+    * relation. Under the row bound the driver holds every bucket the
+    * batch hits whole, so the width split, `cap_engaged` and `refine`
+    * follow [[crossDedupBestFromBands]] exactly: a bucket wider than
+    * `cap` contributes its min doc_id (and, with `refine`, all its
+    * members) and flags the probe doc. Verification and the best match
+    * (jaccard desc, match_id asc) are the distributed plan's arithmetic. */
+  private def crossDedupOnDriver(s: SparkSession, indexDir: String,
+      m: graft.sources.DedupIndex.Meta,
+      batch: Array[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType, cap: Long,
+      refine: Boolean): Option[DataFrame] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val DI = graft.sources.DedupIndex
+    val MH = graft.functions.MinHashSig
+    graft.functions.GraftFunctions.register(s)
+    val sigs = s.createDataFrame(batch.toList.asJava, schema)
+      .select(col("doc_id"),
+        expr(s"minhash_sig(hs, ${MH.famRows(m.bandfam)}, ${MH.famBands(m.bandfam)})"))
+      .collect().map(r => r.getLong(0) ->
+        Option(r.getSeq[Long](1)).fold(Seq.empty[(Int, Long)])(
+          _.zipWithIndex.map { case (v, b) => (b, v) }))
+    val keys = sigs.flatMap(_._2).toSet
+    val buckets =
+      (if (keys.isEmpty) Array.empty[(Int, Long, Long)]
+       else DI.lookupBands(s, indexDir, m, keys, LshBucketCap))
+        .groupBy(r => (r._1, r._2)).map { case (k, rs) => k -> rs.map(_._3) }
+    if (buckets.values.exists(_.length > LshBucketCap)) return None
+    val cands = sigs.map { case (id, ks) =>
+      val hit = ks.flatMap(buckets.get)
+      val hot = hit.filter(_.length > cap)
+      val ids = hit.filter(_.length <= cap).flatten ++ hot.map(_.min) ++
+        (if (refine) hot.flatten else Nil)
+      (id, ids.toSet, hot.nonEmpty)
+    }
+    val candIds = cands.flatMap(_._2).toSet
+    val corp = (if (candIds.isEmpty) Array.empty[(Long, Array[Long], Long)]
+      else DI.lookupDocs(s, indexDir, m, candIds))
+      .map { case (id, hs, n) => id -> (hs.toSet, n) }.toMap
+    val inHs = batch.map(r => r.getLong(0) ->
+      (r.getSeq[Long](1).toSet, r.getAs[Number](2).longValue)).toMap
+    val rows = cands.toSeq.flatMap { case (id, ids, flagged) =>
+      val (ha, na) = inHs(id)
+      ids.toSeq.flatMap(c => corp.get(c).map { case (hb, nb) =>
+        // size(array_intersect) counts distinct common hashes; the
+        // division is the distributed plan's double / long
+        val inter = ha.count(hb).toLong
+        c -> inter.toDouble / (na + nb - inter)
+      }).filter(_._2 >= 0.8)
+        .minByOption { case (c, j) => (-j, c) }
+        .map { case (c, j) => Row(id, c, j, flagged) }
+    }.sortBy(_.getLong(0))
+    Some(s.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("doc_id", LongType, schema("doc_id").nullable),
+      StructField("match_id", LongType),
+      StructField("jaccard", DoubleType),
+      StructField("cap_engaged", BooleanType, nullable = false)))))
+  }
+
+  /** The distributed plan of [[crossDedupBestFromIndex]] (batches above
+    * the small-batch gate, and a small batch whose buckets overflow the
+    * driver's row bound). */
+  private def crossDedupDistributed(s: SparkSession, indexDir: String,
+      m: graft.sources.DedupIndex.Meta, inDocs: DataFrame, cap: Long,
+      refine: Boolean, pruneRowLimit: Long,
+      knownBatchRows: Option[Long]): DataFrame = {
+    val DI = graft.sources.DedupIndex
     val corpDocs = DI.loadDocs(s, indexDir)
     // the batch signs at the ARTIFACT's recorded band family — against a
     // precision-escalated index, family-2 keys would silently miss every

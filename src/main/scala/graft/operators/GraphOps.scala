@@ -163,8 +163,14 @@ object GraphOps {
         "contrib subtree twice (nodes join + total-mass aggregate), so " +
         "plan size grows 2^checkpointEvery between cuts")
     val Seq(srcC, dstC, wC) = edges.columns.toSeq.take(3)
+    // a null weight fails by name in the projection itself: the folded
+    // aggregation below would otherwise read an all-null-weight vertex
+    // as dangling (null wout) and silently redistribute its rank
     val e = graft.Caching.persist(edges.select(
-      col(srcC).as("src"), col(dstC).as("dst"), col(wC).cast("double").as("w")))
+      col(srcC).as("src"), col(dstC).as("dst"),
+      coalesce(col(wC).cast("double"), raise_error(concat(
+        lit("pageRank: null edge weight on edge "), col(srcC).cast("string"),
+        lit(" -> "), col(dstC).cast("string")))).as("w")))
     // ONE vertex-keyed aggregation yields the vertex set (keys), the
     // out-weight sums (non-null wout) AND the non-dangling src set — r17
     // built each with its own |E|-row exchange + cache (nodes distinct,

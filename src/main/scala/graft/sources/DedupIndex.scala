@@ -29,11 +29,21 @@ import org.apache.spark.sql.functions._
   * partition directory holds ONE file; `parts` derives from the corpus
   * size at publish ([[StorageOps.layoutParts]] at [[RowsPerPart]]) and
   * is recorded in `meta`. The partition column
-  * is a pure function of the band join key, so a small probe batch can
-  * derive its partition-value set and read only those partitions
-  * ([[prunedBands]] — the read cut behind
-  * DedupOps.crossDedupBestFromIndex), while `parts` stays layout-only:
-  * a republish may change it without invalidating any key.
+  * is a pure function of the band join key, so a probe batch can
+  * derive its partition-value set and read only those partitions,
+  * while `parts` stays layout-only: a republish may change it without
+  * invalidating any key. Two reads are cut this way, both behind
+  * DedupOps.crossDedupBestFromIndex:
+  *   - [[lookupBands]]/[[lookupDocs]], the small-batch LOOKUP (a batch
+  *     of at most 16 docs, answered on the driver): the band rows of
+  *     exactly the batch's keys, at most LshBucketCap + 1 per key, then
+  *     the candidates' doc rows — one job each, nothing persisted. The
+  *     driver holds the batch's hash sets (≤ 16 × DocTokenCap longs),
+  *     at most keys × (LshBucketCap + 1) band rows and the candidates'
+  *     hash sets; a key with a wider bucket sends the probe to the
+  *     distributed plan.
+  *   - [[prunedBands]], the distributed band join's pruned scan for
+  *     larger batches.
   *
   * Both datasets commit atomically through the Spark committer (task temp
   * dirs → rename → `_SUCCESS`), so a reader that checks [[isPublished]]
@@ -125,7 +135,7 @@ object DedupIndex {
       m("probemod", 0L), m("bandfam", 1))
   }
 
-  private def requireUsableBandFamily(indexDir: String, m: Meta): Unit =
+  private[graft] def requireUsableBandFamily(indexDir: String, m: Meta): Unit =
     require(m.famUsable,
       s"band index at $indexDir was published under band family " +
         s"${m.bandfam} (this build derives families $BandFamily.." +
@@ -756,4 +766,72 @@ object DedupIndex {
     StorageOps.prunedByVals(raw, "dpart", parts, nParts)
       .select("doc_id", "hs", "n", "truncated")
   }
+
+  /** The artifact-side LOOKUP behind a driver-answered probe: the band
+    * rows of exactly the given (band, minhash) keys, read from only the
+    * keys' `dpart` partitions ([[StorageOps.readPartitions]]: a static
+    * PartitionFilter, as in [[prunedBands]], and no inference or listing
+    * job) and collected in ONE job. Each key returns at most `perKey + 1`
+    * rows, so the driver holds at most keys × (perKey + 1) rows whatever
+    * the buckets' widths; a key that returns more than `perKey` rows has
+    * a wider bucket, and its rows are not the whole bucket. A legacy
+    * layout (parts = 0) is scanned whole, key-filtered. */
+  private[graft] def lookupBands(s: SparkSession, indexDir: String, m: Meta,
+      keys: Set[(Int, Long)], perKey: Long): Array[(Int, Long, Long)] = {
+    import s.implicits._
+    requireUsableBandFamily(indexDir, m)
+    keyedRead(s, s"$indexDir/bands", BandsLayout, m,
+        keys.toSeq.toDF("band", "minhash"),
+        dpartOf(col("band"), col("minhash"), m.parts))
+      .select("band", "minhash", "doc_id").as[(Int, Long, Long)]
+      .mapPartitions { it =>
+        val seen = scala.collection.mutable.HashMap.empty[(Int, Long), Long]
+        it.filter { case (b, v, _) =>
+          keys((b, v)) && {
+            val c = seen.getOrElse((b, v), 0L) + 1
+            seen((b, v)) = c
+            c <= perKey + 1
+          }
+        }
+      }.collect()
+  }
+
+  /** The doc-store twin of [[lookupBands]]: (doc_id, hs, n) of exactly
+    * the given ids, read from their `docs` partitions ([[prunedDocs]]'
+    * rule) and collected in one job. */
+  private[graft] def lookupDocs(s: SparkSession, indexDir: String, m: Meta,
+      ids: Set[Long]): Array[(Long, Array[Long], Long)] = {
+    import s.implicits._
+    keyedRead(s, s"$indexDir/docs", DocsLayout, m, ids.toSeq.toDF("doc_id"),
+        docPartOf(col("doc_id"), m.parts))
+      .filter(col("doc_id").isin(ids.toSeq: _*))
+      .select("doc_id", "hs", "n").as[(Long, Array[Long], Long)].collect()
+  }
+
+  // the stored schemas of the partitioned layout, partition column
+  // included: what a StorageOps.readPartitions read declares
+  private val BandsLayout = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("band", IntegerType),
+      StructField("minhash", LongType), StructField("doc_id", LongType),
+      StructField("dpart", IntegerType)))
+  }
+  private val DocsLayout = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_id", LongType),
+      StructField("hs", ArrayType(LongType)), StructField("n", LongType),
+      StructField("truncated", BooleanType), StructField("dpart", IntegerType)))
+  }
+
+  /** The dataset at `path` read at the partitions of driver-held keys,
+    * through the chaos gate: `part` is evaluated over the local `keys`
+    * frame, which the optimizer folds on the driver (no job). A legacy
+    * layout (parts = 0) reads whole. */
+  private def keyedRead(s: SparkSession, path: String,
+      layout: org.apache.spark.sql.types.StructType, m: Meta, keys: DataFrame,
+      part: org.apache.spark.sql.Column): DataFrame =
+    graft.Chaos.gate(s,
+      if (m.parts <= 0) s.read.parquet(path)
+      else StorageOps.readPartitions(s, path, layout, "dpart",
+        keys.select(part).collect().map(_.getLong(0)).distinct.toSeq, m.parts))
 }

@@ -403,19 +403,57 @@ object StorageOps {
   /** Read `<dir>/meta` ONCE. A dataset holding anything but exactly one
     * row (a torn or foreign write) fails with an error naming the path;
     * an absent dataset reads as a row with no fields, so required
-    * fields fail by name and legacy ones take their defaults. */
+    * fields fail by name and legacy ones take their defaults. The row is
+    * decoded on the driver from its parquet file(s): a Spark read of a
+    * one-row dataset costs a schema-inference job and a collect job, the
+    * fixed cost of every probe that opens an index. */
   def readMeta(spark: SparkSession, dir: String): MetaRow = {
     val p = new Path(dir, "meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
     val row =
       if (!fs.exists(p)) None
-      else spark.read.parquet(p.toString).collect() match {
+      else fs.listStatus(p).filter(f => f.isFile &&
+          !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+        .flatMap(f => metaRows(f.getPath, conf)) match {
         case Array(r) => Some(r)
         case rows => throw new IllegalStateException(
           s"meta at $p holds ${rows.length} rows, expected exactly one " +
             "(torn or foreign write)")
       }
     new MetaRow(p.toString, row)
+  }
+
+  /** The rows of one meta parquet file, decoded on the driver. Meta
+    * fields are Int, Long or Boolean scalars; they decode to the JVM
+    * types a Spark read yields, an unset field to null. */
+  private def metaRows(file: Path,
+      conf: org.apache.hadoop.conf.Configuration): Seq[org.apache.spark.sql.Row] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import org.apache.spark.sql.types._
+    val reader = org.apache.parquet.hadoop.ParquetReader.builder(
+      new org.apache.parquet.hadoop.example.GroupReadSupport(), file)
+      .withConf(conf).build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+      val t = g.getType
+      val fields = (0 until t.getFieldCount).map { i =>
+        val (dt, get): (DataType, () => Any) =
+          t.getType(i).asPrimitiveType.getPrimitiveTypeName match {
+            case INT32 => (IntegerType, () => g.getInteger(i, 0))
+            case INT64 => (LongType, () => g.getLong(i, 0))
+            case BOOLEAN => (BooleanType, () => g.getBoolean(i, 0))
+            case other => throw new IllegalStateException(
+              s"meta at $file: field ${t.getFieldName(i)} is $other, " +
+                "not an Int, Long or Boolean")
+          }
+        (StructField(t.getFieldName(i), dt),
+          if (g.getFieldRepetitionCount(i) == 0) null else get())
+      }
+      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+        fields.map(_._2).toArray, StructType(fields.map(_._1))): org.apache.spark.sql.Row
+    }.toList
+    finally reader.close()
   }
 
   /** Write `meta` (a case class whose field names are the stored column
@@ -483,6 +521,36 @@ object StorageOps {
       idx.filter(org.apache.spark.sql.functions.col(partCol)
         .isin(lits: _*))
     } else idx
+  }
+
+  /** The partitions `vals` (of `nParts`) of the hive-partitioned dataset
+    * at `path`, read with its known `schema` (data columns and the
+    * partition column `partCol`) — the small-probe read. A plain read
+    * costs a schema-inference job and, past the session's
+    * parallel-listing threshold of partition directories, a listing
+    * job; here the named directories that exist are handed to the
+    * reader in groups at that threshold (listed on the driver) and the
+    * groups' scans unioned, so the caller's action is the read's only
+    * job. The static `isin` ([[prunedByVals]]) keeps a PartitionFilter
+    * on every scan. */
+  def readPartitions(spark: SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType, partCol: String,
+      vals: Seq[Long], nParts: Int): DataFrame = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val want = vals.map(v => s"$partCol=$v").toSet
+    val dirs = fs.listStatus(root)
+      .filter(st => st.isDirectory && want(st.getPath.getName))
+      .map(_.getPath.toString).sorted.toSeq
+    val threshold = spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val scan =
+      if (dirs.isEmpty) spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      else dirs.grouped(math.max(1, threshold)).map(g =>
+          spark.read.schema(schema).option("basePath", path).parquet(g: _*))
+        .reduce(_ union _)
+    prunedByVals(scan, partCol, vals.distinct.toArray, nParts)
   }
 
   /** Hard-copy every `partCol=<v>` partition directory of `prevPath`

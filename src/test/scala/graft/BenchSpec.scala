@@ -6,6 +6,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * drives the outlier re-measure pass (r3/r4 both recorded >3x phantom
   * readings from transient host contention; see Bench scaladoc). */
 class BenchSpec extends AnyFunSuite {
+  test("the summary line carries the slowest queries that fit the tail window") {
+    // 171 registry-length names: the whole map cannot fit, so the line
+    // keeps the slowest ones, stays under the cap and says how many
+    val results = (0 until 171).map(i =>
+      f"q_some_registered_query_name_$i%03d" -> (0.01 * i)) :+ ("q_failed" -> -1.0)
+    val head = """{"metric":"bench_summary","total":1.0,"slowest":{}"""
+    val line = Bench.summaryLine(head, ""","sf":"/x"}""", results,
+      v => String.format(java.util.Locale.ROOT, "%.4f", v))
+    assert(line.length <= Bench.SummaryLineChars, s"${line.length} chars")
+    val m = Bench.parsePriorQueries(line)
+    val n = """"queries_n":(\d+)""".r.findFirstMatchIn(line).get.group(1).toInt
+    assert(m.size == n && n > 10 && n < 171, s"$n queries in the line")
+    assert(m.keySet == results.sortBy(-_._2).take(n).map(_._1).toSet)
+    assert(m.forall { case (k, v) => math.abs(v - results.toMap.apply(k)) < 1e-9 })
+    assert(line.startsWith(head) && line.endsWith(""","sf":"/x"}"""))
+  }
+
   test("parsePriorQueries extracts the per-query seconds map") {
     val line = """{"metric":"total","value":43.0,"unit":"sec",""" +
       """"queries":{"q_a":1.5,"q_b":-1.0,"q_c":0.123},"sf":"/x"}"""

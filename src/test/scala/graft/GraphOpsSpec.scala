@@ -35,6 +35,23 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(labelsOf(edges, Long.MaxValue) == labelsOf(edges, 0L))
   }
 
+  test("pageRank rejects a null edge weight by name instead of reading " +
+      "its vertex as dangling") {
+    import spark.implicits._
+    // vertex 2's only out-edge has a null weight: the folded vertex
+    // aggregation would give it a null out-weight, i.e. dangling
+    val edges = Seq((1L, 2L, Some(1.0)), (2L, 3L, None), (3L, 1L, Some(2.0)))
+      .toDF("src", "dst", "w")
+    val ex = intercept[Exception] {
+      GraphOps.pageRank(spark, edges, iters = 2).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toList
+    assert(msgs.exists(_.contains("pageRank: null edge weight on edge 2 -> 3")),
+      msgs.mkString("\n"))
+    spark.catalog.clearCache()
+  }
+
   test("q_dedup_cluster output is unchanged by the GraphOps refactor") {
     val out = SparkEntry.queries("q_dedup_cluster")(spark, TestSpark.sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

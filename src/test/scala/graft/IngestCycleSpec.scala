@@ -30,7 +30,16 @@ class IngestCycleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val d = TestSpark.sf0001
 
-  private def pinnedRdds: Int = spark.sparkContext.getPersistentRDDs.size
+  /** The RDD-id watermark of a test, taken right after its own
+    * clearCache(): an empty RDD takes the next id and runs no job. */
+  private def rddMark(): Int = spark.sparkContext.emptyRDD[Unit].id
+  /** Persistent RDDs created after `mark` — the ones this test pinned.
+    * A persistent RDD an earlier suite left (pageRank's final rank
+    * checkpoint is one) sits in a weak-valued map and leaves it at
+    * whatever GC comes next, so counting it made the swap check depend
+    * on test order and GC timing. */
+  private def pinnedRdds(mark: Int): Int =
+    spark.sparkContext.getPersistentRDDs.keys.count(_ > mark)
   private def versionDirs(root: String): Int =
     Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
       .count(f => f.isDirectory && f.getName.matches("v\\d+"))
@@ -39,6 +48,7 @@ class IngestCycleSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     spark.catalog.clearCache()
+    val mark = rddMark()
     val full = Tables.documents(spark, d).select(col("doc_id"), col("text"))
     // planted pair 5 ~ 450 is the FRESHNESS signal (450 withheld from
     // v1); a CONTINUITY pair is any verified batch pair not touching it
@@ -71,7 +81,7 @@ class IngestCycleSpec extends AnyFunSuite {
     try {
       source.addData(probes.toIndexedSeq: _*)
       q.processAllAvailable()
-      pins += pinnedRdds
+      pins += pinnedRdds(mark)
       assert(trig.head.contains((math.min(ca, cb), math.max(ca, cb))),
         s"v1 continuity pair ($ca, $cb) not matched at trigger 1")
       assert(!trig.head.contains((5L, 450L)),
@@ -91,7 +101,7 @@ class IngestCycleSpec extends AnyFunSuite {
         "an un-tripped precision floor escalated the band family")
       source.addData(probes.toIndexedSeq: _*)
       q.processAllAvailable()
-      pins += pinnedRdds
+      pins += pinnedRdds(mark)
       assert(trig.last.contains((5L, 450L)),
         "trigger 2 did not see the maintained-in corpus member")
       assert(trig.head.subsetOf(trig.last),
@@ -106,6 +116,7 @@ class IngestCycleSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     spark.catalog.clearCache()
+    val mark = rddMark()
     val all = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
     val n = all.count()
     // the FRESHNESS member is derived, not guessed: publish the full
@@ -176,7 +187,7 @@ class IngestCycleSpec extends AnyFunSuite {
     try {
       source.addData(odd.toIndexedSeq: _*)
       q.processAllAvailable()
-      pins += pinnedRdds
+      pins += pinnedRdds(mark)
       slots += graft.sources.VectorIndex.armedSlotCount(spark)
       assert(trig.head.nonEmpty, "trigger 1 found no v1 matches at 0.30")
       assert(!trig.head.exists(_._2 == fresh),
@@ -193,7 +204,7 @@ class IngestCycleSpec extends AnyFunSuite {
         "single-member maintain tripped a rebuild (schedule or recall gate)")
       source.addData(odd.toIndexedSeq: _*)
       q.processAllAvailable()
-      pins += pinnedRdds
+      pins += pinnedRdds(mark)
       slots += graft.sources.VectorIndex.armedSlotCount(spark)
       assert(trig.last.exists(_._2 == fresh),
         "trigger 2 did not see the maintained-in corpus member")
@@ -227,6 +238,7 @@ class IngestCycleSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sql = spark.sqlContext
     spark.catalog.clearCache()
+    val mark = rddMark()
     val all = operators.AudioOps.wavPayloads0(spark, d).select("doc_id", "fp")
     val rows = all.collect().map(r => (r.getLong(0), r.getLong(1)))
     // freshness: a dup group ALL of whose members are withheld from v1;
@@ -262,7 +274,7 @@ class IngestCycleSpec extends AnyFunSuite {
     try {
       source.addData(probes: _*)
       q.processAllAvailable()
-      pins += pinnedRdds
+      pins += pinnedRdds(mark)
       assert(trig.head.exists(_._1 == contId),
         "v1 continuity probe not matched at trigger 1")
       assert(!trig.head.exists(_._1 == members.head),
@@ -273,7 +285,7 @@ class IngestCycleSpec extends AnyFunSuite {
         batchId = Some(7L))
       source.addData(probes: _*)
       q.processAllAvailable()
-      pins += pinnedRdds
+      pins += pinnedRdds(mark)
       assert(trig.last.contains((members.head, dupFp)),
         "trigger 2 did not see the maintained-in group")
       assert(trig.head.subsetOf(trig.last),

@@ -426,8 +426,15 @@ class PlanShapeSpec extends AnyFunSuite {
   test("dedup index probe prunes band partitions on a small batch") {
     // the published band table is hive-partitioned by the key-derived
     // dpart column; a below-gate probe batch derives its partition set
-    // and the scan shows a static dpart PartitionFilter — the same read
-    // cut PlanShapeSpec pins for the vector index
+    // and the band scan shows a static dpart PartitionFilter — the same
+    // read cut PlanShapeSpec pins for the vector index. A small batch is
+    // answered on the driver, so the band read runs inside the call and
+    // the returned frame's plan no longer holds it: the plans the call
+    // executes are captured instead, and the property is asserted on
+    // the scans of `<dir>/bands`.
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
     val dir = java.nio.file.Files
       .createTempDirectory("graft-planshape-dedupidx").toString
     graft.sources.DedupIndex.publishFrom(spark,
@@ -435,10 +442,34 @@ class PlanShapeSpec extends AnyFunSuite {
         .filter(col("doc_id") % 2 === 0), dir)
     val batch = operators.DedupOps.docHashes(spark, sf)
       .filter(col("doc_id") === 1)
-    val df = operators.DedupOps.crossDedupBestFromIndex(spark, dir, batch)
-    val p = plan(df)
-    assert("""PartitionFilters: \[[^\]]*dpart#""".r.findFirstIn(p).isDefined,
-      s"no dpart partition filter on the band scan:\n$p")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      operators.DedupOps.crossDedupBestFromIndex(spark, dir, batch).collect()
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case f: FileSourceScanExec => Seq(f)
+    }.flatten
+    val bandScans = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(scans)
+      .filter(_.relation.location.rootPaths.forall(_.toString.contains(s"$dir/bands")))
+    assert(bandScans.nonEmpty, s"no scan of $dir/bands among the executed plans")
+    bandScans.foreach { f =>
+      assert(f.partitionFilters.exists(_.exists {
+          case i: In => i.value.references.exists(_.name == "dpart") &&
+            i.list.forall(_.foldable)
+          case i: InSet => i.child.references.exists(_.name == "dpart")
+          case _ => false
+        }),
+        s"no static dpart partition filter on the band scan:\n$f")
+    }
     spark.catalog.clearCache()
   }
 
