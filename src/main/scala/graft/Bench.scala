@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query against
   * SPARK_GRAFT_SF_DIR, prints the JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...},
@@ -206,18 +204,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS): read as int64 nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // q_asof_join casts TIMESTAMP_NTZ to timestamp, which is session-TZ
-      // dependent; pin UTC so Bench measures the same data Verify checks.
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4)
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

@@ -174,14 +174,7 @@ object Stress {
     // rule's `> 1.3` silently never flags. Fail loudly instead.
     require(sfs.size >= 2,
       s"scaling needs >= 2 sf directories under /root/testdata, found $sfs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(8, "ERROR")
 
     val probes = Seq(
       Probe("ngram_capped_pairs",
@@ -347,13 +340,7 @@ object Stress {
     val parts = if (args.length > 1) args(1).toInt else 32
     val out = if (args.length > 2) args(2)
       else Files.createTempDirectory("graft-stress").toString + "/data"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4)
 
     // synthetic records ≈ the reference's random blocks: key + 100B payload
     val df = spark.range(rows).select(

@@ -163,98 +163,105 @@ object GraphOps {
         "contrib subtree twice (nodes join + total-mass aggregate), so " +
         "plan size grows 2^checkpointEvery between cuts")
     val Seq(srcC, dstC, wC) = edges.columns.toSeq.take(3)
-    // a null weight fails by name in the projection itself: the folded
-    // aggregation below would otherwise read an all-null-weight vertex
-    // as dangling (null wout) and silently redistribute its rank
-    val e = graft.Caching.persist(edges.select(
-      col(srcC).as("src"), col(dstC).as("dst"),
-      coalesce(col(wC).cast("double"), raise_error(concat(
-        lit("pageRank: null edge weight on edge "), col(srcC).cast("string"),
-        lit(" -> "), col(dstC).cast("string")))).as("w")))
-    // ONE vertex-keyed aggregation yields the vertex set (keys), the
-    // out-weight sums (non-null wout) AND the non-dangling src set — r17
-    // built each with its own |E|-row exchange + cache (nodes distinct,
-    // outW groupBy, srcs projection persist); folding them shares one
-    // exchange (guide §2.4) and one cache. Numerically inert: wout sums
-    // the same weight multiset (dst rows contribute null, which sum
-    // ignores), and both PageRank fixtures' weights are integer counts,
-    // so the double sum is exact under any partial-agg order.
-    val vert = graft.Caching.persist(
-      e.select(col("src").as("v"), col("w"))
-        .unionByName(e.select(col("dst").as("v"),
-          lit(null).cast("double").as("w")))
-        .groupBy("v").agg(sum("w").as("wout")))
-    val n = vert.count().toDouble
-    val nodes = vert.select(col("v"))
-    val outW = vert.filter(col("wout").isNotNull)
-      .select(col("v").as("src"), col("wout"))
-    val p = graft.Caching.persist(
-      e.join(outW, "src").select(col("src"), col("dst"), (col("w") / col("wout")).as("p")))
-    // LINEAGE SHAPE. A naive round references the previous rank frame
-    // TWICE (dangling-mass scan + contributions), doubling the logical
-    // plan per iteration — 2^iters growth that overwhelms plan-string
-    // generation long before execution. Here the second reference is
-    // eliminated instead: the update conserves total mass at exactly 1,
-    // so the dangling mass is 1 − Σ contributions — a 1-row aggregate
-    // over the contrib frame replaces the left_anti scan of ranks. The
-    // RANK frame is now referenced once per round; contrib itself is
-    // still read twice (join + total-mass), so un-cut growth is
-    // 2^(skipped rounds) — the reason the dial below is clamped small —
-    // but each checkpointed round's plan is a single bounded tree.
-    //
-    // CHECKPOINT DIAL, measured at sf0.1 (q_part_rank, 5 rounds over the
-    // ~2M-row symmetrized co-occurrence graph, steady-state): every-round
-    // eager localCheckpoint 8.0s; every-2nd-round with the double-
-    // reference design 11.4s (the un-cut round's aggregates really run
-    // twice — ReuseExchange does not collapse them across the broadcast
-    // subquery boundary); every-2nd-round with THIS single-reference
-    // design 12.1s (the totM broadcast subquery re-executes the fused
-    // chain); persisting each contrib to dodge that re-execution 9.4s
-    // (cache-write overhead exceeds the saved compute at this size);
-    // driver-COLLECTED scalar mass + persisted contrib (no broadcast
-    // machinery at all) 9.0-10.1s — the broadcast subquery is not the
-    // bottleneck either. NON-EAGER localCheckpoint(false) (r11, the
-    // last untried variant): steady-state 8.0-8.8s vs eager 7.9-9.9s
-    // over two 4-rep A/B sets — a wash inside run noise, and the lazy
-    // variant is a correctness hazard besides: lastCkpt.unpersist()
-    // runs before a lazy checkpoint has materialized, so the new
-    // round's first execution can find its parent's cached blocks
-    // gone — and a local checkpoint is by definition NOT recomputable.
-    // Eager stays. This closes the materialization A/B file: every
-    // cheaper-looking design has now been measured and refuted. So
-    // the default stays 1 — materialize every round — and the dial
-    // exists for billion-edge graphs where a checkpoint write of the
-    // rank frame costs more than recomputing one fused round.
-    // the non-dangling src set, only needed by the direct dangling form —
-    // a projection of the cached vert frame, no persist of its own
-    val srcs = if (danglingFromRanks)
-      vert.filter(col("wout").isNotNull).select(col("v"))
-    else null
-    // JOIN STRATEGY (r17 optimization round, guide §3.1/§2.4): the rank
-    // frame is |V| rows but its lineage is a localCheckpoint scan
-    // (ExistingRDD), whose size Catalyst cannot estimate — so the
-    // per-round rank×edge join plans as a SHUFFLE join and every round
-    // pays an |E|-row exchange of the (cached) probability table. When
-    // |V| is small enough to broadcast — the vertex table of most
-    // derived graphs; both registered PageRank queries' vertex sets are
-    // vocabulary/catalog-sized — hinting the RANK side (and the |V|-row
-    // contribution/src frames below) broadcast removes every per-round
-    // exchange except the contribution partial-agg itself. Measured at
-    // sf0.1 (4-rep ProfileQ steady-state): q_pagerank 4.09→2.80s from
-    // this hint alone; q_part_rank 11.9→11.6s under the conservation
-    // dangling form (its rounds re-scan contrib for the totM subquery)
-    // and →8.0s once the dangling default flipped to the direct form
-    // (see [[PageRankDanglingFromRanks]]). Above the gate the shuffle
-    // plan stays (a billion-vertex rank frame must never hit the
-    // driver). The gate rides the SAME n the dangling scalar already
-    // counts, so no extra action; the dial is env-tunable for A/B like
-    // the dangling form (SPARK_GRAFT_PR_BCAST_MAX, entries).
-    val bcastRanks = n <= broadcastMaxNodes
-    def maybeB(df: DataFrame): DataFrame = if (bcastRanks) broadcast(df) else df
-    var ranks = nodes.select(col("v"), lit(1.0 / n).as("r"))
-      .localCheckpoint(true)
-    var lastCkpt = ranks
+    // every frame pinned below is released in the finally, including
+    // when the first action (vert.count(), where a null weight surfaces)
+    // fails
+    val pins = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    def pin(df: DataFrame): DataFrame = {
+      val c = graft.Caching.persist(df); pins += c; c
+    }
     try {
+      // a null weight fails by name in the projection itself: the folded
+      // aggregation below would otherwise read an all-null-weight vertex
+      // as dangling (null wout) and silently redistribute its rank
+      val e = pin(edges.select(
+        col(srcC).as("src"), col(dstC).as("dst"),
+        coalesce(col(wC).cast("double"), raise_error(concat(
+          lit("pageRank: null edge weight on edge "), col(srcC).cast("string"),
+          lit(" -> "), col(dstC).cast("string")))).as("w")))
+      // ONE vertex-keyed aggregation yields the vertex set (keys), the
+      // out-weight sums (non-null wout) AND the non-dangling src set — r17
+      // built each with its own |E|-row exchange + cache (nodes distinct,
+      // outW groupBy, srcs projection persist); folding them shares one
+      // exchange (guide §2.4) and one cache. Numerically inert: wout sums
+      // the same weight multiset (dst rows contribute null, which sum
+      // ignores), and both PageRank fixtures' weights are integer counts,
+      // so the double sum is exact under any partial-agg order.
+      val vert = pin(
+        e.select(col("src").as("v"), col("w"))
+          .unionByName(e.select(col("dst").as("v"),
+            lit(null).cast("double").as("w")))
+          .groupBy("v").agg(sum("w").as("wout")))
+      val n = vert.count().toDouble
+      val nodes = vert.select(col("v"))
+      val outW = vert.filter(col("wout").isNotNull)
+        .select(col("v").as("src"), col("wout"))
+      val p = pin(
+        e.join(outW, "src").select(col("src"), col("dst"), (col("w") / col("wout")).as("p")))
+      // LINEAGE SHAPE. A naive round references the previous rank frame
+      // TWICE (dangling-mass scan + contributions), doubling the logical
+      // plan per iteration — 2^iters growth that overwhelms plan-string
+      // generation long before execution. Here the second reference is
+      // eliminated instead: the update conserves total mass at exactly 1,
+      // so the dangling mass is 1 − Σ contributions — a 1-row aggregate
+      // over the contrib frame replaces the left_anti scan of ranks. The
+      // RANK frame is now referenced once per round; contrib itself is
+      // still read twice (join + total-mass), so un-cut growth is
+      // 2^(skipped rounds) — the reason the dial below is clamped small —
+      // but each checkpointed round's plan is a single bounded tree.
+      //
+      // CHECKPOINT DIAL, measured at sf0.1 (q_part_rank, 5 rounds over the
+      // ~2M-row symmetrized co-occurrence graph, steady-state): every-round
+      // eager localCheckpoint 8.0s; every-2nd-round with the double-
+      // reference design 11.4s (the un-cut round's aggregates really run
+      // twice — ReuseExchange does not collapse them across the broadcast
+      // subquery boundary); every-2nd-round with THIS single-reference
+      // design 12.1s (the totM broadcast subquery re-executes the fused
+      // chain); persisting each contrib to dodge that re-execution 9.4s
+      // (cache-write overhead exceeds the saved compute at this size);
+      // driver-COLLECTED scalar mass + persisted contrib (no broadcast
+      // machinery at all) 9.0-10.1s — the broadcast subquery is not the
+      // bottleneck either. NON-EAGER localCheckpoint(false) (r11, the
+      // last untried variant): steady-state 8.0-8.8s vs eager 7.9-9.9s
+      // over two 4-rep A/B sets — a wash inside run noise, and the lazy
+      // variant is a correctness hazard besides: lastCkpt.unpersist()
+      // runs before a lazy checkpoint has materialized, so the new
+      // round's first execution can find its parent's cached blocks
+      // gone — and a local checkpoint is by definition NOT recomputable.
+      // Eager stays. This closes the materialization A/B file: every
+      // cheaper-looking design has now been measured and refuted. So
+      // the default stays 1 — materialize every round — and the dial
+      // exists for billion-edge graphs where a checkpoint write of the
+      // rank frame costs more than recomputing one fused round.
+      // the non-dangling src set, only needed by the direct dangling form —
+      // a projection of the cached vert frame, no persist of its own
+      val srcs = if (danglingFromRanks)
+        vert.filter(col("wout").isNotNull).select(col("v"))
+      else null
+      // JOIN STRATEGY (r17 optimization round, guide §3.1/§2.4): the rank
+      // frame is |V| rows but its lineage is a localCheckpoint scan
+      // (ExistingRDD), whose size Catalyst cannot estimate — so the
+      // per-round rank×edge join plans as a SHUFFLE join and every round
+      // pays an |E|-row exchange of the (cached) probability table. When
+      // |V| is small enough to broadcast — the vertex table of most
+      // derived graphs; both registered PageRank queries' vertex sets are
+      // vocabulary/catalog-sized — hinting the RANK side (and the |V|-row
+      // contribution/src frames below) broadcast removes every per-round
+      // exchange except the contribution partial-agg itself. Measured at
+      // sf0.1 (4-rep ProfileQ steady-state): q_pagerank 4.09→2.80s from
+      // this hint alone; q_part_rank 11.9→11.6s under the conservation
+      // dangling form (its rounds re-scan contrib for the totM subquery)
+      // and →8.0s once the dangling default flipped to the direct form
+      // (see [[PageRankDanglingFromRanks]]). Above the gate the shuffle
+      // plan stays (a billion-vertex rank frame must never hit the
+      // driver). The gate rides the SAME n the dangling scalar already
+      // counts, so no extra action; the dial is env-tunable for A/B like
+      // the dangling form (SPARK_GRAFT_PR_BCAST_MAX, entries).
+      val bcastRanks = n <= broadcastMaxNodes
+      def maybeB(df: DataFrame): DataFrame = if (bcastRanks) broadcast(df) else df
+      var ranks = nodes.select(col("v"), lit(1.0 / n).as("r"))
+        .localCheckpoint(true)
+      var lastCkpt = ranks
       for (k <- 1 to iters) {
         val contrib =
           p.join(maybeB(ranks.withColumnRenamed("v", "src")), "src")
@@ -293,9 +300,7 @@ object GraphOps {
         }
       }
       ranks
-    } finally {
-      p.unpersist(); vert.unpersist(); e.unpersist()
-    }
+    } finally pins.foreach(_.unpersist())
   }
 
   /** Library default for [[pageRank]]'s dangling-mass form — switchable

@@ -15,106 +15,65 @@ import graft.operators.AudioOps
   *     min-doc rep — one row per DISTINCT fingerprint, however many clips
   *     share it). A batch product, republished on corpus rebuild like the
   *     MinHash band index.
-  *   - STREAM side: decode+fingerprint runs as the same typed
-  *     mapPartitions codec stage the batch path uses (one codec init per
-  *     partition), a pure per-row scalar — append-safe, no aggregation —
-  *     then an equi-join on fp against the index. Exact fingerprint
-  *     equality is the match semantic (the batch groupBy's key), so each
-  *     arrival meets each index row at most once: no pair-dedup state is
-  *     needed at all, and the whole query is stateless stream-static.
+  *   - STREAM side: each trigger decodes+fingerprints its arrivals in the
+  *     [[ProbeStream.decoded]] codec stage (one codec pass per
+  *     partition), then equi-joins on fp against the index. Exact
+  *     fingerprint equality is the match semantic (the batch groupBy's
+  *     key), so each arrival meets each index row at most once: no
+  *     pair-dedup step is needed at all.
   *
-  * Freshness contract (same as all three sibling twins): an arriving clip
+  * Freshness contract (same as every sibling probe): an arriving clip
   * is checked against the corpus as of the last index publish; two NEW
   * clips that only duplicate each other wait for the next rebuild. Parity
-  * is pinned in AudioDedupStreamSpec: the whole corpus streamed against
-  * its own index yields exactly the batch dup-group membership.
+  * is pinned in AudioDedupStreamSpec: the whole corpus probed against
+  * its own index yields exactly the codec-derived fingerprint groups.
   */
 object AudioDedupStream {
 
-  /** Matches of a watermarked audio stream (`doc_id`, binary WAV
-    * `payload`, event-time `ts`) against the published fingerprint index
-    * `fps` (schema: fp, n, rep). Emits one row per (arrival, matched
-    * fingerprint group) with the group's size and representative.
-    *
-    * Kept for small/fixture corpora and the parity specs; at corpus
-    * scale the per-trigger cost is a FULL scan of the caller-held group
-    * table — route production streams through
-    * [[foreachBatchProbe]]/[[probeIndexBatch]] instead. */
-  @deprecated("lazy stream-static join re-scans the full group table per " +
-    "trigger; at corpus scale use foreachBatchProbe/probeIndexBatch " +
-    "(partition-pruned published-index probe)", "0.1.0")
-  def matchesAgainstIndex(s: SparkSession, stream: DataFrame,
-      fps: DataFrame, delay: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    val idx = fps.select(col("fp").as("cand_fp"), col("n"), col("rep"))
-    stream
-      .select(col("ts"), col("doc_id").as("in_id"), col("payload"))
-      .as[(java.sql.Timestamp, Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (ts, id, bytes) =>
-          val (fp, nf) = AudioOps.fingerprint(AudioOps.decodeWav(bytes)._3)
-          (ts, id, fp, nf)
-        }
-      }
-      .toDF("ts", "in_id", "fp", "n_frames")
-      .withWatermark("ts", delay)
-      .join(idx, col("fp") === col("cand_fp"))
-      .select(col("ts"), col("in_id"), col("fp"), col("n_frames"),
-        col("n").as("corpus_n"), col("rep").as("corpus_rep"))
-  }
-
   /** One microbatch's matches against a PUBLISHED
     * [[graft.sources.FingerprintIndex]] through the partition-pruned
-    * group scan — the corpus-scale production probe (the lazy
-    * stream-static join above re-reads the caller's whole group table
-    * per trigger): decode+fingerprint runs in the same mapPartitions
-    * codec stage, then the batch's fingerprint set derives its `fpart`
-    * partition values (bounded collect) and the index contributes only
-    * those partitions. Loan-patterned like every sibling probe: the
-    * decoded batch frame is pinned only while `consume` runs. Output
-    * schema matches [[matchesAgainstIndex]].
-    *
-    * BROADCAST GATE (the VectorIndex search convention): the decoded
-    * batch frame is broadcast only at or below `broadcastRowLimit` — a
-    * backlog catch-up trigger falls through to the planner's shuffle
-    * join over the full index instead of hitting Spark's broadcast
-    * limits. A caller that knows its batch bound passes `knownBatchRows`
-    * and the gate count is skipped. */
+    * group scan — the corpus-scale production probe. `microbatch`:
+    * (ts, doc_id, binary WAV payload) rows. Output: one row per
+    * (arrival, matched fingerprint group) — (ts, in_id, fp, n_frames,
+    * corpus_n, corpus_rep). */
   def probeIndexBatch[T](s: SparkSession, microbatch: DataFrame,
       indexDir: String,
       broadcastRowLimit: Long =
-        graft.sources.VectorIndex.QueryBatchBroadcastRowLimit,
-      knownBatchRows: Option[Long] = None)(consume: DataFrame => T): T = {
-    import s.implicits._
-    val fps = graft.Caching.persist(microbatch
-      .select(col("ts"), col("doc_id").as("in_id"), col("payload"))
-      .as[(java.sql.Timestamp, Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (ts, id, bytes) =>
-          val (fp, nf) = AudioOps.fingerprint(AudioOps.decodeWav(bytes)._3)
-          (ts, id, fp, nf)
-        }
-      }
-      .toDF("ts", "in_id", "fp", "n_frames"))
-    try {
-      val (small, hint) = graft.sources.VectorIndex.batchGate(
-        knownBatchRows, fps.count(), broadcastRowLimit)
+        graft.sources.VectorIndex.QueryBatchBroadcastRowLimit)
+      (consume: DataFrame => T): T =
+    groupProbe(s, microbatch, indexDir, "n_frames", broadcastRowLimit)(
+      bytes => AudioOps.fingerprint(AudioOps.decodeWav(bytes)._3))(consume)
+
+  /** The exact-group probe audio and [[VideoDedupStream]] share:
+    * `fingerprint` maps a payload to (fp, its frame or sample count),
+    * emitted under `countCol`. The batch's fingerprint set derives its
+    * `fpart` partition values (bounded collect) and the index contributes
+    * only those partitions; above `broadcastRowLimit` the decoded batch is
+    * not broadcast and the group table is read in full (the
+    * [[ProbeStream.loan]] gate). */
+  private[streaming] def groupProbe[T](s: SparkSession,
+      microbatch: DataFrame, indexDir: String, countCol: String,
+      broadcastRowLimit: Long)(fingerprint: Array[Byte] => (Long, Long))
+      (consume: DataFrame => T): T = {
+    val FI = graft.sources.FingerprintIndex
+    val decoded = ProbeStream.decoded(s, microbatch)(fingerprint)
+      .select(col("ts"), col("in_id"), col("sig._1").as("fp"),
+        col("sig._2").as(countCol))
+    ProbeStream.loan(decoded, broadcastRowLimit) { (fps, g) =>
       // a corpus-scale batch touches every partition anyway: skip the
       // pruning derivation along with the broadcast hint
-      val idx = (if (small)
-          graft.sources.FingerprintIndex.prunedGroups(s, indexDir,
-            fps.select("fp"))
-        else graft.sources.FingerprintIndex.loadGroups(s, indexDir))
+      val idx = (if (g.small) FI.prunedGroups(s, indexDir, fps.select("fp"))
+        else FI.loadGroups(s, indexDir))
         .select(col("fp").as("cand_fp"), col("n"), col("rep"))
-      consume(idx.join(hint(fps), col("fp") === col("cand_fp"))
-        .select(col("ts"), col("in_id"), col("fp"), col("n_frames"),
+      consume(idx.join(g.hint(fps), col("fp") === col("cand_fp"))
+        .select(col("ts"), col("in_id"), col("fp"), col(countCol),
           col("n").as("corpus_n"), col("rep").as("corpus_rep")))
-    } finally fps.unpersist()
+    }
   }
 
   /** `writeStream.foreachBatch` body routing every trigger through
-    * [[probeIndexBatch]] — parity with the lazy join is spec-pinned. */
+    * [[probeIndexBatch]]. */
   def foreachBatchProbe(s: SparkSession, indexDir: String)
       (sink: DataFrame => Unit): (DataFrame, Long) => Unit =
-    (microbatch, _) => probeIndexBatch(s, microbatch, indexDir)(sink)
+    ProbeStream.foreachBatch(sink)(probeIndexBatch(s, _, indexDir)(_))
 }

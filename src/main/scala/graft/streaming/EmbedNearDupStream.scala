@@ -35,22 +35,19 @@ import graft.operators.VectorOps
   */
 object EmbedNearDupStream {
 
-  /** The published corpus bucket index: (bucket, vec_id), width-capped
-    * per bucket. `corpusEmb` carries (vec_id, embedding). */
-  def bucketIndex(s: SparkSession, corpusEmb: DataFrame, width: Int,
-      cap: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    VectorOps.cappedBuckets(corpusEmb, width, cap, "vec_id")
-  }
-
   /** Verified (in_id, corpus_id, sim) matches of a watermarked embedding
     * stream (`vec_id`, `embedding`, event-time `ts`) against the corpus
-    * index. Pure stream-static join — append-safe, state-free. */
+    * bucket index, built in-query from `corpusEmb` by the same
+    * [[VectorOps.cappedBuckets]] rule the batch joins use. Pure
+    * stream-static join — append-safe, state-free. The index is re-read
+    * in full on every trigger, so this entry suits small corpora and the
+    * batch parity specs; at corpus scale route the stream through
+    * [[foreachBatchProbe]] over a published index. */
   def nearDupAgainstCorpus(s: SparkSession, stream: DataFrame,
       corpusEmb: DataFrame, width: Int, probes: Int, cap: Long,
       threshold: Double, delay: String = "10 minutes"): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val idx = bucketIndex(s, corpusEmb, width, cap)
+    val idx = VectorOps.cappedBuckets(corpusEmb, width, cap, "vec_id")
     stream
       .withWatermark("ts", delay)
       .select(col("ts"), col("vec_id").as("in_id"),
@@ -66,92 +63,42 @@ object EmbedNearDupStream {
       .filter(col("sim") >= threshold)
   }
 
-  /** [[nearDupAgainstCorpus]] against a PUBLISHED
-    * [[graft.sources.VectorIndex]] — the production ingest shape: width,
-    * probes and the capped bucket table all come from the loaded
-    * artifact (the bucket rows carry the corpus embedding, so the verify
-    * needs no second corpus join), and a corpus republish reaches the
-    * stream on its next restart exactly like the text twin's band-index
-    * swap. Same output schema and threshold semantics as the inline
-    * path; parity spec'd in EmbedNearDupStreamSpec.
-    *
-    * SCALE NOTE: this lazy stream-static join re-plans the full bucket
-    * scan per trigger — correct, but at a 100 TB corpus every microbatch
-    * reads the whole artifact. The production entry point at that scale
-    * is [[foreachBatchProbe]], which routes each trigger through the
-    * gated batch search so the scan is pruned to the microbatch's
-    * derived partitions. Kept for small/fixture corpora and the parity
-    * specs. */
-  @deprecated("lazy stream-static join re-scans the full bucket table per " +
-    "trigger; at corpus scale use foreachBatchProbe/probeIndexBatch " +
-    "(partition-pruned gated batch search)", "0.1.0")
-  def nearDupAgainstIndex(s: SparkSession, stream: DataFrame,
-      indexDir: String, threshold: Double,
-      delay: String = "10 minutes"): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    // one resolve: the probe width and the bucket table of one version
-    val live = graft.sources.VectorIndex.open(s, indexDir)
-    val m = live.meta
-    val idx = graft.sources.VectorIndex.at(s, live.dir, "buckets")
-      .select(col("bucket"), col("vec_id"), col("embedding").as("ce"))
-    stream
-      .withWatermark("ts", delay)
-      .select(col("ts"), col("vec_id").as("in_id"),
-        col("embedding").as("ie"),
-        explode(expr(s"hyperplane_sig(embedding, ${m.width}, ${m.probes})"))
-          .as("qbucket"))
-      .join(idx, col("qbucket") === col("bucket") &&
-        col("vec_id") =!= col("in_id"))
-      .select(col("ts"), col("in_id"), col("vec_id").as("corpus_id"),
-        expr("cosine_sim(ie, ce)").as("sim"))
-      .filter(col("sim") >= threshold)
-  }
-
-  /** One microbatch's verified matches through the PARTITION-PRUNED
-    * gated batch search ([[graft.sources.VectorIndex.matchesAbove]]) —
-    * the per-trigger unit of [[foreachBatchProbe]], loan-patterned:
-    * `consume` runs while the microbatch frame is pinned (one count +
-    * one probe over it, never a re-derive), and the pin is RELEASED on
-    * exit — a long-running stream holds no cache growth across
-    * triggers. The probe passes `knownBatchRows` = the microbatch
-    * count, so the search derives its `bpart` partition set from the
-    * (tiny) batch and reads ONLY those index partitions: per-trigger
-    * read cost is O(microbatch × partitions touched), not O(corpus) —
-    * the same partition-range read discipline the reference applies to
-    * its per-reducer fetches (Ors2ShuffleManager.scala:213-262). Output
-    * schema matches [[nearDupAgainstIndex]]: (ts, in_id, corpus_id,
-    * sim). */
+  /** One microbatch's verified matches against a PUBLISHED
+    * [[graft.sources.VectorIndex]] through the PARTITION-PRUNED gated
+    * batch search ([[graft.sources.VectorIndex.matchesAbove]]) — the
+    * per-trigger unit of [[foreachBatchProbe]]. Width, probes and the
+    * capped bucket table come from the artifact, whose `_current`
+    * pointer resolves per call, so a mergePublish reaches the stream on
+    * its next trigger. `consume` runs while the microbatch frame is
+    * pinned ([[ProbeStream.loan]]: one count + one probe over it, never
+    * a re-derive); the search gets that count as its known batch size,
+    * so it derives its `bpart` partition set from the (tiny) batch and
+    * reads ONLY those index partitions: per-trigger read cost is
+    * O(microbatch × partitions touched), not O(corpus). Output schema
+    * matches [[nearDupAgainstCorpus]]: (ts, in_id, corpus_id, sim). */
   def probeIndexBatch[T](s: SparkSession, microbatch: DataFrame,
-      indexDir: String, threshold: Double)(consume: DataFrame => T): T = {
-    val b = graft.Caching.persist(
-      microbatch.select(col("ts"), col("vec_id"), col("embedding")))
-    try {
-      val n = b.count()
-      val matches = graft.sources.VectorIndex.matchesAbove(s, indexDir,
-        b.select(col("vec_id"), col("embedding")), threshold,
-        knownBatchRows = Some(n))
-      // ts rides back via a microbatch-sized join (the search APIs keep
-      // the (vec_id, embedding) contract; event time is the stream's
-      // concern) — broadcast only under the same gate the search itself
-      // applies, so a backlog catch-up trigger cannot smuggle a
-      // corpus-scale frame past the broadcast limit here either
-      val (_, hint) = graft.sources.VectorIndex.batchGate(Some(n), n)
-      consume(matches
-        .join(hint(b.select(col("vec_id").as("in_id"), col("ts"))),
-          Seq("in_id"))
-        .select(col("ts"), col("in_id"), col("corpus_id"), col("sim")))
-    } finally b.unpersist()
-  }
+      indexDir: String, threshold: Double)(consume: DataFrame => T): T =
+    ProbeStream.loan(
+        microbatch.select(col("ts"), col("vec_id"), col("embedding")),
+        graft.sources.VectorIndex.QueryBatchBroadcastRowLimit) {
+      (b, g) =>
+        val matches = graft.sources.VectorIndex.matchesAbove(s, indexDir,
+          b.select(col("vec_id"), col("embedding")), threshold,
+          knownBatchRows = Some(g.rows))
+        // ts rides back via a microbatch-sized join (the search APIs keep
+        // the (vec_id, embedding) contract; event time is the stream's
+        // concern), broadcast only under the loan's gate
+        consume(matches
+          .join(g.hint(b.select(col("vec_id").as("in_id"), col("ts"))),
+            Seq("in_id"))
+          .select(col("ts"), col("in_id"), col("corpus_id"), col("sim")))
+    }
 
   /** The production streaming probe at corpus scale: a
     * `writeStream.foreachBatch` body that runs each trigger through
     * [[probeIndexBatch]] — partition-pruned gated search, no per-trigger
-    * full-index scan, no gate-count job, no cache residue — and hands
-    * the trigger's matches to `sink` (idempotent by batchId under
-    * Spark's foreachBatch replay contract, as usual). Result parity
-    * with the lazy [[nearDupAgainstIndex]] join is spec-pinned. */
+    * full-index scan, no cache residue. */
   def foreachBatchProbe(s: SparkSession, indexDir: String,
       threshold: Double)(sink: DataFrame => Unit): (DataFrame, Long) => Unit =
-    (microbatch, _) =>
-      probeIndexBatch(s, microbatch, indexDir, threshold)(sink)
+    ProbeStream.foreachBatch(sink)(probeIndexBatch(s, _, indexDir, threshold)(_))
 }

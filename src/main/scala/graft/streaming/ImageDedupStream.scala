@@ -18,149 +18,73 @@ import graft.operators.MultiModalOps
   *     it), band-exploded 4×16-bit exactly like the batch near-dup join.
   *     A batch product, republished on corpus rebuild like the MinHash
   *     band index.
-  *   - STREAM side: decode+dhash is a pure per-row scalar (append-safe,
-  *     no aggregation), the probe explodes to 4 band rows, inner-joins
-  *     the index with the in-join `bit_count(dh ^ cand) <= 3` gate —
-  *     banding is EXACT for hamming <= 3 by pigeonhole, so the stream
-  *     misses nothing the batch join would find.
+  *   - STREAM side: each trigger decodes+dhashes its arrivals (a pure
+  *     per-row scalar in the codec stage), explodes each to 4 band rows
+  *     and inner-joins the index with the in-join
+  *     `bit_count(dh ^ cand) <= 3` gate — banding is EXACT for
+  *     hamming <= 3 by pigeonhole, so the stream misses nothing the batch
+  *     join would find. A pair can meet in up to 4 bands (all 4 when
+  *     hamming = 0); the trigger folds those meetings to one row.
   *
-  * A pair can meet in up to 4 bands (all 4 when hamming = 0), so the
-  * join is followed by `dropDuplicatesWithinWatermark(in_id, cand)` —
-  * the same watermark-bounded pair-dedup state the text twin carries;
-  * state is O(matches within the watermark window), event-time reaped.
-  *
-  * Freshness contract (same as both sibling twins): an arriving image is
+  * Freshness contract (same as every sibling probe): an arriving image is
   * checked against the corpus as of the last index publish; two NEW
   * images that only duplicate each other wait for the next rebuild.
-  * Parity is pinned in ImageDedupStreamSpec: the whole corpus streamed
+  * Parity is pinned in ImageDedupStreamSpec: the whole corpus probed
   * against its own index yields exactly the brute-force
   * hamming-<= 3 (doc, signature) match set.
   */
 object ImageDedupStream {
 
-  // ONE band derivation for probe and artifact: a local copy here could
-  // drift from the published banded index's split and silently miss
-  // hamming<=3 matches, so the stream delegates to the index's expr.
-  // The published-index probe passes the artifact's RECORDED family
-  // (resolved per trigger, so a precision-floor escalation reaches the
-  // stream on its next microbatch); the caller-held lazy join keeps the
-  // publish default — its signature table was never family-escalated.
-  private def bandsExpr(c: String, fam: Int =
-      graft.sources.FingerprintIndex.BandFamily) =
-    graft.sources.FingerprintIndex.bandsExpr(c, fam)
-
-  /** Matches of a watermarked image stream (`doc_id`, binary `payload`,
-    * event-time `ts`) against the published signature index `sigs`
-    * ([[MultiModalOps.imageSigs]] schema: dhash, n, rep). Emits one row
-    * per (arrival, matched corpus signature) with the hamming distance
-    * and the group's size/representative — hamming 0 = exact perceptual
-    * dup of an existing group.
-    *
-    * Kept for small/fixture corpora and the parity specs; at corpus
-    * scale the per-trigger cost is a FULL scan of the caller-held
-    * signature table — route production streams through
-    * [[foreachBatchProbe]]/[[probeIndexBatch]] instead. */
-  @deprecated("lazy stream-static join re-scans the full signature table " +
-    "per trigger; at corpus scale use foreachBatchProbe/probeIndexBatch " +
-    "(partition-pruned published-index probe)", "0.1.0")
-  def matchesAgainstIndex(s: SparkSession, stream: DataFrame,
-      sigs: DataFrame, maxHamming: Int = 3,
-      delay: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    require(maxHamming <= 3,
-      s"4x16-bit banding is only pigeonhole-exact for hamming <= 3, got $maxHamming")
-    val idx = sigs
-      .select(col("dhash").as("cand"), col("n"), col("rep"),
-        explode(expr(bandsExpr("dhash"))).as("b"))
-      .select(col("cand"), col("n"), col("rep"),
-        col("b.band").as("band"), col("b.bv").as("bv"))
-    // Decode+hash as the same typed mapPartitions CODEC STAGE the batch
-    // path uses (one headless/codec init per partition, tight per-blob
-    // loop) — not a per-row udf; micro-batch partitions get the identical
-    // decode discipline. Stateless and row-wise, so applying the
-    // watermark AFTER the stage is semantically identical to before it
-    // (the event-time column passes through untouched), and the
-    // watermark tag survives onto the join/dedup below.
-    stream
-      .select(col("ts"), col("doc_id").as("in_id"), col("payload"))
-      .as[(java.sql.Timestamp, Long, Array[Byte])]
-      .mapPartitions { it =>
-        MultiModalOps.ensureHeadless()
-        it.map { case (ts, id, bytes) => (ts, id, MultiModalOps.dhashPng(bytes)) }
-      }
-      .toDF("ts", "in_id", "dh")
-      .withWatermark("ts", delay)
-      .select(col("ts"), col("in_id"), col("dh"),
-        explode(expr(bandsExpr("dh"))).as("p"))
-      .select(col("ts"), col("in_id"), col("dh"),
-        col("p.band").as("pband"), col("p.bv").as("pbv"))
-      .join(idx, col("pband") === col("band") && col("pbv") === col("bv") &&
-        expr("bit_count(dh ^ cand)") <= maxHamming)
-      .dropDuplicatesWithinWatermark("in_id", "cand")
-      .select(col("ts"), col("in_id"), col("dh").as("in_dhash"),
-        col("cand").as("corpus_dhash"),
-        expr("CAST(bit_count(dh ^ cand) AS BIGINT)").as("hamming"),
-        col("n").as("corpus_n"), col("rep").as("corpus_rep"))
-  }
-
   /** One microbatch's matches against a PUBLISHED banded
     * [[graft.sources.FingerprintIndex]] through the partition-pruned
     * band scan — the corpus-scale production probe: decode+dHash runs in
-    * the same mapPartitions codec stage, the batch's 4 band keys per
+    * the [[ProbeStream.decoded]] codec stage, the batch's 4 band keys per
     * arrival derive the `ipart` partition set (bounded collect), and the
-    * index contributes only those partitions. Within one trigger a pair
-    * meeting in several bands folds to one row (distinct — the job the
-    * lazy path's watermark dedup state did per horizon; cross-trigger
-    * re-emission is the sink's idempotence concern). Loan-patterned;
-    * output schema matches [[matchesAgainstIndex]].
+    * index contributes only those partitions. The band split is the
+    * index's own [[graft.sources.FingerprintIndex.bandsExpr]] at the
+    * artifact's recorded family (resolved per trigger, so a
+    * precision-floor escalation reaches the stream on its next
+    * microbatch): a local copy could drift from the published split and
+    * silently miss hamming <= 3 matches. Within one trigger a pair
+    * meeting in several bands folds to one row (distinct); cross-trigger
+    * re-emission is the sink's idempotence concern.
     *
-    * BROADCAST GATE (the VectorIndex search convention): the decoded
-    * batch frame is broadcast only at or below `broadcastRowLimit` — a
-    * backlog catch-up trigger (one huge first microbatch after downtime)
-    * falls through to the planner's shuffle join over the full index
-    * instead of failing on Spark's broadcast limits or OOMing the
-    * driver. A caller that already knows its batch bound passes
-    * `knownBatchRows` and the gate count is skipped. */
+    * `microbatch`: (ts, doc_id, binary PNG payload) rows. Output: one row
+    * per (arrival, matched corpus signature) — (ts, in_id, in_dhash,
+    * corpus_dhash, hamming, corpus_n, corpus_rep); hamming 0 = exact
+    * perceptual dup of an existing group. Above `broadcastRowLimit` the
+    * decoded batch is not broadcast and the banded index is read in full
+    * (the [[ProbeStream.loan]] gate). */
   def probeIndexBatch[T](s: SparkSession, microbatch: DataFrame,
-      indexDir: String, maxHamming: Int = 3,
+      indexDir: String,
       broadcastRowLimit: Long =
-        graft.sources.VectorIndex.QueryBatchBroadcastRowLimit,
-      knownBatchRows: Option[Long] = None)(consume: DataFrame => T): T = {
-    import s.implicits._
-    require(maxHamming <= 3,
-      s"4x16-bit banding is only pigeonhole-exact for hamming <= 3, got $maxHamming")
-    val dh = graft.Caching.persist(microbatch
-      .select(col("ts"), col("doc_id").as("in_id"), col("payload"))
-      .as[(java.sql.Timestamp, Long, Array[Byte])]
-      .mapPartitions { it =>
-        MultiModalOps.ensureHeadless()
-        it.map { case (ts, id, bytes) => (ts, id, MultiModalOps.dhashPng(bytes)) }
-      }
-      .toDF("ts", "in_id", "dh"))
-    try {
-      val (small, hint) = graft.sources.VectorIndex.batchGate(
-        knownBatchRows, dh.count(), broadcastRowLimit)
+        graft.sources.VectorIndex.QueryBatchBroadcastRowLimit)
+      (consume: DataFrame => T): T = {
+    val FI = graft.sources.FingerprintIndex
+    val dhs = ProbeStream.decoded(s, microbatch,
+      () => MultiModalOps.ensureHeadless())(MultiModalOps.dhashPng)
+      .withColumnRenamed("sig", "dh")
+    ProbeStream.loan(dhs, broadcastRowLimit) { (dh, g) =>
       // the version and its band family resolve ONCE per trigger: keys
       // and the band table they probe always come from the same version
-      val live = graft.sources.FingerprintIndex.open(s, indexDir)
-      val fam = live.meta.bandfam
-      val keys = dh.select(explode(expr(bandsExpr("dh", fam))).as("p"))
+      val live = FI.open(s, indexDir)
+      val bands = expr(FI.bandsExpr("dh", live.meta.bandfam))
+      val keys = dh.select(explode(bands).as("p"))
         .select(col("p.band").as("band"), col("p.bv").as("bv"))
       // a corpus-scale batch touches every partition anyway: skip the
       // pruning derivation along with the broadcast hint
-      val idx = (if (small)
-          graft.sources.FingerprintIndex.prunedBands(s, live, keys)
-        else graft.sources.FingerprintIndex.bandsAt(s, live.dir))
+      val idx = (if (g.small) FI.prunedBands(s, live, keys)
+        else FI.bandsAt(s, live.dir))
         .select(col("band"), col("bv"), col("dhash").as("cand"),
           col("n"), col("rep"))
       val probes = dh
-        .select(col("ts"), col("in_id"), col("dh"),
-          explode(expr(bandsExpr("dh", fam))).as("p"))
+        .select(col("ts"), col("in_id"), col("dh"), explode(bands).as("p"))
         .select(col("ts"), col("in_id"), col("dh"),
           col("p.band").as("pband"), col("p.bv").as("pbv"))
-      consume(idx.join(hint(probes),
+      // 4x16-bit banding is pigeonhole-exact for hamming <= 3 only
+      consume(idx.join(g.hint(probes),
           col("pband") === col("band") && col("pbv") === col("bv") &&
-            expr("bit_count(dh ^ cand)") <= maxHamming)
+            expr("bit_count(dh ^ cand)") <= 3)
         .select(col("ts"), col("in_id"), col("dh"), col("cand"),
           col("n"), col("rep"))
         .distinct()
@@ -168,12 +92,12 @@ object ImageDedupStream {
           col("cand").as("corpus_dhash"),
           expr("CAST(bit_count(dh ^ cand) AS BIGINT)").as("hamming"),
           col("n").as("corpus_n"), col("rep").as("corpus_rep")))
-    } finally dh.unpersist()
+    }
   }
 
   /** `writeStream.foreachBatch` body routing every trigger through
-    * [[probeIndexBatch]] — parity with the lazy join is spec-pinned. */
-  def foreachBatchProbe(s: SparkSession, indexDir: String,
-      maxHamming: Int = 3)(sink: DataFrame => Unit): (DataFrame, Long) => Unit =
-    (microbatch, _) => probeIndexBatch(s, microbatch, indexDir, maxHamming)(sink)
+    * [[probeIndexBatch]]. */
+  def foreachBatchProbe(s: SparkSession, indexDir: String)
+      (sink: DataFrame => Unit): (DataFrame, Long) => Unit =
+    ProbeStream.foreachBatch(sink)(probeIndexBatch(s, _, indexDir)(_))
 }

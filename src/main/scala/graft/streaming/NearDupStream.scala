@@ -23,6 +23,11 @@ import graft.streaming.CurationStream.TimedDoc
   *     (the same pair can surface via several colliding bands, or twice
   *     when both members arrive inside the stream window).
   *
+  * Two entries share that shape: [[nearDupAgainstCorpus]] builds the
+  * band index in-query (small corpora, watermark pair dedup), and
+  * [[foreachBatchProbe]]/[[probeIndexBatch]] probe a PUBLISHED index per
+  * trigger, reading only the partitions the trigger's keys derive.
+  *
   * Contract (documented, not hidden): an arriving doc is checked against
   * the corpus as of the last index publish. Two NEW docs that are
   * near-dups only of each other are caught by the NEXT rebuild, not
@@ -98,7 +103,7 @@ object NearDupStream {
     * State: O(docs-per-window × 32 band rows), each row carrying the
     * doc's (token-capped) hash array — sized for a deployment window of
     * minutes-to-hours of arrivals, NOT for corpus-wide history; the
-    * corpus-scale path remains the stream-static band index. Run both:
+    * corpus-scale path remains the published band-index probe. Run both:
     * this operator catches same-window pairs immediately, the index
     * catches everything else on its republish cadence.
     *
@@ -173,106 +178,88 @@ object NearDupStream {
 
   /** Stream-static near-dup: verified (doc_a, doc_b, jaccard) pairs for
     * arriving docs vs the corpus, each pair emitted once within
-    * `horizon`. `corpus` is DedupOps.docHashes output; `horizon` should
-    * cover the index republish period so a pair cannot re-emit between
-    * rebuilds. */
-  @scala.annotation.nowarn("cat=deprecation") // intentional delegation:
-  // this inline variant shares the lazy join's scale caveat and scaladoc
-  def nearDupAgainstCorpus(s: SparkSession, docs: Dataset[TimedDoc],
-      corpus: DataFrame, horizon: String = "30 days"): DataFrame =
-    nearDupAgainstIndex(s, docs, bandIndex(s, corpus), corpus, horizon)
-
-  /** The same stream-static join over PRE-BUILT index artifacts, fed by
-    * `sources.DedupIndex.publish`'s parquet datasets (band index + hash
-    * arrays) instead of an in-query signature build. `bands` is
-    * (band, minhash, doc_id); `corpusDocs` carries (doc_id, hs, n).
+    * `horizon`. `corpus` is DedupOps.docHashes output (doc_id, hs, n);
+    * `horizon` should cover the index republish period so a pair cannot
+    * re-emit between rebuilds.
     *
-    * Kept for small/fixture corpora and the parity specs; at corpus
-    * scale the per-trigger cost is a FULL scan of both caller-held
-    * tables — route production streams through
-    * [[foreachBatchProbe]]/[[probeIndexBatch]] instead. */
-  @deprecated("lazy stream-static join re-scans the full band and doc " +
-    "tables per trigger; at corpus scale use foreachBatchProbe/" +
-    "probeIndexBatch (partition-pruned published-index probe)", "0.1.0")
-  def nearDupAgainstIndex(s: SparkSession, docs: Dataset[TimedDoc],
-      bands: DataFrame, corpusDocs: DataFrame,
-      horizon: String = "30 days"): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val index = bands
-    val hashSets = corpusDocs.select(col("doc_id").as("c_id"),
+    * The band index is built in-query from `corpus` and re-read in full
+    * on every trigger, so this entry suits small corpora and the batch
+    * parity specs; at corpus scale route the stream through
+    * [[foreachBatchProbe]], which reads only the published index
+    * partitions each trigger's keys derive. What this entry keeps over
+    * the per-trigger probe is cross-trigger pair dedup in watermark
+    * state, as a real append-mode streaming query. */
+  def nearDupAgainstCorpus(s: SparkSession, docs: Dataset[TimedDoc],
+      corpus: DataFrame, horizon: String = "30 days"): DataFrame = {
+    val index = bandIndex(s, corpus)
+    val hashSets = corpus.select(col("doc_id").as("c_id"),
       col("hs").as("c_hs"), col("n").as("c_n"))
-
-    val arriving = docs.toDF()
-      .select(col("docId").as("q_id"), col("tsUs"),
-        graft.operators.TextRules.tokens(col("text")).as("toks"))
-      .select(col("q_id"), col("tsUs"), shingleHashes(col("toks")).as("q_hs"))
-      .filter(size(col("q_hs")) > 0)
-      .withColumn("q_n", size(col("q_hs")).cast("long"))
-
-    arriving
+    verified(arrivals(docs.toDF())
       .select(col("q_id"), col("tsUs"), col("q_hs"), col("q_n"),
         posexplode(expr("minhash_sig(q_hs)")))
       .select(col("q_id"), col("tsUs"), col("q_hs"), col("q_n"),
         col("pos").as("band"), col("col").as("minhash"))
       .join(index, Seq("band", "minhash"))
       .filter(col("doc_id") =!= col("q_id"))
-      .join(hashSets, col("doc_id") === col("c_id"))
-      .withColumn("inter",
-        size(array_intersect(col("q_hs"), col("c_hs"))).cast("long"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("q_n") + col("c_n") - col("inter")))
-      .filter(col("jaccard") >= 0.8)
-      .select(
-        least(col("q_id"), col("doc_id")).as("doc_a"),
-        greatest(col("q_id"), col("doc_id")).as("doc_b"),
-        col("jaccard"),
-        timestamp_micros(col("tsUs")).as("ts"))
+      .join(hashSets, col("doc_id") === col("c_id")))
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("doc_a", "doc_b")
   }
 
+  /** Arriving (docId, text, tsUs) rows as (q_id, tsUs, q_hs, q_n): the
+    * shingle-hash set of every doc that has at least one 3-gram. */
+  private def arrivals(docs: DataFrame): DataFrame = docs
+    .select(col("docId").as("q_id"), col("tsUs"),
+      graft.operators.TextRules.tokens(col("text")).as("toks"))
+    .select(col("q_id"), col("tsUs"), shingleHashes(col("toks")).as("q_hs"))
+    .filter(size(col("q_hs")) > 0)
+    .withColumn("q_n", size(col("q_hs")).cast("long"))
+
+  /** The exact-Jaccard verify of (arrival, candidate) rows carrying both
+    * hash sets: pairs at J >= 0.8 as (doc_a, doc_b, jaccard, ts). */
+  private def verified(cands: DataFrame): DataFrame = cands
+    .withColumn("inter",
+      size(array_intersect(col("q_hs"), col("c_hs"))).cast("long"))
+    .withColumn("jaccard", col("inter").cast("double") /
+      (col("q_n") + col("c_n") - col("inter")))
+    .filter(col("jaccard") >= 0.8)
+    .select(least(col("q_id"), col("c_id")).as("doc_a"),
+      greatest(col("q_id"), col("c_id")).as("doc_b"),
+      col("jaccard"), timestamp_micros(col("tsUs")).as("ts"))
+
   /** One microbatch's verified corpus matches through the
     * PARTITION-PRUNED index scans — the text twin of
-    * [[EmbedNearDupStream.probeIndexBatch]], and the corpus-scale
-    * replacement for [[nearDupAgainstIndex]]'s lazy join (which re-plans
-    * a FULL band-table scan per trigger): candidates come from
+    * [[EmbedNearDupStream.probeIndexBatch]]: candidates come from
     * [[graft.sources.DedupIndex.prunedBands]] (the microbatch's 32 band
     * keys derive a static `dpart` PartitionFilter), and the exact-Jaccard
     * verification reads the doc store through
     * [[graft.sources.DedupIndex.prunedDocs]] pruned to the CANDIDATES'
     * id partitions — per trigger the artifact contributes
-    * O(partitions touched), never O(corpus). Loan-patterned like the
-    * vector twin: the microbatch's shingle/signature frame and the
-    * candidate set are pinned only while `consume` runs.
+    * O(partitions touched), never O(corpus). The microbatch's
+    * shingle/signature frame ([[ProbeStream.loan]]) and the candidate set
+    * are pinned only while `consume` runs.
     *
     * `microbatch`: (docId, text, tsUs) rows. Output schema matches
-    * [[nearDupAgainstIndex]]: (doc_a, doc_b, jaccard, ts); within one
-    * trigger each pair emits once (the candidate set is distinct-folded
-    * across bands). CROSS-trigger re-emission of a pair — the job the
-    * lazy path's watermark dedup state did — is the sink's concern under
-    * foreachBatch's standard idempotent-by-batchId contract.
+    * [[nearDupAgainstCorpus]]: (doc_a, doc_b, jaccard, ts); within one
+    * trigger a pair emits once per arriving member (the candidate set is
+    * distinct-folded across bands), so twice when both members arrive in
+    * the same trigger.
     *
     * `indexDir` may be a flat published index OR a VERSIONED ROOT
     * ([[graft.sources.DedupIndex.publishVersionedFrom]]): a root
     * resolves through its `_current` pointer PER TRIGGER, so a
     * maintain/republish reaches the stream on its next microbatch — no
-    * restart, the freshness upgrade over the lazy join's load-once
-    * static side (the vector and fingerprint probes get the same
-    * behavior for free: their loaders resolve the pointer per call).
+    * restart (the vector and fingerprint probes get the same behavior
+    * for free: their loaders resolve the pointer per call).
     *
-    * BROADCAST GATE (the VectorIndex search convention): the microbatch
-    * frame, its band keys, and the candidate set are broadcast only at
-    * or below `broadcastRowLimit` — a backlog catch-up trigger (one
-    * huge first microbatch after downtime) falls through to the
-    * planner's shuffle joins over the full index instead of failing on
-    * Spark's broadcast limits or OOMing the driver. A caller that knows
-    * its batch bound passes `knownBatchRows` and the gate count is
-    * skipped. */
+    * Above `broadcastRowLimit` the band keys and candidates are not
+    * broadcast and the index is read in full (the [[ProbeStream.loan]]
+    * gate). */
   def probeIndexBatch[T](s: SparkSession, microbatch: DataFrame,
       indexDir: String,
       broadcastRowLimit: Long =
-        graft.sources.VectorIndex.QueryBatchBroadcastRowLimit,
-      knownBatchRows: Option[Long] = None)(consume: DataFrame => T): T = {
+        graft.sources.VectorIndex.QueryBatchBroadcastRowLimit)
+      (consume: DataFrame => T): T = {
     graft.functions.GraftFunctions.register(s)
     val DI = graft.sources.DedupIndex
     // a versioned root resolves ONCE per trigger (one pointer read, one
@@ -281,62 +268,43 @@ object NearDupStream {
       .map(v => s"$indexDir/$v").filter(DI.isPublished(s, _))
       .getOrElse(indexDir)
     val m = DI.loadMeta(s, dir)
-    val q = graft.Caching.persist(microbatch
-      .select(col("docId").as("q_id"), col("tsUs"),
-        graft.operators.TextRules.tokens(col("text")).as("toks"))
-      .select(col("q_id"), col("tsUs"), shingleHashes(col("toks")).as("q_hs"))
-      .filter(size(col("q_hs")) > 0)
-      .withColumn("q_n", size(col("q_hs")).cast("long")))
-    try {
-      val (small, hint) = graft.sources.VectorIndex.batchGate(
-        knownBatchRows, q.count(), broadcastRowLimit)
+    ProbeStream.loan(arrivals(microbatch), broadcastRowLimit) { (q, g) =>
       // sign at the artifact's recorded family — resolved per trigger
       // alongside the version pointer, so a precision-floor escalation
       // reaches the stream on its next microbatch like any republish
-      val fam = m.bandfam
       val inBands = q
-        .select(col("q_id"), posexplode(expr(sigExpr("q_hs", fam))))
+        .select(col("q_id"), posexplode(expr(sigExpr("q_hs", m.bandfam))))
         .select(col("q_id"), col("pos").as("band"), col("col").as("minhash"))
       // a corpus-scale batch touches every partition anyway: skip the
       // pruning derivations along with the broadcast hints
-      val index = (if (small)
+      val index = (if (g.small)
           DI.prunedBands(s, dir, m,
             inBands.select(col("band"), col("minhash").as("bv")))
         else DI.bandsOf(s, dir, m))
       // distinct collapses multi-band meetings BEFORE the verify join —
       // each surviving pair is Jaccard-scored exactly once
-      val cands = graft.Caching.persist(
-        index.join(hint(inBands), Seq("band", "minhash"))
+      ProbeStream.pinned(
+        index.join(g.hint(inBands), Seq("band", "minhash"))
           .filter(col("doc_id") =!= col("q_id"))
-          .select(col("q_id"), col("doc_id").as("c_id")).distinct())
-      try {
-        val corp = (if (small)
+          .select(col("q_id"), col("doc_id").as("c_id")).distinct()) { cands =>
+        val corp = (if (g.small)
             DI.prunedDocs(s, dir, m, cands.select(col("c_id")))
           else DI.loadDocs(s, dir))
           .select(col("doc_id").as("c_id"), col("hs").as("c_hs"),
             col("n").as("c_n"))
-        consume(corp
-          .join(hint(cands), Seq("c_id"))
-          .join(hint(q.select(col("q_id"), col("tsUs"), col("q_hs"),
-            col("q_n"))), Seq("q_id"))
-          .withColumn("inter",
-            size(array_intersect(col("q_hs"), col("c_hs"))).cast("long"))
-          .withColumn("jaccard", col("inter").cast("double") /
-            (col("q_n") + col("c_n") - col("inter")))
-          .filter(col("jaccard") >= 0.8)
-          .select(least(col("q_id"), col("c_id")).as("doc_a"),
-            greatest(col("q_id"), col("c_id")).as("doc_b"),
-            col("jaccard"), timestamp_micros(col("tsUs")).as("ts")))
-      } finally cands.unpersist()
-    } finally q.unpersist()
+        consume(verified(corp
+          .join(g.hint(cands), Seq("c_id"))
+          .join(g.hint(q.select(col("q_id"), col("tsUs"), col("q_hs"),
+            col("q_n"))), Seq("q_id"))))
+      }
+    }
   }
 
   /** The production streaming probe at corpus scale: a
     * `writeStream.foreachBatch` body routing every trigger through
     * [[probeIndexBatch]] — pruned band + doc scans, no per-trigger
-    * full-index read, no cache residue. Parity with the lazy
-    * [[nearDupAgainstIndex]] pair set is spec-pinned. */
+    * full-index read, no cache residue. */
   def foreachBatchProbe(s: SparkSession, indexDir: String)
       (sink: DataFrame => Unit): (DataFrame, Long) => Unit =
-    (microbatch, _) => probeIndexBatch(s, microbatch, indexDir)(sink)
+    ProbeStream.foreachBatch(sink)(probeIndexBatch(s, _, indexDir)(_))
 }

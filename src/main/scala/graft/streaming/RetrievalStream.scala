@@ -9,9 +9,8 @@ import graft.sources.LexIndex
   * top-k documents, so a serving/routing pipeline can rank against the
   * corpus as of the last index publish.
   *
-  * Shape (the sibling dedup streams' foreachBatch convention — their lazy
-  * stream-static joins are deprecated for exactly the full-scan-per-
-  * trigger hazard this entry avoids): the trigger's query rows COLLECT to
+  * Shape (the sibling dedup streams' foreachBatch convention, which
+  * avoids a full artifact scan per trigger): the trigger's query rows COLLECT to
   * the driver — a trigger's query set is human/router-generated and
   * budget-bounded by the retrieval family's contract, never corpus-sized
   * — and the driver-known term set is precisely what lets the probe

@@ -1,95 +1,40 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.operators.VideoOps
 
 /** Incremental (streaming) video dedup — the video leg of the multimodal
   * dedup-stream triple (image dHash / audio fingerprint / VIDEO): each
   * arriving MP4 payload is DEMUXED through the real container walk
   * (stco + stsz), fingerprinted over its per-sample byte sums, and
-  * probed against the published fingerprint index with an exact-equality
-  * stream-static join — stateless, append-safe.
+  * probed against the published fingerprint index by exact group
+  * equality — the [[AudioDedupStream]] group probe on another decoder.
   *
-  * Freshness contract (shared with every dedup twin): an arrival is
+  * Freshness contract (shared with every dedup probe): an arrival is
   * checked against the corpus as of the last index publish; two NEW
-  * duplicate videos wait for the next rebuild. Whole-corpus batch parity
-  * is pinned in VideoDedupStreamSpec.
+  * duplicate videos wait for the next rebuild. Parity with the
+  * codec-derived fingerprint groups is pinned in VideoDedupStreamSpec.
   */
 object VideoDedupStream {
 
-  /** Matches of a watermarked video stream (`doc_id`, binary MP4
-    * `payload`, event-time `ts`) against the published fingerprint index
-    * `fps` (schema: fp, n, rep). One row per (arrival, matched group).
-    *
-    * Kept for small/fixture corpora and the parity specs; at corpus
-    * scale the per-trigger cost is a FULL scan of the caller-held group
-    * table — route production streams through
-    * [[foreachBatchProbe]]/[[probeIndexBatch]] instead. */
-  @deprecated("lazy stream-static join re-scans the full group table per " +
-    "trigger; at corpus scale use foreachBatchProbe/probeIndexBatch " +
-    "(partition-pruned published-index probe)", "0.1.0")
-  def matchesAgainstIndex(s: SparkSession, stream: DataFrame,
-      fps: DataFrame, delay: String = "10 minutes"): DataFrame = {
-    import s.implicits._
-    val idx = fps.select(col("fp").as("cand_fp"), col("n"), col("rep"))
-    stream
-      .select(col("ts"), col("doc_id").as("in_id"), col("payload"))
-      .as[(java.sql.Timestamp, Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (ts, id, bytes) =>
-          val (fp, n) = VideoOps.fingerprint(VideoOps.demux(bytes))
-          (ts, id, fp, n)
-        }
-      }
-      .toDF("ts", "in_id", "fp", "n_samples")
-      .withWatermark("ts", delay)
-      .join(idx, col("fp") === col("cand_fp"))
-      .select(col("ts"), col("in_id"), col("fp"), col("n_samples"),
-        col("n").as("corpus_n"), col("rep").as("corpus_rep"))
-  }
-
   /** One microbatch's matches against a PUBLISHED
     * [[graft.sources.FingerprintIndex]] through the partition-pruned
-    * group scan — the [[AudioDedupStream.probeIndexBatch]] twin on the
-    * MP4 demux fingerprint. Loan-patterned; output schema matches
-    * [[matchesAgainstIndex]]. Broadcast gate semantics identical to the
-    * audio twin: the batch frame is broadcast (and the index pruned)
-    * only at or below `broadcastRowLimit`; a backlog catch-up trigger
-    * falls through to the shuffle join over the full index. */
+    * group scan. `microbatch`: (ts, doc_id, binary MP4 payload) rows.
+    * Output: one row per (arrival, matched group) — (ts, in_id, fp,
+    * n_samples, corpus_n, corpus_rep). Broadcast gate as in
+    * [[AudioDedupStream.groupProbe]]. */
   def probeIndexBatch[T](s: SparkSession, microbatch: DataFrame,
       indexDir: String,
       broadcastRowLimit: Long =
-        graft.sources.VectorIndex.QueryBatchBroadcastRowLimit,
-      knownBatchRows: Option[Long] = None)(consume: DataFrame => T): T = {
-    import s.implicits._
-    val fps = graft.Caching.persist(microbatch
-      .select(col("ts"), col("doc_id").as("in_id"), col("payload"))
-      .as[(java.sql.Timestamp, Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (ts, id, bytes) =>
-          val (fp, n) = VideoOps.fingerprint(VideoOps.demux(bytes))
-          (ts, id, fp, n)
-        }
-      }
-      .toDF("ts", "in_id", "fp", "n_samples"))
-    try {
-      val (small, hint) = graft.sources.VectorIndex.batchGate(
-        knownBatchRows, fps.count(), broadcastRowLimit)
-      val idx = (if (small)
-          graft.sources.FingerprintIndex.prunedGroups(s, indexDir,
-            fps.select("fp"))
-        else graft.sources.FingerprintIndex.loadGroups(s, indexDir))
-        .select(col("fp").as("cand_fp"), col("n"), col("rep"))
-      consume(idx.join(hint(fps), col("fp") === col("cand_fp"))
-        .select(col("ts"), col("in_id"), col("fp"), col("n_samples"),
-          col("n").as("corpus_n"), col("rep").as("corpus_rep")))
-    } finally fps.unpersist()
-  }
+        graft.sources.VectorIndex.QueryBatchBroadcastRowLimit)
+      (consume: DataFrame => T): T =
+    AudioDedupStream.groupProbe(s, microbatch, indexDir, "n_samples",
+      broadcastRowLimit)(bytes =>
+      VideoOps.fingerprint(VideoOps.demux(bytes)))(consume)
 
   /** `writeStream.foreachBatch` body routing every trigger through
-    * [[probeIndexBatch]] — parity with the lazy join is spec-pinned. */
+    * [[probeIndexBatch]]. */
   def foreachBatchProbe(s: SparkSession, indexDir: String)
       (sink: DataFrame => Unit): (DataFrame, Long) => Unit =
-    (microbatch, _) => probeIndexBatch(s, microbatch, indexDir)(sink)
+    ProbeStream.foreachBatch(sink)(probeIndexBatch(s, _, indexDir)(_))
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import graft.SparkEntry
 
@@ -12,14 +11,7 @@ import graft.SparkEntry
 object DumpPlans {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(4, "ERROR")
     val names = SparkEntry.queries.keys.toSeq.sorted
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of every registered query (sf0.001)\n\n")

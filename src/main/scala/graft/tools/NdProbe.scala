@@ -1,17 +1,10 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 object NdProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val q = if (args.length > 1) args(1) else "q_text_minhash"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32, "ERROR")
     val stages = scala.collection.mutable.ArrayBuffer[(Int, Long, String, Long, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {

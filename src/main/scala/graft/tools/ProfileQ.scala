@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Perf scratchpad: time one or more registered queries with repeats.
@@ -17,15 +16,7 @@ object ProfileQ {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(32)
     for (name <- names) {
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()

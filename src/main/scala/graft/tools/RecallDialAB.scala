@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** A/B instrument for the sampled-recall dial (r14 verdict #6): the
@@ -28,15 +27,7 @@ object RecallDialAB {
     val q = args(1).toInt
     val sampleN = args(2).toInt
     val reps = if (args.length > 3) args(3).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(32)
 
     val basePred = col("vec_id") < q
     def arm(sample: Option[Int]): Double = {

@@ -1,18 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the formatted physical plan of a registered query — local plan
   * review helper (the PLANS.md generator's interactive sibling). */
 object ShowPlan {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8, "ERROR")
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
     for (q <- args.drop(1)) {
       println(s"==== $q ====")

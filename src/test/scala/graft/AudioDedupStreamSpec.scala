@@ -33,62 +33,17 @@ class AudioDedupStreamSpec extends AnyFunSuite {
       (id, fpOf(id), nOf(fpOf(id)), repOf(fpOf(id)))).toSet
     assert(expected.exists(_._3 > 1), "fixture holds no dup groups - vacuous")
 
-    val idx = AudioOps.fingerprintIndex(spark, d)
-    val evs = docIds.map(id => AudioEv(id,
-      AudioOps.encodeWav(AudioOps.fpClipSamples(AudioOps.fpCid(id))),
-      new java.sql.Timestamp(1700000000000L + id)))
-    val source = MemoryStream[AudioEv]
-    val q = AudioDedupStream.matchesAgainstIndex(spark, source.toDF(), idx)
-      .writeStream.format("memory").queryName("audio_dedup")
-      .outputMode("append").start()
-    try {
-      evs.grouped(evs.length / 3 + 1).foreach { b =>
-        source.addData(b.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.sql(
-          "SELECT in_id, fp, corpus_n, corpus_rep FROM audio_dedup")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      assert(streamed.length == streamed.distinct.length,
-        "an arrival matched its group twice despite exact-equality join")
-      assert(streamed.toSet == expected,
-        s"missing: ${expected.diff(streamed.toSet).take(3)}; " +
-          s"extra: ${streamed.toSet.diff(expected).take(3)}")
-    } finally q.stop()
-  }
-
-  test("foreachBatch pruned probe over the published index equals the lazy join") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val d = TestSpark.sf0001
-    val docIds = spark.read.parquet(s"$d/documents.parquet")
-      .select("doc_id").collect().map(_.getLong(0))
-    val evs = docIds.map(id => AudioEv(id,
-      AudioOps.encodeWav(AudioOps.fpClipSamples(AudioOps.fpCid(id))),
-      new java.sql.Timestamp(1700000000000L + id)))
-    val idx = AudioOps.fingerprintIndex(spark, d)
+    // the production path: every trigger probes the PUBLISHED group
+    // index through the partition-pruned group scan
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fpidx-audio").toString
-    graft.sources.FingerprintIndex.publishGroups(spark, idx, dir)
+    graft.sources.FingerprintIndex.publishGroups(spark,
+      AudioOps.fingerprintIndex(spark, d), dir)
     assert(graft.sources.FingerprintIndex.isPublished(spark, dir))
-
-    def viaLazy: Set[(Long, Long, Long, Long)] = {
-      val source = MemoryStream[AudioEv]
-      val q = AudioDedupStream.matchesAgainstIndex(spark, source.toDF(), idx)
-        .writeStream.format("memory").queryName("audio_feb_lazy")
-        .outputMode("append").start()
-      try {
-        source.addData(evs.toIndexedSeq: _*)
-        q.processAllAvailable()
-        spark.sql("SELECT in_id, fp, corpus_n, corpus_rep FROM audio_feb_lazy")
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toSet
-      } finally q.stop()
-    }
-    val lazySet = viaLazy
-    val buf = scala.collection.mutable.Set[(Long, Long, Long, Long)]()
+    val evs = docIds.map(id => AudioEv(id,
+      AudioOps.encodeWav(AudioOps.fpClipSamples(AudioOps.fpCid(id))),
+      new java.sql.Timestamp(1700000000000L + id)))
+    val buf = scala.collection.mutable.ListBuffer[(Long, Long, Long, Long)]()
     val source = MemoryStream[AudioEv]
     val q = source.toDF().writeStream
       .foreachBatch(AudioDedupStream.foreachBatchProbe(spark, dir) { out =>
@@ -105,8 +60,41 @@ class AudioDedupStreamSpec extends AnyFunSuite {
         q.processAllAvailable()
       }
     } finally q.stop()
-    assert(buf.nonEmpty && buf.toSet == lazySet,
-      s"missing=${lazySet.diff(buf.toSet).take(3)} extra=${buf.toSet.diff(lazySet).take(3)}")
+    assert(buf.length == buf.distinct.length,
+      "an arrival matched its group twice despite exact-equality join")
+    assert(buf.toSet == expected,
+      s"missing: ${expected.diff(buf.toSet).take(3)}; " +
+        s"extra: ${buf.toSet.diff(expected).take(3)}")
+    spark.catalog.clearCache()
+  }
+
+  test("probe broadcast gate: limit 0 forces the shuffle path, result-identical") {
+    // the group probe audio and video share, above the broadcast gate
+    // (forced with limit 0), takes the shuffle join over the FULL group
+    // table and must produce the identical match set — the
+    // backlog-catch-up trigger safety the text and image probes pin too
+    import spark.implicits._
+    val d = TestSpark.sf0001
+    val docIds = spark.read.parquet(s"$d/documents.parquet")
+      .select("doc_id").collect().map(_.getLong(0))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-fpidx-audio-gate").toString
+    graft.sources.FingerprintIndex.publishGroups(spark,
+      AudioOps.fingerprintIndex(spark, d), dir)
+    val microbatch = docIds.map(id => AudioEv(id,
+      AudioOps.encodeWav(AudioOps.fpClipSamples(AudioOps.fpCid(id))),
+      new java.sql.Timestamp(1700000000000L + id))).toSeq.toDF()
+    def matchesWith(limit: Long): Set[(Long, Long, Long, Long, Long)] =
+      AudioDedupStream.probeIndexBatch(spark, microbatch, dir,
+        broadcastRowLimit = limit) { out =>
+        out.collect().map(r => (r.getAs[Long]("in_id"), r.getAs[Long]("fp"),
+          r.getAs[Long]("n_frames"), r.getAs[Long]("corpus_n"),
+          r.getAs[Long]("corpus_rep"))).toSet
+      }
+    val gated = matchesWith(graft.sources.VectorIndex.QueryBatchBroadcastRowLimit)
+    val shuffled = matchesWith(0L)
+    assert(gated.size == docIds.length && shuffled == gated,
+      s"shuffle-path matches differ: ${(gated -- shuffled).take(3)} / ${(shuffled -- gated).take(3)}")
     spark.catalog.clearCache()
   }
 }

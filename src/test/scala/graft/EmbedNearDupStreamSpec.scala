@@ -101,83 +101,44 @@ class EmbedNearDupStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streamed against a PUBLISHED VectorIndex artifact, matches equal the corpus-backed path") {
+  test("foreachBatch probe over a PUBLISHED VectorIndex equals the corpus-backed path, cache slots bounded") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
 
     // the production ingest shape: width/probes/cap and the bucket table
-    // all come from the loaded artifact, not from session-derived state
-    val d = TestSpark.sf0001
-    val all = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
-    val corpusEmb = all.filter(col("vec_id") % 2 === 0)
-    val n = all.count()
-    val width = VectorOps.lshWidthFor(n)
-    val cap = VectorOps.knnCapFor(n, width)
-    val dir = java.nio.file.Files.createTempDirectory("graft-vecidx-stream").toString
-    graft.sources.VectorIndex.publishFrom(spark, corpusEmb, dir, scheduleN = Some(n))
-
-    val incoming = all.filter(col("vec_id") % 2 === 1).collect().map { r =>
-      EmbedEv(r.getLong(0), r.getSeq[Float](1).toArray,
-        new java.sql.Timestamp(1700000000000L + r.getLong(0)))
-    }
-    def runStream(name: String, build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-        : Set[(Long, Long, Double)] = {
-      val source = MemoryStream[EmbedEv]
-      val q = build(source.toDF())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        source.addData(incoming.toIndexedSeq: _*)
-        q.processAllAvailable()
-        spark.sql(s"SELECT in_id, corpus_id, sim FROM $name")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      } finally q.stop()
-    }
-    val viaIndex = runStream("embed_idx_stream", st =>
-      EmbedNearDupStream.nearDupAgainstIndex(spark, st, dir, threshold = 0.45))
-    val viaCorpus = runStream("embed_corpus_stream", st =>
-      EmbedNearDupStream.nearDupAgainstCorpus(spark, st, corpusEmb, width,
-        VectorOps.LshProbes, cap, threshold = 0.45))
-    assert(viaIndex.nonEmpty && viaIndex == viaCorpus,
-      s"missing=${viaCorpus.diff(viaIndex).take(5)} extra=${viaIndex.diff(viaCorpus).take(5)}")
-  }
-
-  test("foreachBatch pruned probe equals the lazy index join, cache slots bounded") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-
-    // the corpus-scale production path: every trigger routes through the
-    // gated partition-pruned batch search (knownBatchRows, no full scan).
-    // Result parity with the lazy stream-static join over the same
-    // artifact, fed in several microbatches to exercise repeated triggers;
-    // the armed batch-frame registry must stay bounded (one slot), not
-    // grow one pinned frame per trigger (the r12 advice leak).
+    // all come from the loaded artifact, and every trigger routes through
+    // the gated partition-pruned batch search. Result parity with the
+    // in-query corpus join at the artifact's frozen geometry, fed in
+    // several microbatches to exercise repeated triggers; the armed
+    // batch-frame registry must stay bounded (one slot), not grow one
+    // pinned frame per trigger (the r12 advice leak).
     val d = TestSpark.sf0001
     val all = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
     val corpusEmb = all.filter(col("vec_id") % 2 === 0)
     val n = all.count()
     val dir = java.nio.file.Files
       .createTempDirectory("graft-vecidx-feb").toString
-    graft.sources.VectorIndex.publishFrom(spark, corpusEmb, dir,
+    val m = graft.sources.VectorIndex.publishFrom(spark, corpusEmb, dir,
       scheduleN = Some(n))
 
     val incoming = all.filter(col("vec_id") % 2 === 1).collect().map { r =>
       EmbedEv(r.getLong(0), r.getSeq[Float](1).toArray,
         new java.sql.Timestamp(1700000000000L + r.getLong(0)))
     }
-    val lazySource = MemoryStream[EmbedEv]
-    val lazyQ = EmbedNearDupStream.nearDupAgainstIndex(spark,
-        lazySource.toDF(), dir, threshold = 0.45)
-      .writeStream.format("memory").queryName("feb_lazy")
+    val corpusSource = MemoryStream[EmbedEv]
+    val corpusQ = EmbedNearDupStream.nearDupAgainstCorpus(spark,
+        corpusSource.toDF(), corpusEmb, m.width, m.probes, m.cap,
+        threshold = 0.45)
+      .writeStream.format("memory").queryName("feb_corpus")
       .outputMode("append").start()
-    val viaLazy = try {
-      lazySource.addData(incoming.toIndexedSeq: _*)
-      lazyQ.processAllAvailable()
-      spark.sql("SELECT in_id, corpus_id, sim FROM feb_lazy")
+    val viaCorpus = try {
+      corpusSource.addData(incoming.toIndexedSeq: _*)
+      corpusQ.processAllAvailable()
+      spark.sql("SELECT in_id, corpus_id, sim FROM feb_corpus")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    } finally lazyQ.stop()
+    } finally corpusQ.stop()
 
-    val buf = scala.collection.mutable.Set[(Long, Long, Double)]()
+    val buf = scala.collection.mutable.ListBuffer[(Long, Long, Double)]()
     val slotCounts = scala.collection.mutable.ListBuffer[Int]()
     val source = MemoryStream[EmbedEv]
     val q = source.toDF().writeStream
@@ -196,8 +157,11 @@ class EmbedNearDupStreamSpec extends AnyFunSuite {
         slotCounts += graft.sources.VectorIndex.armedSlotCount(spark)
       }
     } finally q.stop()
-    assert(buf.nonEmpty && buf.toSet == viaLazy,
-      s"missing=${viaLazy.diff(buf.toSet).take(5)} extra=${buf.toSet.diff(viaLazy).take(5)}")
+    assert(buf.nonEmpty && buf.toSet == viaCorpus,
+      s"missing=${viaCorpus.diff(buf.toSet).take(5)} extra=${buf.toSet.diff(viaCorpus).take(5)}")
+    // each arrival lands in one trigger and meets a corpus vector in at
+    // most one bucket
+    assert(buf.length == buf.distinct.length, "a match surfaced twice")
     // the armed batch-frame registry must not grow with trigger count:
     // every trigger reuses the ONE keyed slot (other suites may have
     // armed other dirs' slots in this shared session — growth, not the
@@ -208,7 +172,6 @@ class EmbedNearDupStreamSpec extends AnyFunSuite {
   }
 
   test("foreachBatch probe picks up a mergePublish on the NEXT trigger (no restart)") {
-    // the freshness upgrade over the lazy join's load-once static side:
     // the probe resolves the _current pointer per trigger (VectorIndex
     // loaders bind the version per call), so a merge landing BETWEEN
     // microbatches is visible to the very next one
@@ -257,7 +220,7 @@ class EmbedNearDupStreamSpec extends AnyFunSuite {
     // The production cycle the artifact documents (the NearDupStream text
     // twin's contract, on the vector side): corpus v1 is published, the
     // stream probes it; an incremental mergePublish lands v2 beside it
-    // and flips the pointer; the RESTARTED stream sees v2 — including
+    // and flips the pointer; the replayed probe sees v2 — including
     // matches against merged-in corpus members phase 1 could not see —
     // with geometry frozen so both phases equal the corpus-backed path
     // at the same schedule.
@@ -279,11 +242,17 @@ class EmbedNearDupStreamSpec extends AnyFunSuite {
       EmbedEv(r.getLong(0), r.getSeq[Float](1).toArray,
         new java.sql.Timestamp(1700000000000L + r.getLong(0)))
     }.toSeq
-    def runStream(name: String,
-        build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-        : Set[(Long, Long)] = {
+    val oddDf = odd.toDF()
+    def viaProbe: Set[(Long, Long)] =
+      EmbedNearDupStream.probeIndexBatch(spark, oddDf, dir, 0.30) { out =>
+        out.collect().map(r => (r.getAs[Long]("in_id"),
+          r.getAs[Long]("corpus_id"))).toSet
+      }
+    def corpusRef(corpus: org.apache.spark.sql.DataFrame,
+        name: String): Set[(Long, Long)] = {
       val source = MemoryStream[EmbedEv]
-      val q = build(source.toDF())
+      val q = EmbedNearDupStream.nearDupAgainstCorpus(spark, source.toDF(),
+          corpus, m.width, m.probes, m.cap, threshold = 0.30)
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
@@ -293,24 +262,17 @@ class EmbedNearDupStreamSpec extends AnyFunSuite {
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       } finally q.stop()
     }
-    def corpusRef(corpus: org.apache.spark.sql.DataFrame,
-        name: String): Set[(Long, Long)] =
-      runStream(name, st =>
-        EmbedNearDupStream.nearDupAgainstCorpus(spark, st, corpus,
-          m.width, m.probes, m.cap, threshold = 0.30))
 
     // phase 1: the full incoming replay against the v1 publish
-    val p1 = runStream("vecidx_refresh_p1", st =>
-      EmbedNearDupStream.nearDupAgainstIndex(spark, st, dir, 0.30))
+    val p1 = viaProbe
     assert(p1 == corpusRef(corpus1, "vecidx_refresh_p1c"),
       "phase 1 must probe exactly the v1 corpus")
 
-    // rebuild-and-replay: merge lands v2, the restarted stream replays
+    // rebuild-and-replay: merge lands v2, the next probe replays
     graft.sources.VectorIndex.mergePublish(spark, dir, batch2)
-    val p2 = runStream("vecidx_refresh_p2", st =>
-      EmbedNearDupStream.nearDupAgainstIndex(spark, st, dir, 0.30))
+    val p2 = viaProbe
     assert(p2 == corpusRef(evenAll, "vecidx_refresh_p2c"),
-      "restarted stream must probe the merged v2 corpus")
+      "the replay must probe the merged v2 corpus")
     // the refresh must be OBSERVABLE: frozen geometry keeps every v1
     // match (p2 superset) and some match hits a merged-in member
     assert(p1.subsetOf(p2), s"v1 matches lost across the merge: ${(p1 -- p2).take(5)}")

@@ -40,8 +40,13 @@ class GraphOpsSpec extends AnyFunSuite {
     import spark.implicits._
     // vertex 2's only out-edge has a null weight: the folded vertex
     // aggregation would give it a null out-weight, i.e. dangling
-    val edges = Seq((1L, 2L, Some(1.0)), (2L, 3L, None), (3L, 1L, Some(2.0)))
+    // an RDD-backed frame, not a local relation: the optimizer would fold
+    // the weight check over local rows while planning the first persist,
+    // and the error must surface at the first action instead
+    val edges = spark.sparkContext
+      .parallelize(Seq((1L, 2L, Some(1.0)), (2L, 3L, None), (3L, 1L, Some(2.0))))
       .toDF("src", "dst", "w")
+    spark.catalog.clearCache()
     val ex = intercept[Exception] {
       GraphOps.pageRank(spark, edges, iters = 2).collect()
     }
@@ -49,6 +54,10 @@ class GraphOpsSpec extends AnyFunSuite {
       .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toList
     assert(msgs.exists(_.contains("pageRank: null edge weight on edge 2 -> 3")),
       msgs.mkString("\n"))
+    // the failure at the first action must not leave the frames pinned
+    // before it in the CacheManager
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty, "pageRank left cached frames behind")
     spark.catalog.clearCache()
   }
 

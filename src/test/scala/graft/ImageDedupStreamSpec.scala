@@ -49,63 +49,16 @@ class ImageDedupStreamSpec extends AnyFunSuite {
     } yield (id, sigOf(id), cand, hm.toLong, sigTable(cand), repOf(cand))).toSet
     assert(expected.exists(_._4 > 0), "fixture holds no near matches - vacuous")
 
-    val sigs = MultiModalOps.imageSigs(spark, d)
-    val evs = docIds.map(id => ImgEv(id, MultiModalOps.encodePng(id),
-      new java.sql.Timestamp(1700000000000L + id)))
-    val source = MemoryStream[ImgEv]
-    val q = ImageDedupStream.matchesAgainstIndex(spark, source.toDF(), sigs)
-      .writeStream.format("memory").queryName("img_dedup")
-      .outputMode("append").start()
-    try {
-      evs.grouped(evs.length / 3 + 1).foreach { b =>
-        source.addData(b.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.sql(
-          "SELECT in_id, in_dhash, corpus_dhash, hamming, corpus_n, corpus_rep FROM img_dedup")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5)))
-      assert(streamed.length == streamed.distinct.length,
-        "a (doc, signature) match surfaced twice despite the pair dedup")
-      assert(streamed.toSet == expected,
-        s"missing: ${expected.diff(streamed.toSet).take(3)}; " +
-          s"extra: ${streamed.toSet.diff(expected).take(3)}")
-    } finally q.stop()
-  }
-
-  test("foreachBatch pruned probe over the published banded index equals the lazy join") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val d = TestSpark.sf0001
-    val docIds = spark.read.parquet(s"$d/documents.parquet")
-      .select("doc_id").collect().map(_.getLong(0))
-    val sigs = MultiModalOps.imageSigs(spark, d)
+    // the production path: every trigger probes the PUBLISHED banded
+    // index through the partition-pruned band scan
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fpidx-img").toString
-    graft.sources.FingerprintIndex.publishBandedSigs(spark, sigs, dir)
+    graft.sources.FingerprintIndex.publishBandedSigs(spark,
+      MultiModalOps.imageSigs(spark, d), dir)
     assert(graft.sources.FingerprintIndex.isPublished(spark, dir))
     val evs = docIds.map(id => ImgEv(id, MultiModalOps.encodePng(id),
       new java.sql.Timestamp(1700000000000L + id)))
-
-    type Row6 = (Long, Long, Long, Long, Long, Long)
-    def viaLazy: Set[Row6] = {
-      val source = MemoryStream[ImgEv]
-      val q = ImageDedupStream.matchesAgainstIndex(spark, source.toDF(), sigs)
-        .writeStream.format("memory").queryName("img_feb_lazy")
-        .outputMode("append").start()
-      try {
-        source.addData(evs.toIndexedSeq: _*)
-        q.processAllAvailable()
-        spark.sql("SELECT in_id, in_dhash, corpus_dhash, hamming, " +
-            "corpus_n, corpus_rep FROM img_feb_lazy")
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), r.getLong(5))).toSet
-      } finally q.stop()
-    }
-    val lazySet = viaLazy
-    val buf = scala.collection.mutable.Set[Row6]()
+    val buf = scala.collection.mutable.ListBuffer[(Long, Long, Long, Long, Long, Long)]()
     val source = MemoryStream[ImgEv]
     val q = source.toDF().writeStream
       .foreachBatch(ImageDedupStream.foreachBatchProbe(spark, dir) { out =>
@@ -123,8 +76,11 @@ class ImageDedupStreamSpec extends AnyFunSuite {
         q.processAllAvailable()
       }
     } finally q.stop()
-    assert(buf.nonEmpty && buf.toSet == lazySet,
-      s"missing=${lazySet.diff(buf.toSet).take(3)} extra=${buf.toSet.diff(lazySet).take(3)}")
+    assert(buf.length == buf.distinct.length,
+      "a (doc, signature) match surfaced twice despite the band fold")
+    assert(buf.toSet == expected,
+      s"missing: ${expected.diff(buf.toSet).take(3)}; " +
+        s"extra: ${buf.toSet.diff(expected).take(3)}")
     spark.catalog.clearCache()
   }
 

@@ -93,40 +93,6 @@ class NearDupStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("published index: publish → gate → stream against artifacts = batch pairs") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-index").toString
-    assert(!graft.sources.DedupIndex.isPublished(spark, dir))
-    val (nDocs, nBands) =
-      graft.sources.DedupIndex.publish(spark, TestSpark.sf0001, dir)
-    assert(graft.sources.DedupIndex.isPublished(spark, dir))
-    assert(nBands == nDocs * graft.functions.MinHashSig.DefaultBands)
-    // the stream joined against the PUBLISHED artifacts must reach the
-    // same verified pair set as the batch path — the republish cycle's
-    // correctness contract
-    val batchPairs = DedupOps.nearDupPairs(spark, TestSpark.sf0001)
-      .select("doc_a", "doc_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val docs = Tables.documents(spark, TestSpark.sf0001)
-      .select(col("doc_id").as("docId"), col("lang"), col("text"),
-        (col("doc_id") * 1000000L + 86400000000L).as("tsUs"))
-      .as[TimedDoc].collect()
-    val source = MemoryStream[TimedDoc]
-    val q = NearDupStream.nearDupAgainstIndex(spark, source.toDS(),
-        graft.sources.DedupIndex.loadBands(spark, dir),
-        graft.sources.DedupIndex.loadDocs(spark, dir))
-      .writeStream.format("memory").queryName("neardup_idx")
-      .outputMode("append").start()
-    try {
-      source.addData(docs.toIndexedSeq: _*)
-      q.processAllAvailable()
-      val streamed = spark.sql("SELECT doc_a, doc_b FROM neardup_idx")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(streamed == batchPairs)
-    } finally q.stop()
-  }
-
   test("foreachBatch pruned probe equals the batch pair set over the published index") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
@@ -137,7 +103,11 @@ class NearDupStreamSpec extends AnyFunSuite {
     // several microbatches must recover exactly the batch MinHash pair set
     val dir = java.nio.file.Files
       .createTempDirectory("graft-dedupidx-feb").toString
-    graft.sources.DedupIndex.publish(spark, TestSpark.sf0001, dir)
+    assert(!graft.sources.DedupIndex.isPublished(spark, dir))
+    val (nDocs, nBands) =
+      graft.sources.DedupIndex.publish(spark, TestSpark.sf0001, dir)
+    assert(graft.sources.DedupIndex.isPublished(spark, dir))
+    assert(nBands == nDocs * graft.functions.MinHashSig.DefaultBands)
     val batchPairs = DedupOps.nearDupPairs(spark, TestSpark.sf0001)
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -33,61 +33,17 @@ class VideoDedupStreamSpec extends AnyFunSuite {
       (id, fpOf(id), nOf(fpOf(id)), repOf(fpOf(id)))).toSet
     assert(expected.exists(_._3 > 1), "fixture holds no dup groups - vacuous")
 
-    val idx = VideoOps.fingerprintIndex(spark, d)
-    val evs = docIds.map(id => VideoEv(id,
-      VideoOps.encodeFpMp4(VideoOps.fpCid(id)),
-      new java.sql.Timestamp(1700000000000L + id)))
-    val source = MemoryStream[VideoEv]
-    val q = VideoDedupStream.matchesAgainstIndex(spark, source.toDF(), idx)
-      .writeStream.format("memory").queryName("video_dedup")
-      .outputMode("append").start()
-    try {
-      evs.grouped(evs.length / 3 + 1).foreach { b =>
-        source.addData(b.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      val streamed = spark.sql(
-          "SELECT in_id, fp, corpus_n, corpus_rep FROM video_dedup")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      assert(streamed.length == streamed.distinct.length,
-        "an arrival matched its group twice despite exact-equality join")
-      assert(streamed.toSet == expected,
-        s"missing: ${expected.diff(streamed.toSet).take(3)}; " +
-          s"extra: ${streamed.toSet.diff(expected).take(3)}")
-    } finally q.stop()
-  }
-
-  test("foreachBatch pruned probe over the published index equals the lazy join") {
-    import spark.implicits._
-    implicit val sql = spark.sqlContext
-    val d = TestSpark.sf0001
-    val docIds = spark.read.parquet(s"$d/documents.parquet")
-      .select("doc_id").collect().map(_.getLong(0))
-    val evs = docIds.map(id => VideoEv(id,
-      VideoOps.encodeFpMp4(VideoOps.fpCid(id)),
-      new java.sql.Timestamp(1700000000000L + id)))
-    val idx = VideoOps.fingerprintIndex(spark, d)
+    // the production path: every trigger probes the PUBLISHED group
+    // index through the partition-pruned group scan
     val dir = java.nio.file.Files
       .createTempDirectory("graft-fpidx-video").toString
-    graft.sources.FingerprintIndex.publishGroups(spark, idx, dir)
-
-    def viaLazy: Set[(Long, Long, Long, Long)] = {
-      val source = MemoryStream[VideoEv]
-      val q = VideoDedupStream.matchesAgainstIndex(spark, source.toDF(), idx)
-        .writeStream.format("memory").queryName("video_feb_lazy")
-        .outputMode("append").start()
-      try {
-        source.addData(evs.toIndexedSeq: _*)
-        q.processAllAvailable()
-        spark.sql("SELECT in_id, fp, corpus_n, corpus_rep FROM video_feb_lazy")
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toSet
-      } finally q.stop()
-    }
-    val lazySet = viaLazy
-    val buf = scala.collection.mutable.Set[(Long, Long, Long, Long)]()
+    graft.sources.FingerprintIndex.publishGroups(spark,
+      VideoOps.fingerprintIndex(spark, d), dir)
+    assert(graft.sources.FingerprintIndex.isPublished(spark, dir))
+    val evs = docIds.map(id => VideoEv(id,
+      VideoOps.encodeFpMp4(VideoOps.fpCid(id)),
+      new java.sql.Timestamp(1700000000000L + id)))
+    val buf = scala.collection.mutable.ListBuffer[(Long, Long, Long, Long)]()
     val source = MemoryStream[VideoEv]
     val q = source.toDF().writeStream
       .foreachBatch(VideoDedupStream.foreachBatchProbe(spark, dir) { out =>
@@ -104,8 +60,11 @@ class VideoDedupStreamSpec extends AnyFunSuite {
         q.processAllAvailable()
       }
     } finally q.stop()
-    assert(buf.nonEmpty && buf.toSet == lazySet,
-      s"missing=${lazySet.diff(buf.toSet).take(3)} extra=${buf.toSet.diff(lazySet).take(3)}")
+    assert(buf.length == buf.distinct.length,
+      "an arrival matched its group twice despite exact-equality join")
+    assert(buf.toSet == expected,
+      s"missing: ${expected.diff(buf.toSet).take(3)}; " +
+        s"extra: ${buf.toSet.diff(expected).take(3)}")
     spark.catalog.clearCache()
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.DedupOps
 
 /** Scratch measurement harness (test scope, not shipped): empirically pins
@@ -34,11 +33,7 @@ object SimhashExplore {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8, "ERROR")
     val nSeeds = 8 // 512 signature bits available for analysis
 
     for (sf <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
