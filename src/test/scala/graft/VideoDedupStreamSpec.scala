@@ -67,4 +67,34 @@ class VideoDedupStreamSpec extends AnyFunSuite {
         s"extra: ${buf.toSet.diff(expected).take(3)}")
     spark.catalog.clearCache()
   }
+
+  test("probe broadcast gate: limit 0 forces the shuffle path, result-identical") {
+    // the shared group probe on the video decoder: above the broadcast
+    // gate (forced with limit 0) it takes the shuffle join over the FULL
+    // group table and must produce the identical match set, under the
+    // video schema's n_samples column
+    import spark.implicits._
+    val d = TestSpark.sf0001
+    val docIds = spark.read.parquet(s"$d/documents.parquet")
+      .select("doc_id").collect().map(_.getLong(0))
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-fpidx-video-gate").toString
+    graft.sources.FingerprintIndex.publishGroups(spark,
+      VideoOps.fingerprintIndex(spark, d), dir)
+    val microbatch = docIds.map(id => VideoEv(id,
+      VideoOps.encodeFpMp4(VideoOps.fpCid(id)),
+      new java.sql.Timestamp(1700000000000L + id))).toSeq.toDF()
+    def matchesWith(limit: Long): Set[(Long, Long, Long, Long, Long)] =
+      VideoDedupStream.probeIndexBatch(spark, microbatch, dir,
+        broadcastRowLimit = limit) { out =>
+        out.collect().map(r => (r.getAs[Long]("in_id"), r.getAs[Long]("fp"),
+          r.getAs[Long]("n_samples"), r.getAs[Long]("corpus_n"),
+          r.getAs[Long]("corpus_rep"))).toSet
+      }
+    val gated = matchesWith(graft.sources.VectorIndex.QueryBatchBroadcastRowLimit)
+    val shuffled = matchesWith(0L)
+    assert(gated.size == docIds.length && shuffled == gated,
+      s"shuffle-path matches differ: ${(gated -- shuffled).take(3)} / ${(shuffled -- gated).take(3)}")
+    spark.catalog.clearCache()
+  }
 }
